@@ -28,9 +28,6 @@ object SparkEntry {
        |        i -> CAST(ascii(substr(tok, CAST(i AS INT), 1)) AS BIGINT))),
        |      (a, c) -> (a * $b + c) % $m)""".stripMargin
 
-  /** DuckDB mirror of DedupOps.simHashSignatures as a CTE chain ending in
-    * `sig(doc_id, s)` — shared by dd4 (pairs) and dd7 (clusters).
-    */
   /** ds1's CTE chain (quality rules → reject index → (source, md5) pre-agg →
     * per-source rollup), shared by the ds1 and ds3 oracle queries.
     */
@@ -80,6 +77,9 @@ object SparkEntry {
       |    CAST(sum(CASE WHEN ri = 6 THEN c ELSE 0 END) AS BIGINT) AS n_repetitive
       |  FROM g1 GROUP BY 1)""".stripMargin
 
+  /** DuckDB mirror of DedupOps.simHashSignatures as a CTE chain ending in
+    * `sig(doc_id, s)` — shared by dd4 (pairs) and dd7 (clusters).
+    */
   private def duckSimHashCtes: String =
     s"""toks AS (
        |  SELECT doc_id, tok FROM (
@@ -245,7 +245,7 @@ object SparkEntry {
     // (gaps-and-islands over duplicated gram positions), content-md5-checked
     "dd8_dup_spans" -> (DedupOps.dupSpans _),
     // connected-component duplicate clusters over the dd4 pair graph:
-    // min-label propagation + pointer jumping, O(log chain) rounds
+    // per-partition union-find, label propagation only over what it leaves
     "dd7_dup_clusters" -> (DedupOps.dupClusters _),
     // similarity search
     "sim1_cosine_topk" -> (SimilarityOps.cosineTopK _),

@@ -32,6 +32,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    array_distinct(transform(.., j => array_min(slice(hs, j, w)))) over
   *    hs = transform(.., i => Horner fold of k code points mod m), with
   *    array_distinct's first-occurrence order preserved.
+  *  - [[SimHashSig]] == the per-doc SimHash aggregate: explode of
+  *    split(trim(text), "\\s+") minus empty tokens, two [[PolyHash]] folds
+  *    per token, then one sum(when(parity, 1).otherwise(-1)) per bit and
+  *    bit i set iff its sum is > 0.
   */
 object TextHash {
   private val Hex = "0123456789abcdef".toCharArray
@@ -55,6 +59,63 @@ object TextHash {
       i += Character.charCount(cp)
     }
     acc
+  }
+
+  /** Java regex `\s` without UNICODE_CHARACTER_CLASS: [ \t\n\x0B\f\r]. */
+  private def isRegexSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** `bits`-wide SimHash of `s`, or -1 when `s` has no token. Tokens are the
+    * maximal runs of non-`\s` characters, i.e. exactly the non-empty
+    * elements of split(trim(s), "\\s+") (trim strips only spaces, which are
+    * separators here anyway). Each token folds its code points into
+    * h1 = [[polyHash]](b1, m1) and h2 = polyHash(b2, m2) in the same walk and
+    * votes +1 on bit i when ((h1*(i+1) + h2) mod m1) is odd, -1 otherwise;
+    * bit i is set when its vote sum is positive. The vote operand is stepped
+    * by h1 mod m1 per bit, which equals the closed form because every
+    * operand is non-negative and below m1 (h2 < m2 <= m1).
+    */
+  def simHash(s: UTF8String, bits: Int, b1: Long, m1: Long, b2: Long, m2: Long): Long = {
+    val str = s.toString
+    val votes = new Array[Int](bits)
+    var h1 = 0L
+    var h2 = 0L
+    var inTok = false
+    var any = false
+    def vote(): Unit = {
+      var x = (h1 + h2) % m1
+      var i = 0
+      while (i < bits) {
+        votes(i) += (if ((x & 1L) == 1L) 1 else -1)
+        x += h1
+        if (x >= m1) x -= m1
+        i += 1
+      }
+    }
+    var i = 0
+    val n = str.length
+    while (i < n) {
+      val c = str.charAt(i)
+      if (isRegexSpace(c)) {
+        if (inTok) { vote(); h1 = 0L; h2 = 0L; inTok = false; any = true }
+        i += 1
+      } else {
+        val cp = str.codePointAt(i)
+        h1 = (h1 * b1 + cp) % m1
+        h2 = (h2 * b2 + cp) % m2
+        inTok = true
+        i += Character.charCount(cp)
+      }
+    }
+    if (inTok) { vote(); any = true }
+    if (!any) return -1L
+    var sig = 0L
+    i = 0
+    while (i < bits) {
+      if (votes(i) > 0) sig |= 1L << i
+      i += 1
+    }
+    sig
   }
 
   /** md5 hex (lowercase — DigestUtils.md5Hex parity) of every k-token
@@ -398,6 +459,37 @@ case class Winnow(child: Expression, k: Int, w: Int, b: Long, m: Long) extends U
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.expr.TextHash$$.MODULE$$.winnow($c, $k, $w, ${b}L, ${m}L)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** See [[TextHash.simHash]]: the doc's SimHash signature, null when the text
+  * is null or has no token (the rows the replaced explode + groupBy never
+  * produced).
+  */
+case class SimHashSig(child: Expression, bits: Int, b1: Long, m1: Long, b2: Long, m2: Long)
+    extends UnaryExpression {
+  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"graft_simhash expects a string arg, got $t")
+  }
+
+  override def dataType: DataType = LongType
+  override def prettyName: String = "graft_simhash"
+
+  override def nullSafeEval(input: Any): Any = {
+    val sig = TextHash.simHash(input.asInstanceOf[UTF8String], bits, b1, m1, b2, m2)
+    if (sig < 0) null else sig
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.expr.TextHash$$.MODULE$$.simHash($c, $bits, ${b1}L, ${m1}L, ${b2}L, ${m2}L);
+         |${ev.isNull} = ${ev.value} < 0L;""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

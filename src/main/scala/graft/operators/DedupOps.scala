@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection at training-data-pipeline scale.
@@ -57,8 +58,8 @@ object DedupOps {
     * acc*b + c < 2^63). Native codegen expression (graft.expr.PolyHash):
     * the former `aggregate(sequence(1, length(s)), ...)` HOF evaluated an
     * interpreted expression tree per CHARACTER and allocated a boxed
-    * position array per token — the dominant CPU in the simhash family
-    * (dd4/dd7/pipe3 hash every token twice). Value-identical by the
+    * position array per token (the SimHash signatures now fold the same
+    * hashes inside graft.expr.SimHashSig). Value-identical by the
     * code-point walk (TextHash scaladoc; NativeTextHashSpec asserts parity
     * against the HOF tree, zh/CJK included).
     */
@@ -168,26 +169,27 @@ object DedupOps {
   /** 60-bit SimHash per doc from portable whitespace-token hashes: bit i's
     * vote for a token is parity of (h1*(i+1) + h2) mod M1 — a cheap
     * two-hash family both engines compute with plain integer arithmetic.
-    * Empty tokens are excluded (empty text yields no signature).
+    * Tokens are the non-empty elements of split(trim(text), "\\s+"); docs
+    * without one (null, empty or whitespace-only text) get no signature.
+    *
+    * One native pass per doc (graft.expr.SimHashSig), a pure map after the
+    * spread — the minHashPairs pattern: no per-token rows, no aggregate, no
+    * exchange beyond the spread. NativeTextHashSpec pins it to the explode +
+    * 60 sum(when(..)) aggregate the DuckDB oracle mirrors. The signature is
+    * per ROW, which equals that per-doc_id aggregate because `doc_id` is the
+    * documents key.
     */
   def simHashSignatures(d: DataFrame): DataFrame = {
-    // spread the RAW text rows: the per-token polynomial hashing below is
-    // the CPU-dense stage (two Horner folds per token), and a single-split
-    // scan would serialize it (the Par rule — no-op at production splits)
-    val toks = Par.spread(d.select(col("doc_id"), col("text")))
-      .select(col("doc_id"),
-        explode(split(trim(col("text")), "\\s+")).as("tok"))
-      .where(col("tok") =!= "")
-      .select(col("doc_id"),
-        polyHash(col("tok"), HashB1, HashM1).as("h1"),
-        polyHash(col("tok"), HashB2, HashM2).as("h2"))
-    val bitSums: Seq[Column] = (0 until SimBits).map { i =>
-      sum(when(((col("h1") * (i + 1) + col("h2")) % HashM1) % 2 === 1, 1).otherwise(-1)).as(s"b$i")
-    }
-    toks.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        (0 until SimBits).map(i => when(col(s"b$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L)))
-          .reduce(_.bitwiseOR(_)).as("simhash"))
+    // `\S` matches exactly the texts with a token, so the signature below is
+    // never null; AssertNotNull states that in the schema (a non-null
+    // `simhash`, and so dd4's non-null `hamming`, as the former aggregate
+    // declared). The filter runs on the scan side of the spread: a filter on
+    // the signature itself would be pushed below the spread's exchange and
+    // hash every doc twice, once on the single scan task.
+    val sig = bridged(org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
+      graft.expr.SimHashSig(expr0(col("text")), SimBits, HashB1, HashM1, HashB2, HashM2)))
+    Par.spread(d.where(col("text").rlike("\\S")).select(col("doc_id"), col("text")))
+      .select(col("doc_id"), sig.as("simhash"))
   }
 
   /** The 16 compound band keys for one signature column: for each primary
@@ -225,9 +227,9 @@ object DedupOps {
     // materialize the (doc_id, simhash) frame ONCE: the band self-join's
     // broadcast build side cannot reuse the probe side's exchange (it is a
     // BroadcastExchange over an identical subtree, not a shuffle), so the
-    // whole tokenize + polyhash + 60-bitsum pipeline ran TWICE per query
-    // before (verified in the dd4 physical plan: two full Scan->Generate->
-    // HashAggregate chains). The checkpoint is one signature row per doc.
+    // whole scan + spread + signature pipeline would run TWICE per query
+    // (verified in the dd4 physical plan). The checkpoint is one signature
+    // row per doc.
     val sig = simHashSignatures(d).localCheckpoint()
     val chunks = sig.select(col("doc_id"), col("simhash"),
       explode(array(simHashKeys(col("simhash")): _*)).as("k"))
@@ -240,7 +242,7 @@ object DedupOps {
       .where(col("hamming") <= MaxHamming)
   }
 
-  /** Iteration cap for connected-component label propagation (each round is
+  /** Iteration cap for the residual label-propagation rounds (each round is
     * neighbor-min + pointer-jump, so label depth halves per round: 25 rounds
     * cover any component whose min-label tree is < 2^25 deep — far beyond any
     * real dup cluster).
@@ -263,35 +265,103 @@ object DedupOps {
     clustersFromPairs(d.select(col("doc_id")),
       simHashPairsUnsorted(d).select("doc_a", "doc_b"))
 
-  /** Connected components over an undirected pair list via iterative
+  /** The repo's one connected-components routine (dd7, pipe3, sim5): every
+    * `nodes` row gets `(doc_id, cluster_id, cluster_size, is_keeper)`, where
+    * cluster_id is the min doc_id of its component in the undirected graph
+    * of `pairs(doc_a, doc_b)` and the keeper is that min member; nodes no
+    * pair touches are singletons. Any other `nodes` columns ride along after
+    * those four. Rows are ordered by doc_id. Components come from
+    * [[componentLabels]].
+    */
+  def clustersFromPairs(nodes: DataFrame, pairs: DataFrame): DataFrame = {
+    // clustered sizes come from the SMALL labels table (one window over
+    // lbl); untouched nodes are singletons by construction (size 1, own
+    // label) — the full node frame is scanned once and joined once
+    val labels = componentLabels(pairs)._1
+      .withColumn("size", count(lit(1)).over(Window.partitionBy("lbl")))
+    val rest = nodes.columns.filter(_ != "doc_id").toSeq.map(col)
+    val cluster = coalesce(col("lbl"), col("doc_id"))
+    nodes.join(labels, Seq("doc_id"), "left")
+      .select(Seq(col("doc_id"), cluster.as("cluster_id"),
+        coalesce(col("size"), lit(1L)).as("cluster_size"),
+        (col("doc_id") === cluster).cast("int").as("is_keeper")) ++ rest: _*)
+      .orderBy("doc_id")
+  }
+
+  /** `(doc_id, lbl)` for every pair-touched vertex, lbl = min doc_id of its
+    * component, plus the number of propagation rounds that ran. Local
+    * contraction first (Kiveris et al., SoCC'14), label propagation only
+    * for what it leaves:
+    *  1. each pair partition runs an in-memory min-rooted union-find and
+    *     emits (vertex, local root);
+    *  2. one doc_id group takes each vertex's minimum local root; a vertex
+    *     seen in more than one partition under different roots keeps those
+    *     roots, and a LongAccumulator fused into the group's single
+    *     `localCheckpoint` counts such vertices;
+    *  3. only when that count is non-zero, [[propagate]] runs over the
+    *     residual root-to-root edges (lbl(v), root) — near-clique dup
+    *     graphs, and pairs pre-partitioned by component (sim5's cells),
+    *     leave none, so no round runs;
+    *  4. each vertex's label is its min root's residual label.
+    * The fixpoint is unchanged: a local root is the min of a connected
+    * vertex set, so the min root over a component is its min vertex.
+    * Accumulator updates in transformations can only OVER-count (task
+    * retry), and after a successful materialization every row was evaluated
+    * at least once, so `count == 0 <=> no residual edge` — exact for the >0
+    * predicate used here. Per-task state is O(vertices of one pair
+    * partition).
+    */
+  private[operators] def componentLabels(pairs: DataFrame): (DataFrame, Int) = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val local = pairs.select(col("doc_a"), col("doc_b")).as[(Long, Long)]
+      .mapPartitions { it =>
+        val uf = new MinUnionFind
+        it.foreach { case (u, v) => uf.union(u, v) }
+        uf.roots
+      }
+      .toDF("doc_id", "root")
+    val acc = spark.sparkContext.longAccumulator("graft_cc_residual")
+    val multi = udf { (n: Int) => if (n > 1) acc.add(1L); n > 1 }
+    val contracted = local.groupBy("doc_id").agg(collect_set(col("root")).as("roots"))
+      .select(col("doc_id"), array_min(col("roots")).as("lbl"),
+        when(multi(size(col("roots"))), col("roots")).as("roots"))
+      .localCheckpoint()
+    if (acc.value == 0) return (contracted.select("doc_id", "lbl"), 0)
+    val residual = contracted.where(col("roots").isNotNull)
+      .select(col("lbl").as("doc_a"), explode(col("roots")).as("doc_b"))
+      .where(col("doc_a") =!= col("doc_b"))
+    val (rootLabels, rounds) = propagate(residual)
+    val labels = contracted
+      .join(rootLabels.select(col("doc_id").as("lbl"), col("lbl").as("top")), Seq("lbl"), "left")
+      .select(col("doc_id"), coalesce(col("top"), col("lbl")).as("lbl"))
+    (labels, rounds)
+  }
+
+  /** Connected components of the (small) residual pair graph via iterative
     * min-label propagation with pointer jumping, fused per round:
     *   lbl'(v) <- min(lbl(v), min over neighbors u of lbl(u), lbl(lbl(v)))
     * The jump term halves the depth of every label-reference chain, so
     * convergence is O(log(longest chain)) rounds rather than O(graph
     * diameter) — the same doubling idea as large-star/small-star (Kiveris et
-    * al., SoCC'14), kept in label space where each round is one edge join +
-    * one label-space join feeding a single union'd min-aggregate. Per round
-    * the labels table is `localCheckpoint`ed EXACTLY ONCE: it materializes
-    * the iterate, carries the fused convergence flag, and TRUNCATES lineage,
-    * so the plan Catalyst optimizes stays one-round-sized instead of growing
-    * with the loop (on a real cluster a reliable `checkpoint` dir makes the
-    * iterate survive executor loss). Dedup-pair graphs are near-cliques, so
-    * in practice 2-3 rounds converge.
+    * al., SoCC'14), kept in label space where each round is one join feeding
+    * a single union'd min-aggregate. Per round the labels table is
+    * `localCheckpoint`ed EXACTLY ONCE: it materializes the iterate, carries
+    * the fused convergence flag, and TRUNCATES lineage, so the plan Catalyst
+    * optimizes stays one-round-sized instead of growing with the loop (on a
+    * real cluster a reliable `checkpoint` dir makes the iterate survive
+    * executor loss). Returns `(doc_id, lbl)` over the edge-touched vertices
+    * and the number of rounds.
     */
-  def clustersFromPairs(nodes: DataFrame, pairs: DataFrame): DataFrame = {
+  private def propagate(pairs: DataFrame): (DataFrame, Int) = {
+    // `pairs` is a narrow projection of the checkpointed contraction, so the
+    // per-round re-reads of `edges` are cheap and need no materialization
     val edges = pairs
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .localCheckpoint()
-    // iterate ONLY over edge-touched nodes: in a real corpus dup-involved
-    // docs are a small fraction of 10^9+, so the loop's working set is the
-    // dup subgraph, not the corpus; singletons re-join once at the end.
-    //
     // ROUND 1 is a closed form, fused into the first materialization: with
     // lbl0(v) = v, the round's three candidate sources collapse to
-    // min(v, min over neighbors u of u), i.e. ONE edge aggregate — the
-    // former shape materialized an identity labels frame (a checkpoint job)
-    // and then ran the full two-join round against it.
+    // min(v, min over neighbors u of u), i.e. ONE edge aggregate
     var labels = edges
       .groupBy(col("v").as("doc_id")).agg(min(col("u")).as("nbr"))
       .select(col("doc_id"), least(col("doc_id"), col("nbr")).as("lbl"))
@@ -299,36 +369,22 @@ object DedupOps {
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < MaxCcIters) {
-      // BOTH propagation steps fold into ONE union'd min-aggregate per round:
       // candidates for v's new label are (a) v's own label, (b) each
-      // neighbor's label, and (c) the pointer jump lbl(lbl(v)) — taken
+      // neighbor's label, and (c) the pointer jump lbl(lbl(v)) — all taken
       // against the PREVIOUS round's materialized labels, which preserves the
-      // fixpoint (neighbor-min alone guarantees it) and the log-depth
-      // acceleration (reach still doubles per round: f(r) = 2·f(r-1)), while
-      // letting the round materialize exactly once. The former shape computed
-      // a `stepped` frame and self-joined it — the un-checkpointed branch
-      // re-ran the edge join + aggregate a second time every round.
-      // the pointer jump lbl(lbl(v)) is the SAME u-keyed lookup as the
+      // fixpoint and the log-depth acceleration while letting the round
+      // materialize exactly once. The jump is the SAME u-keyed lookup as the
       // neighbor propagation — jump "edges" are (u = lbl(v), v) — so both
-      // steps ride ONE join against the label map instead of two (each join
-      // is its own AQE exchange/broadcast materialization, and this loop's
-      // wall at probe scale is job dispatch, not data)
+      // ride ONE join against the label map.
       val viaEdges = edges
         .unionByName(labels.select(col("lbl").as("u"), col("doc_id").as("v")))
         .join(labels.select(col("doc_id").as("u"), col("lbl").as("cand")), "u")
         .select(col("v").as("doc_id"), col("cand"), lit(null).cast("long").as("old"))
-      // convergence detection is FUSED into the localCheckpoint
-      // materialization: a side-effecting flag UDF feeds a LongAccumulator
-      // while the iterate's rows are computed, replacing the former
-      // equality-join + count() (a second job with a shuffle) per round.
-      // Accumulator updates in transformations can only OVER-count (task
-      // retry), and after a successful materialization every row was
-      // evaluated at least once, so `acc == 0  <=>  no label changed` — exact
-      // for the >0 predicate this loop needs. The previous round's label
-      // rides the self branch's `old` column through the aggregate (min over
-      // the single non-null tag), so no per-round join back to `labels` is
-      // needed to compute the flag.
-      val acc = nodes.sparkSession.sparkContext.longAccumulator(s"graft_cc_changed_$iter")
+      // convergence is counted the [[componentLabels]] way: a flag UDF feeds
+      // an accumulator during the checkpoint, and the previous label rides
+      // the self branch's `old` column through the aggregate, so no join back
+      // to `labels` is needed
+      val acc = pairs.sparkSession.sparkContext.longAccumulator(s"graft_cc_changed_$iter")
       val flag = udf { (c: Boolean) => if (c) acc.add(1L); c }
       val next = labels.select(col("doc_id"), col("lbl").as("cand"), col("lbl").as("old"))
         .unionByName(viaEdges)
@@ -340,17 +396,7 @@ object DedupOps {
       iter += 1
     }
     require(changed == 0, s"label propagation did not converge in $MaxCcIters rounds")
-    // clustered sizes come from the SMALL labels table; untouched nodes are
-    // singletons by construction (size 1, own label) — the full corpus is
-    // scanned once and joined against two broadcastable sides
-    val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
-    nodes.join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
-      .join(sizes, Seq("lbl"), "left")
-      .select(col("doc_id"), col("lbl").as("cluster_id"),
-        coalesce(col("cluster_size"), lit(1L)).as("cluster_size"),
-        (col("doc_id") === col("lbl")).cast("int").as("is_keeper"))
-      .orderBy("doc_id")
+    (labels, iter)
   }
 
   /** pipe3: canonical-representative selection per near-dup cluster — the
@@ -574,4 +620,29 @@ object DedupOps {
         md5(array_join(col("kept"), " ")).as("cleaned_md5"))
       .orderBy("doc_id")
   }
+}
+
+/** Union-find over long ids whose root is always the set's minimum, with
+  * path compression — the per-partition contraction step of
+  * [[DedupOps.componentLabels]] and the grouping of sim5's single-threaded
+  * oracle (SimilarityOps.semDedupOracleRows).
+  */
+private[operators] final class MinUnionFind {
+  private val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+
+  def find(x: Long): Long = {
+    var r = parent.getOrElseUpdate(x, x)
+    while (parent(r) != r) r = parent(r)
+    var c = x
+    while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+    r
+  }
+
+  def union(x: Long, y: Long): Unit = {
+    val (rx, ry) = (find(x), find(y))
+    if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
+  }
+
+  /** (vertex, root) for every vertex seen so far. */
+  def roots: Iterator[(Long, Long)] = parent.keys.toSeq.iterator.map(v => (v, find(v)))
 }

@@ -457,9 +457,8 @@ object MultimodalOps {
   /** mm4: ingestion over a payload mix that INCLUDES corrupt byte streams
     * (GenData.mixedPayload — truncation, lied magic, bit-rot, decode-bomb
     * headers). Bad records are quarantined per-row with a deterministic
-    * error class and counted in a `LongAccumulator` (the per-partition
-    * metrics surface a cluster UI/StreamingQueryListener reads); good rows
-    * carry the same pixel-hash value check as mm2. The whole mix — who is
+    * error class (the `status`/`err_kind` columns); good rows carry the
+    * same pixel-hash value check as mm2. The whole mix — who is
     * quarantined, with which class, and every surviving pixel hash — is
     * value-checked against a sequential driver-side oracle.
     */
@@ -474,14 +473,9 @@ object MultimodalOps {
         .map(ref => quarantineMeta(MediaRow(ref, GenData.mixedPayload(GenData.DefaultSeed, ref))))
       spark.createDataFrame(seq).write.mode("overwrite").parquet(side)
     }
-    val quarantined = spark.sparkContext.longAccumulator("graft.mm4.quarantined")
     Par.rangeSpread(refs.toDF(), $"media_ref")
       .as[String].map(ref => MediaRow(ref, GenData.mixedPayload(GenData.DefaultSeed, ref)))
-      .mapPartitions(_.grouped(graft.schema.Params.BatchSize).flatMap(_.map { r =>
-        val row = quarantineMeta(r)
-        if (row.status != "ok") quarantined.add(1L)
-        row
-      }))
+      .mapPartitions(_.grouped(graft.schema.Params.BatchSize).flatMap(_.map(quarantineMeta)))
       .toDF()
       .sortWithinPartitions("media_ref")
   }

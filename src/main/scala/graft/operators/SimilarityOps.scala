@@ -544,8 +544,8 @@ object SimilarityOps {
     *
     * Scale shape: the cells bound the candidate set exactly like the IVF
     * index (NCells ~ sqrt(N) keeps per-cell pair lists O(N)); groups come
-    * from the dd7 label-propagation machinery over the within-cell pair
-    * graph; the keeper argmin is one `min(struct(ccos, vec_id))`
+    * from the shared CC helper (DedupOps.clustersFromPairs, dd7's) over the
+    * within-cell pair graph; the keeper argmin is one `min(struct(ccos, vec_id))`
     * HashAggregate. Everything is bit-deterministic (fixed-summation-tree
     * k-means + left-to-right dot products), so the single-threaded oracle
     * side table reproduces the distributed output exactly — an approximate
@@ -575,12 +575,12 @@ object SimilarityOps {
     val centDf = cents.zipWithIndex.map { case (c, k) => (k, c) }.toDF("cell", "cvec")
     // materialize once: three consumers (both self-join sides + the group
     // rollup) would otherwise re-run the scoring mapPartitions each —
-    // localCheckpoint is the repo's iterative-reuse pattern (clustersFromPairs
+    // localCheckpoint is the repo's iterative-reuse pattern (DedupOps.propagate
     // scaladoc covers the cluster-deployment caveat). Bench note: sim5's
-    // ~9 s at sf0.1 is the SUM of ~30 sub-second jobs (3 k-means iterations,
-    // checkpoint materializations, 2-3 propagation rounds) — per-job
-    // scheduling overhead at probe scale, the dd7 profile, not a data-volume
-    // term; at cluster scale the fixed costs amortize.
+    // time at sf0.1 is the SUM of many sub-second jobs (3 k-means iterations,
+    // checkpoint materializations, the grouping) — per-job scheduling
+    // overhead at probe scale, not a data-volume term; at cluster scale the
+    // fixed costs amortize.
     val assigned = cellAssignments(base, centroids, 1)
       .join(broadcast(centDf), "cell")
       .select(col("vec_id"), col("vec"), col("cell"), dot(col("vec"), col("cvec")).as("ccos"))
@@ -594,45 +594,20 @@ object SimilarityOps {
       .where(col("ia") < col("ib") && dot(col("va"), col("vb")) >= SemThreshold)
       .select(col("cell"), col("ia").as("doc_a"), col("ib").as("doc_b"))
     // semantic-dup groups: the pair graph is WITHIN-CELL by construction
-    // (candidates share a cell), so connected components never span cells
-    // and the general iterative label-propagation loop (dd7's machinery —
-    // dozens of exchange/checkpoint sub-jobs per run) collapses to ONE
-    // shuffle keyed by cell + an in-memory min-rooted union-find per cell,
-    // exactly the oracle's own algorithm (semDedupOracleRows). Per-task
-    // state is O(cell pairs), bounded by the sqrt(N)-cell design — the same
-    // bound the pairwise join above already commits to. Same fixpoint:
-    // group id = min member id.
-    val groupOf = pairs.as[(Int, Long, Long)].groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        it.foreach { case (_, u, v) =>
-          parent.getOrElseUpdate(u, u)
-          parent.getOrElseUpdate(v, v)
-          val (ru, rv) = (find(u), find(v))
-          if (ru != rv) { val lo = math.min(ru, rv); parent(math.max(ru, rv)) = lo }
-        }
-        parent.keysIterator.map(v => (v, find(v))).toSeq
-      }
-      .toDF("vec_id", "grp")
-    // sizes come from the SMALL clustered frame only (dup-subgraph-bounded,
-    // the clustersFromPairs convention); untouched vectors are singletons of
-    // size 1 by construction, so the corpus-side frame never aggregates
-    val sizes = groupOf.groupBy("grp").agg(count(lit(1)).as("gs"))
-    val labeled = assigned.select(col("vec_id"), col("cell"), col("ccos"))
-      .join(broadcast(groupOf), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"), col("ccos"),
-        coalesce(col("grp"), col("vec_id")).as("group_id"))
-    val withCos = labeled.join(broadcast(sizes),
-        labeled("group_id") === sizes("grp"), "left")
-      .select(col("vec_id"), col("cell"), col("group_id"),
-        coalesce(col("gs"), lit(1L)).as("group_size"), col("ccos"))
+    // (candidates share a cell), so components never span cells. Shuffling
+    // the pairs by cell puts every component in one pair partition, where
+    // the shared CC helper's local union-find settles it (the oracle's own
+    // algorithm, semDedupOracleRows): no vertex is split across partitions,
+    // so no propagation round runs. Per-task state is O(cell pairs), bounded
+    // by the sqrt(N)-cell design — the same bound the pairwise join above
+    // already commits to. Same fixpoint: group id = min member id; sizes
+    // come from the pair-touched vertices only, untouched vectors are
+    // singletons.
+    val withCos = DedupOps.clustersFromPairs(
+        assigned.select(col("vec_id").as("doc_id"), col("cell"), col("ccos")),
+        pairs.repartition(col("cell")).select("doc_a", "doc_b"))
+      .select(col("doc_id").as("vec_id"), col("cell"), col("cluster_id").as("group_id"),
+        col("cluster_size").as("group_size"), col("ccos"))
     val keepers = withCos.groupBy("group_id")
       .agg(min(struct(col("ccos"), col("vec_id"))).as("best"))
       .select(col("group_id"), col("best.vec_id").as("keeper"))
@@ -654,24 +629,13 @@ object SimilarityOps {
     val cents = centroids.map(c => l2norm(c).toArray).toArray
     val ccos = vecs.map { case (id, v) => id -> oracleScore(v, cents(asg(id)._1)) }.toMap
     // union-find with min-label fixpoint semantics (same as clustersFromPairs)
-    val parent = scala.collection.mutable.Map(vecs.map(v => v._1 -> v._1): _*)
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(x: Long, y: Long): Unit = {
-      val (rx, ry) = (find(x), find(y))
-      if (rx != ry) { val lo = math.min(rx, ry); parent(math.max(rx, ry)) = lo }
-    }
+    val uf = new MinUnionFind
     vecs.groupBy(v => asg(v._1)._1).foreach { case (_, members) =>
       val m = members.sortBy(_._1)
       for (i <- m.indices; j <- (i + 1) until m.length)
-        if (oracleScore(m(i)._2, m(j)._2) >= SemThreshold) union(m(i)._1, m(j)._1)
+        if (oracleScore(m(i)._2, m(j)._2) >= SemThreshold) uf.union(m(i)._1, m(j)._1)
     }
-    val groupOf = vecs.map(v => v._1 -> find(v._1)).toMap
+    val groupOf = vecs.map(v => v._1 -> uf.find(v._1)).toMap
     val sizes = groupOf.values.groupBy(identity).map { case (g, xs) => g -> xs.size.toLong }
     val keeperOf = vecs.groupBy(v => groupOf(v._1)).map { case (g, members) =>
       g -> members.map(_._1).minBy(id => (ccos(id), id))

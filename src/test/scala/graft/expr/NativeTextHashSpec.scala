@@ -125,6 +125,55 @@ class NativeTextHashSpec extends SparkSpec {
       }
   }
 
+  /** The explode + 60-sum SimHash tree SimHashSig replaced (DedupOps before
+    * the native signature), kept here as the parity reference.
+    */
+  private def treeSimHash(d: org.apache.spark.sql.DataFrame) = {
+    val toks = d.select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .where(col("tok") =!= "")
+      .select(col("doc_id"),
+        hofPolyHash(col("tok"), DedupOps.HashB1, DedupOps.HashM1).as("h1"),
+        hofPolyHash(col("tok"), DedupOps.HashB2, DedupOps.HashM2).as("h2"))
+    val bitSums = (0 until DedupOps.SimBits).map { i =>
+      sum(when(((col("h1") * (i + 1) + col("h2")) % DedupOps.HashM1) % 2 === 1, 1)
+        .otherwise(-1)).as(s"b$i")
+    }
+    toks.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
+      .select(col("doc_id"),
+        (0 until DedupOps.SimBits).map(i =>
+          when(col(s"b$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L)))
+          .reduce(_.bitwiseOR(_)).as("simhash"))
+  }
+
+  test("SimHashSig == explode + 60 sum(when) tree, token-less docs absent on both sides") {
+    val rng = new scala.util.Random(5)
+    val pieces = Vector("alpha", "beta", "中文", "文本", "😀", "𐍈x", "é", "straße",
+      " ", "  ", "\t", "\n", "\u000B", "\f", "\r", "\r\n", "\u00A0", "\u3000", "\u0000")
+    val random = (0 until 200).map(_ => Seq.fill(rng.nextInt(12))(pieces(rng.nextInt(pieces.length))).mkString)
+    val adversarial = Seq(
+      "\tlead tab", "trail tab\t", "\nlead newline", "trail cr\r", "\u000Bvt\u000B",
+      "\fff\f", "  spaces  around  ", " \t\n mixed \r\f\u000B runs \t ",
+      " ", "\t", "\n\r\f\u000B", "", "x", "\u00A0", "\u3000中\u3000",
+      "\ud83d\ude00\t\ud800 lone\udc00", "a\u0000b c")
+    val rows = (texts ++ random ++ adversarial).zipWithIndex.map { case (t, i) => (i.toLong, t) } :+
+      ((10000L, null: String))
+    val d = rows.toDF("doc_id", "text")
+    val native = ColumnBridge.column(SimHashSig(ColumnBridge.expression(col("text")),
+      DedupOps.SimBits, DedupOps.HashB1, DedupOps.HashM1, DedupOps.HashB2, DedupOps.HashM2))
+    def set(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    val ref = set(treeSimHash(d))
+    val got = set(DedupOps.simHashSignatures(d))
+    assert(got == ref, s"missing=${(ref -- got).take(5)} extra=${(got -- ref).take(5)}")
+    // the raw expression agrees too, and is null exactly where the tree has no row
+    val raw = d.select(col("doc_id"), native.as("s")).collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    assert(raw.collect { case (id, Some(sig)) => id -> sig }.toSet == ref)
+    val tokenless = Seq(" ", "\t", "\n\r\f\u000B", "").map(t => rows.find(_._2 == t).get._1) :+ 10000L
+    tokenless.foreach(id => assert(raw(id).isEmpty && !ref.exists(_._1 == id), s"doc $id"))
+    assert(ref.size > 150, s"fixture too weak: ${ref.size} signatures")
+  }
+
   test("natives stay native under fail-fast codegen") {
     // CodegenGuardSpec covers the full queries; this pins the expressions
     // themselves compiling (no CodegenFallback path) on a realistic frame
@@ -139,7 +188,9 @@ class NativeTextHashSpec extends SparkSpec {
         DedupOps.DupGramK))
       val n3 = ColumnBridge.column(Winnow(ColumnBridge.expression(col("text")),
         8, 16, DedupOps.HashB1, DedupOps.HashM1))
-      assert(df.select(n1, n2, n3).collect().length == texts.length)
+      val n4 = ColumnBridge.column(SimHashSig(ColumnBridge.expression(col("text")),
+        DedupOps.SimBits, DedupOps.HashB1, DedupOps.HashM1, DedupOps.HashB2, DedupOps.HashM2))
+      assert(df.select(n1, n2, n3, n4).collect().length == texts.length)
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
       case None => spark.conf.unset("spark.sql.codegen.fallback")

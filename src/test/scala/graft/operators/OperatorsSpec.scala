@@ -546,6 +546,86 @@ class OperatorsSpec extends SparkSpec {
     assert(out.forall(r => r.getLong(1) == 1L && r.getLong(2) == n))
   }
 
+  /** Driver-side reference for the CC helper: min-id label per vertex by
+    * relaxing every edge until nothing changes.
+    */
+  private def refLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val lbl = scala.collection.mutable.Map.empty[Long, Long]
+    edges.foreach { case (a, b) => lbl(a) = a; lbl(b) = b }
+    var changed = true
+    while (changed) {
+      changed = false
+      edges.foreach { case (a, b) =>
+        val m = math.min(lbl(a), lbl(b))
+        if (lbl(a) != m || lbl(b) != m) { lbl(a) = m; lbl(b) = m; changed = true }
+      }
+    }
+    lbl.toMap
+  }
+
+  private def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("CC helper: random graphs over 1, 4 and 16 pair partitions match a driver-side reference") {
+    import spark.implicits._
+    val rng = new scala.util.Random(41)
+    Seq(60, 300).foreach { nv =>
+      val pairs = Seq.fill(nv * 9 / 10)((rng.nextInt(nv).toLong, rng.nextInt(nv).toLong))
+        .collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }
+      val expected = refLabels(pairs)
+      for (parts <- Seq(1, 4, 16)) {
+        val (labels, rounds) = DedupOps.componentLabels(pairs.toDF("doc_a", "doc_b").repartition(parts))
+        assert(labelsOf(labels) == expected, s"nv=$nv parts=$parts")
+        // one partition holds every edge, so local contraction settles all
+        if (parts == 1) assert(rounds == 0, s"nv=$nv: $rounds rounds over one partition")
+        if (parts == 16) assert(rounds > 0, s"nv=$nv: residual rounds not exercised")
+      }
+    }
+  }
+
+  test("CC helper: 40-node chain scattered over partitions converges via residual rounds") {
+    import spark.implicits._
+    val n = 40L
+    // round-robin over 16 partitions: consecutive edges never share one, so
+    // contraction leaves the whole chain to the residual rounds
+    val pairs = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b").repartition(16)
+    val (labels, rounds) = DedupOps.componentLabels(pairs)
+    assert(labelsOf(labels) == (1L to n).map(_ -> 1L).toMap)
+    // path diameter 39 >> MaxCcIters would fail without the pointer jump
+    assert(rounds > 0 && rounds <= DedupOps.MaxCcIters, s"rounds=$rounds")
+    val out = DedupOps.clustersFromPairs((1L to n).toDF("doc_id"), pairs).collect()
+    assert(out.forall(r => r.getLong(1) == 1L && r.getLong(2) == n))
+  }
+
+  test("CC helper: pairs pre-partitioned by component skip the rounds") {
+    import spark.implicits._
+    val rng = new scala.util.Random(7)
+    // sim5's shape: every component's pairs carry its key (the cell) and are
+    // shuffled by it, so no vertex spans two pair partitions
+    val comps = (0 until 40).map { c =>
+      val members = (0 until 2 + rng.nextInt(6)).map(i => c * 100L + i)
+      val tree = members.tail.map(v => (members(rng.nextInt(members.indexOf(v))), v))
+      val extra = Seq.fill(rng.nextInt(3))((members.head, members.last)).filter(e => e._1 != e._2)
+      (tree ++ extra).map { case (a, b) => (c, a, b) }
+    }.flatten
+    val pairs = comps.toDF("cell", "doc_a", "doc_b").repartition(col("cell")).select("doc_a", "doc_b")
+    val (labels, rounds) = DedupOps.componentLabels(pairs)
+    assert(rounds == 0, s"pre-partitioned components ran $rounds rounds")
+    assert(labelsOf(labels) == refLabels(comps.map(t => (t._2, t._3))))
+  }
+
+  test("CC helper: duplicate and reversed edges") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 1L), (1L, 2L), (5L, 4L), (4L, 5L), (3L, 4L), (4L, 3L),
+      (11L, 10L), (10L, 11L), (11L, 10L)).toDF("doc_a", "doc_b").repartition(4)
+    val out = DedupOps.clustersFromPairs((1L to 12L).toDF("doc_id"), pairs).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getInt(3)))).toMap
+    Seq(1L, 2L).foreach(d => assert(out(d) == ((1L, 2L, if (d == 1L) 1 else 0))))
+    Seq(3L, 4L, 5L).foreach(d => assert(out(d) == ((3L, 3L, if (d == 3L) 1 else 0))))
+    Seq(10L, 11L).foreach(d => assert(out(d) == ((10L, 2L, if (d == 10L) 1 else 0))))
+    Seq(6L, 7L, 8L, 9L, 12L).foreach(d => assert(out(d) == ((d, 1L, 1))))
+  }
+
   test("cluster keeper: longest member wins, exact-dup ties break to min doc_id") {
     import spark.implicits._
     // NOT sequential-suffix tokens (p1..p40): their portable-hash parities
