@@ -14,16 +14,6 @@ object Detect {
     case Payload.Candidates(stage, w, h, cands) => Order.finalize(yolo(stage, w, h, cands))
   }
 
-  /** Production wrapper: a missing (null) or corrupt payload yields zero
-    * regions instead of failing the task — at 10^12 docs corrupt rows are a
-    * certainty and must not kill a range. Callers count drops via the
-    * returned flag.
-    */
-  def extractSafe(payload: Array[Byte]): (Seq[Region], Boolean) =
-    if (payload == null) (Nil, true)
-    else try (extract(payload), false)
-    catch { case scala.util.control.NonFatal(_) => (Nil, true) }
-
   /** Scene-text detection tail of the DBNet path:
     * binarize > bin_thresh (/root/reference/cnstd/model/core.py:121) →
     * morphological open, k = 1 + H/512 (core.py:124-130) →
@@ -238,7 +228,11 @@ object Detect {
     hash
   }
 
-  /** extractRendered with the degrade-don't-fail contract of extractSafe. */
+  /** Production wrapper: a missing (null) or corrupt payload yields zero
+    * spans instead of failing the task — at 10^12 docs corrupt rows are a
+    * certainty and must not kill a range. Callers count drops via the
+    * returned flag.
+    */
   def extractRenderedSafe(payload: Array[Byte], cfg: DetectConfig): (Seq[(String, String)], Boolean) =
     if (payload == null) (Nil, true)
     else try (extractRendered(payload, cfg), false)

@@ -73,7 +73,7 @@ object ExtractOps {
       i => Oracle.extractConfigured(GenData.doc(GenData.DefaultSeed, i),
         ref => GenData.payload(GenData.DefaultSeed, ref), cfg))
     val (docs, media) = Extract.generate(n)
-    flatSpans(Extract.runConfigured(docs, media, cfg).toDF()).orderBy("doc_id", "span_order")
+    flatSpans(Extract.run(docs, media, cfg).toDF()).orderBy("doc_id", "span_order")
   }
 
   def oracleFullTable(dir: String, n: Long): String = OracleSide.path("x4_oracle_full", dir, n)
@@ -95,7 +95,7 @@ object ExtractOps {
       i => Oracle.extractConfigured(GenData.doc(GenData.DefaultSeed, i),
         ref => GenData.payload(GenData.DefaultSeed, ref), cfg))
     val (docs, media) = Extract.generate(n)
-    flatSpans(Extract.runConfigured(docs, media, cfg).toDF()).orderBy("doc_id", "span_order")
+    flatSpans(Extract.run(docs, media, cfg).toDF()).orderBy("doc_id", "span_order")
   }
 
   /** Fixed side-table path for the exploded extraction spans at size n: the

@@ -2,57 +2,60 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 import graft.kernel.Detect
 import graft.schema._
 
 /** One media-extraction task after the media join. */
 final case class MediaTask(doc_id: String, offset: Int, media_ref: String, payload: Array[Byte])
 
-/** One assembled-input piece: either a text span (regions == null) or the
-  * region list extracted from a media span. Unioning both shapes lets the
-  * final assembly run off a single doc_id shuffle.
+/** One output span before renumbering: a text span passed through, or one
+  * region of a media span as the kernel renders it (Detect.extractRendered).
   */
-final case class SpanPiece(doc_id: String, offset: Int, kind: String, text: String,
-                           media_ref: String, regions: Seq[Region])
+final case class RSpan(kind: String, text: String, media_ref: String)
 
-/** A pre-rendered span emitted by the config-driven kernel path. */
-final case class RSpan(kind: String, text: String)
-
-/** Piece shape for the config-driven pipeline: media pieces carry their
-  * rendered spans (the rotated render has no fixed-arity numeric struct, so
-  * rendering happens kernel-side).
+/** One assembly input piece: the spans one input span contributes at its
+  * offset — the text span itself, or the media span's rendered regions in
+  * reading order (none for a payload with no regions, a corrupt or a missing
+  * one). Unioning text and media pieces lets the final assembly run off a
+  * single doc_id shuffle.
   */
-final case class RenderedPiece(doc_id: String, offset: Int, kind: String, text: String,
-                               media_ref: String, rendered: Seq[RSpan])
+final case class SpanPiece(doc_id: String, offset: Int, spans: Seq[RSpan])
 
 /** The distributed extraction pipeline (SURVEY.md §7.3 step 3):
   *
-  *   docs ─ explode media spans ─ join(media) ─ mapPartitions(Detect.extract) ─┐
-  *   docs ─ explode text spans ──────────────────────────────────────── union ─┴─
+  *   docs ─ explode media spans ─ join(media) ─ mapPartitions(Detect.extractRendered) ─┐
+  *   docs ─ explode text spans ─────────────────────────────────────────────── union ─┴─
   *     groupBy(doc_id) ─ columnar assemble → ExtractedDoc
   *
   * Exactly two shuffles: the media-payload join and the final doc_id group.
   * (A first cut re-joined the docs table after extraction — a third shuffle
   * moving every text span twice; unioning typed pieces removes it.)
   *
+  * Every DetectConfig runs this one plan — the analog of the reference's
+  * detect kwargs (rotated_bbox, use_angle_clf, crops, dilation, score_mode;
+  * schema.DetectConfig): the kernel renders each region to its span text, so
+  * the assembly only concatenates spans whatever the config.
+  *
   * Scale design: docs and media are both written doc_id-range-partitioned
   * (media_ref embeds its doc_id), so on a real cluster the join co-locates
   * after AQE; media-heavy docs are naturally split across tasks because the
   * unit of kernel work is one media span, not one doc — skew in media count
   * per doc therefore never concentrates in one task before the (cheap,
-  * regions-only) final group. The kernel is within-row pure compute —
+  * rendered-regions-only) final group. The kernel is within-row pure compute —
   * parallelism comes from partitions only, exactly replacing the reference's
   * driver-side batch loop (/root/reference/cnstd/detector.py:232-245).
   */
 object Extract {
 
-  def run(docs: Dataset[Doc], media: Dataset[Media])(implicit spark: SparkSession): Dataset[ExtractedDoc] =
-    runWithMetrics(docs, media)._1
+  def run(docs: Dataset[Doc], media: Dataset[Media], cfg: DetectConfig = DetectConfig.Default)(
+      implicit spark: SparkSession): Dataset[ExtractedDoc] =
+    runWithMetrics(docs, media, cfg)._1
 
   /** run() plus the corrupt/missing-payload counter for lineage recording. */
-  def runWithMetrics(docs: Dataset[Doc], media: Dataset[Media])(
-      implicit spark: SparkSession): (Dataset[ExtractedDoc], org.apache.spark.util.LongAccumulator) = {
-    val (pieces, corrupt) = piecesOf(docs, media)
+  def runWithMetrics(docs: Dataset[Doc], media: Dataset[Media], cfg: DetectConfig = DetectConfig.Default)(
+      implicit spark: SparkSession): (Dataset[ExtractedDoc], LongAccumulator) = {
+    val (pieces, corrupt) = piecesOf(docs, media, cfg)
     val grouped = pieces.toDF()
       .groupBy("doc_id")
       .agg(sortedPieces.as("ps"))
@@ -67,14 +70,14 @@ object Extract {
     * because buckets partition the offset range contiguously. Output is
     * identical to run() (asserted in ExtractE2ESpec).
     *
-    * In the default pipeline the unit of kernel work is already one media
-    * span, so doc-level media skew only concentrates in the (cheap,
-    * regions-only) final group — salting matters when a single doc's span
-    * COUNT is itself extreme (millions), not merely its media payloads.
+    * The unit of kernel work is already one media span, so doc-level media
+    * skew only concentrates in the (cheap, rendered-regions-only) final
+    * group — salting matters when a single doc's span COUNT is itself
+    * extreme (millions), not merely its media payloads.
     */
   def runSalted(docs: Dataset[Doc], media: Dataset[Media], bucketSize: Int = 1024)(
       implicit spark: SparkSession): Dataset[ExtractedDoc] = {
-    val (pieces, _) = piecesOf(docs, media)
+    val (pieces, _) = piecesOf(docs, media, DetectConfig.Default)
     val partial = pieces.toDF()
       .withColumn("bucket", (col("offset") / bucketSize).cast("int"))
       .groupBy(col("doc_id"), col("bucket"))
@@ -87,20 +90,20 @@ object Extract {
     assembled(merged)
   }
 
-  /** Kernel phase: explode spans, join media payloads, run Detect.extract in
-    * batched mapPartitions (the analog of the reference's batch_size=20
-    * inference loop, one payload batch in memory per task), union with the
-    * pass-through text pieces.
+  /** Kernel phase: explode spans, join media payloads, run
+    * Detect.extractRendered under `cfg` in batched mapPartitions (the analog
+    * of the reference's batch_size=20 inference loop, one payload batch in
+    * memory per task), union with the pass-through text pieces.
     */
-  private def piecesOf(docs: Dataset[Doc], media: Dataset[Media])(
-      implicit spark: SparkSession): (Dataset[SpanPiece], org.apache.spark.util.LongAccumulator) = {
+  private def piecesOf(docs: Dataset[Doc], media: Dataset[Media], cfg: DetectConfig)(
+      implicit spark: SparkSession): (Dataset[SpanPiece], LongAccumulator) = {
     import spark.implicits._
     // explode_outer: a doc with an empty spans array keeps one row (s = null)
-    // instead of vanishing — see the emptyDocs branch below
+    // instead of vanishing — see the text branch below
     val spans = docs.select(col("doc_id"), explode_outer(col("spans")).as("s"))
 
     // left join: a media span whose payload row is missing must still produce
-    // a piece (empty regions), otherwise a doc whose only spans are orphaned
+    // a piece (no regions), otherwise a doc whose only spans are orphaned
     // media would vanish from the output entirely
     val mediaTasks = spans
       .where(col("s.kind") === "media")
@@ -114,9 +117,9 @@ object Extract {
       it.grouped(Params.BatchSize).flatMap { batch =>
         batch.map { t =>
           // corrupt/missing payloads degrade to zero regions, never fail the task
-          val (regions, dropped) = Detect.extractSafe(t.payload)
+          val (rendered, dropped) = Detect.extractRenderedSafe(t.payload, cfg)
           if (dropped) corrupt.add(1)
-          SpanPiece(t.doc_id, t.offset, "media", "", t.media_ref, regions)
+          SpanPiece(t.doc_id, t.offset, rendered.map { case (k, x) => RSpan(k, x, t.media_ref) })
         }
       }
     }
@@ -124,22 +127,17 @@ object Extract {
     // The text branch also carries the empty-doc sentinel: a doc whose spans
     // array is empty would otherwise vanish from the output, while the
     // single-threaded oracle emits ExtractedDoc(id, Seq()). explode_outer
-    // kept one s=null row per such doc; mapping it to a media-kind piece
-    // with an EMPTY (not null) regions array flattens to zero spans in
-    // assembly, so the doc appears with spans=[]. Folding the sentinel into
-    // this branch (rather than a third union branch) keeps the docs side at
-    // exactly two scans+explodes — a third branch measurably ate into the
-    // 32-thread CPU headroom.
-    val regionsType = "array<struct<kind:string,x0:int,y0:int,x1:int,y1:int,score:double>>"
+    // kept one s=null row per such doc; mapping it to a piece with no spans
+    // flattens to zero spans in assembly, so the doc appears with spans=[].
+    // Folding the sentinel into this branch (rather than a third union
+    // branch) keeps the docs side at exactly two scans+explodes.
     val textPieces: Dataset[SpanPiece] = spans
       .where(col("s").isNull || col("s.kind") =!= "media")
       .select(col("doc_id"),
         coalesce(col("s.offset"), lit(0)).as("offset"),
-        coalesce(col("s.kind"), lit("media")).as("kind"),
-        coalesce(col("s.text"), lit("")).as("text"),
-        coalesce(col("s.media_ref"), lit("")).as("media_ref"),
-        when(col("s").isNull, array().cast(regionsType))
-          .otherwise(lit(null).cast(regionsType)).as("regions"))
+        when(col("s").isNull, array().cast("array<struct<kind:string,text:string,media_ref:string>>"))
+          .otherwise(array(struct(col("s.kind").as("kind"),
+            coalesce(col("s.text"), lit("")).as("text"), lit("").as("media_ref")))).as("spans"))
       .as[SpanPiece]
 
     (mediaPieces.unionByName(textPieces), corrupt)
@@ -148,88 +146,22 @@ object Extract {
   /** collect_list of piece structs ordered by offset (offset is the struct's
     * first field, so sort_array orders by it; offsets are unique per doc).
     */
-  private def sortedPieces = sort_array(collect_list(struct(
-    col("offset"), col("kind"), col("text"), col("media_ref"), col("regions"))))
+  private def sortedPieces = sort_array(collect_list(struct(col("offset"), col("spans"))))
 
-  /** Columnar assembly over (doc_id, ps) — the whole flatten/renumber tail
-    * stays inside whole-stage codegen (no object encoders after the kernel
-    * boundary). Semantics mirror kernel.Assemble.assemble exactly (the
-    * single-threaded oracle uses that independent implementation; the E2E
-    * suite asserts equality, so the two implementations cross-check):
-    *  * text spans pass through, media spans are replaced by their region
-    *    lists in media-local order (empty list drops the span),
-    *  * region text rendering matches Assemble.regionText's
-    *    "[x0,y0,x1,y1];%.4f" (format_string and formatLocal(ROOT) agree),
-    *  * final `order` renumbered 0..n-1.
+  /** Columnar assembly over (doc_id, ps), with no object encoders after
+    * the kernel boundary: the offset-ordered pieces' spans are concatenated
+    * and `order` renumbered 0..n-1. Semantics mirror the single-threaded
+    * oracles (pipeline.Oracle; the E2E suite asserts equality, so the
+    * implementations cross-check).
     */
   private def assembled(grouped: DataFrame)(implicit spark: SparkSession): Dataset[ExtractedDoc] = {
     import spark.implicits._
-    val flattened = flatten(transform(col("ps"), p =>
-      when(p.getField("regions").isNull,
-        array(struct(p.getField("kind").as("kind"), p.getField("text").as("text"),
-          lit("").as("media_ref"))))
-        .otherwise(transform(p.getField("regions"), r =>
-          struct(r.getField("kind").as("kind"),
-            format_string("[%d,%d,%d,%d];%.4f",
-              r.getField("x0"), r.getField("y0"), r.getField("x1"), r.getField("y1"),
-              r.getField("score")).as("text"),
-            p.getField("media_ref").as("media_ref"))))))
-    // guard the empty case: sequence(0, -1) would yield a DESCENDING range
-    val renumbered = when(size(col("flat")) === 0,
-      array().cast("array<struct<kind:string,text:string,media_ref:string,order:int>>"))
-      .otherwise(zip_with(col("flat"), sequence(lit(0), size(col("flat")) - 1),
-        (sp, i) => struct(sp.getField("kind").as("kind"), sp.getField("text").as("text"),
-          sp.getField("media_ref").as("media_ref"), i.as("order"))))
+    val flat = flatten(transform(col("ps"), _.getField("spans")))
     grouped
-      .select(col("doc_id"), flattened.as("flat"))
-      .select(col("doc_id"), renumbered.as("spans"))
+      .select(col("doc_id"), transform(flat, (sp, i) =>
+        struct(sp.getField("kind").as("kind"), sp.getField("text").as("text"),
+          sp.getField("media_ref").as("media_ref"), i.as("order"))).as("spans"))
       .as[ExtractedDoc]
-  }
-
-  /** Config-driven variant of run() — the public API analog of the
-    * reference's constructor/detect kwargs (rotated_bbox is the REFERENCE
-    * default, auto-rotate, thresholds, score_mode; schema.DetectConfig).
-    * Same two-shuffle shape; the assembly runs on the typed path because the
-    * rotated render is produced kernel-side. The frozen Default config
-    * short-circuits to the columnar fast path — bit-identical by definition.
-    */
-  def runConfigured(docs: Dataset[Doc], media: Dataset[Media], cfg: graft.schema.DetectConfig)(
-      implicit spark: SparkSession): Dataset[ExtractedDoc] = {
-    if (cfg == graft.schema.DetectConfig.Default) return run(docs, media)
-    import spark.implicits._
-    val spans = docs.select(col("doc_id"), explode_outer(col("spans")).as("s"))
-    val mediaTasks = spans
-      .where(col("s.kind") === "media")
-      .select(col("doc_id"), col("s.offset").as("offset"), col("s.media_ref").as("media_ref"))
-      .join(media, Seq("media_ref"), "left_outer")
-      .select(col("doc_id"), col("offset"), col("media_ref"), col("payload"))
-      .as[MediaTask]
-    val mediaPieces: Dataset[RenderedPiece] = mediaTasks.mapPartitions { it =>
-      it.grouped(Params.BatchSize).flatMap(_.map { t =>
-        val (rendered, _) = Detect.extractRenderedSafe(t.payload, cfg)
-        RenderedPiece(t.doc_id, t.offset, "media", "", t.media_ref,
-          rendered.map { case (k, x) => RSpan(k, x) })
-      })
-    }
-    val textPieces: Dataset[RenderedPiece] = spans
-      .where(col("s").isNull || col("s.kind") =!= "media")
-      .select(col("doc_id"),
-        coalesce(col("s.offset"), lit(0)).as("offset"),
-        coalesce(col("s.kind"), lit("media")).as("kind"),
-        coalesce(col("s.text"), lit("")).as("text"),
-        coalesce(col("s.media_ref"), lit("")).as("media_ref"),
-        array().cast("array<struct<kind:string,text:string>>").as("rendered"))
-      .as[RenderedPiece]
-    mediaPieces.unionByName(textPieces)
-      .groupByKey(_.doc_id)
-      .mapGroups { (id, it) =>
-        val ps = it.toArray.sortBy(_.offset)
-        val flat = ps.flatMap { p =>
-          if (p.kind != "media") Seq((p.kind, p.text, ""))
-          else p.rendered.map(r => (r.kind, r.text, p.media_ref))
-        }
-        ExtractedDoc(id, flat.zipWithIndex.map { case ((k, x, m), i) => OutSpan(k, x, m, i) }.toSeq)
-      }
   }
 
   /** Generate `nDocs` docs + media payloads as distributed Datasets. */

@@ -49,7 +49,7 @@ object ExtractJob {
         // reference default), --auto-rotate, --angle-clf (use_angle_clf),
         // --dilation (PP use_dilation), --crops (cropped_img digest render),
         // --score-slow (PP score_mode='slow'). No flags = the frozen default
-        // columnar fast path.
+        // (DetectConfig.Default).
         val unknown = flags.filterNot(Set(
           "--rotated", "--auto-rotate", "--angle-clf", "--dilation", "--crops", "--score-slow"))
         require(unknown.isEmpty, s"unknown flags: $unknown")
@@ -63,7 +63,7 @@ object ExtractJob {
         val docs = spark.read.parquet(docsDir).as[graft.schema.Doc]
         val media = spark.read.parquet(mediaDir).as[graft.schema.Media]
         val t0 = System.nanoTime()
-        Extract.runConfigured(docs, media, cfg).write.mode(SaveMode.Overwrite).parquet(outDir)
+        Extract.run(docs, media, cfg).write.mode(SaveMode.Overwrite).parquet(outDir)
         val secs = (System.nanoTime() - t0) / 1e9
         val written = spark.read.parquet(outDir).count()
         println(f"[extract-job] docs=$written%d wall=$secs%.2fs throughput=${written / secs}%.1f docs/s cfg=$cfg -> $outDir")

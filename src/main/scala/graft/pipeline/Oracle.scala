@@ -22,8 +22,10 @@ object Oracle {
     extract(d, ref => GenData.payload(seed, ref))
   }
 
-  /** Config-driven oracle matching Extract.runConfigured's contract (rendered
-    * kernel path, degrade-don't-fail, empty docs kept).
+  /** Config-driven oracle matching Extract.run's contract under `cfg`
+    * (rendered kernel path, degrade-don't-fail, empty docs kept). Under
+    * DetectConfig.Default it must equal `extract`, which renders through
+    * Assemble instead (asserted in ExtractE2ESpec).
     */
   def extractConfigured(doc: Doc, payloadFor: String => Array[Byte],
                         cfg: graft.schema.DetectConfig): ExtractedDoc = {

@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.kernel.{Assemble, Detect}
+import graft.kernel.Detect
 import graft.pipeline.GenData
-import graft.schema.{Doc, ExtractedDoc}
+import graft.schema.{DetectConfig, Doc, ExtractedDoc, OutSpan}
 
 /** Optional Structured-Streaming ingestion mode. The reference is batch-only
   * (SURVEY §2.9), so this is the "bolt-on" noted there: documents arrive as
@@ -33,35 +33,19 @@ object StreamingExtract {
     def fetch(mediaRef: String): Array[Byte] = GenData.payload(seed, mediaRef)
   }
 
-  /** One doc through the kernels. Matches the batch pipeline's robustness
-    * contract (Extract.piecesOf): a corrupt payload or a failed/missing fetch
-    * degrades to zero regions for that span instead of failing the query.
+  /** One doc through the kernels under `cfg`. Matches the batch pipeline's
+    * contract (Extract.run): the kernel renders each region, and a corrupt
+    * payload or a failed/missing fetch degrades to zero regions for that span
+    * instead of failing the query; empty docs are kept.
     */
-  def extractOne(doc: Doc, store: MediaStore): ExtractedDoc = {
-    val byOffset = doc.spans.collect {
-      case s if s.kind == "media" =>
-        val payload = try store.fetch(s.media_ref) catch { case _: Exception => null }
-        s.offset -> Detect.extractSafe(payload)._1
-    }.toMap
-    ExtractedDoc(doc.doc_id, Assemble.assemble(doc.spans, byOffset))
-  }
-
-  /** Config-driven variant of extractOne — the streaming analog of
-    * Extract.runConfigured / Oracle.extractConfigured (same rendered-kernel
-    * contract, same degrade-don't-fail, empty docs kept). The frozen Default
-    * config routes through extractOne's columnar-identical path.
-    */
-  def extractOneConfigured(doc: Doc, store: MediaStore,
-                           cfg: graft.schema.DetectConfig): ExtractedDoc = {
-    if (cfg == graft.schema.DetectConfig.Default) return extractOne(doc, store)
+  def extractOne(doc: Doc, store: MediaStore, cfg: DetectConfig): ExtractedDoc = {
     val flat = doc.spans.sortBy(_.offset).flatMap { s =>
       if (s.kind == "media") {
         val payload = try store.fetch(s.media_ref) catch { case _: Exception => null }
         Detect.extractRenderedSafe(payload, cfg)._1.map { case (k, t) => (k, t, s.media_ref) }
       } else Seq((s.kind, s.text, ""))
     }
-    ExtractedDoc(doc.doc_id,
-      flat.zipWithIndex.map { case ((k, t, m), i) => graft.schema.OutSpan(k, t, m, i) })
+    ExtractedDoc(doc.doc_id, flat.zipWithIndex.map { case ((k, t, m), i) => OutSpan(k, t, m, i) })
   }
 
   /** Start the streaming extraction: docsDir (parquet files, Doc schema) →
@@ -70,15 +54,14 @@ object StreamingExtract {
     * in streaming mode, mirroring ExtractJob's batch flags.
     */
   def start(docsDir: String, outDir: String, checkpointDir: String, store: MediaStore,
-            availableNow: Boolean = true,
-            cfg: graft.schema.DetectConfig = graft.schema.DetectConfig.Default)(
+            availableNow: Boolean = true, cfg: DetectConfig = DetectConfig.Default)(
       implicit spark: SparkSession): StreamingQuery = {
     import spark.implicits._
     val docs: Dataset[Doc] = spark.readStream
       .schema(org.apache.spark.sql.Encoders.product[Doc].schema)
       .parquet(docsDir)
       .as[Doc]
-    val out = docs.mapPartitions(_.map(d => extractOneConfigured(d, store, cfg)))
+    val out = docs.mapPartitions(_.map(d => extractOne(d, store, cfg)))
     val writer = out.writeStream
       .format("parquet")
       .option("path", outDir)

@@ -54,6 +54,29 @@ class FixtureSpec extends AnyFunSuite {
     assert(out(1).text == "[0,0,10,10];0.9000")
   }
 
+  test("regionText equals the Formatter rendering it replaced") {
+    // the Formatter one-liner regionText replaced, kept as the reference
+    def reference(r: Region): String =
+      "[%d,%d,%d,%d];%.4f".formatLocal(java.util.Locale.ROOT, r.x0, r.y0, r.x1, r.y1, r.score)
+    val rng = new scala.util.Random(20261017L)
+    val random = Seq.fill(200000)(rng.nextDouble())
+    // halfway at the 5th decimal, where rounding direction shows
+    val ties = (0 until 20000).map(k => (2 * k + 1) / 200000.0) ++
+      Seq(0.12345, 0.00005, 0.00015, 0.99995, 0.5, 0.99994999)
+    // Double.toString prints these in E-notation
+    val tiny = Seq(1e-3 - 1e-12, 9.9999e-4, 5e-4, 4.9999e-4, 1.5e-4, 5e-5, 1e-5, 1e-9,
+      Double.MinPositiveValue) ++ Seq.fill(20000)(rng.nextDouble() * 1e-3)
+    val odd = Seq(0.0, 1.0, -0.0, -0.5, -0.00005, 1e20, 12345.67895,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val coords = Seq((0, 0, 10, 10), (-5, -17, -1, 3), (Int.MinValue, -1, Int.MaxValue, 123456789))
+    val scores = random ++ ties ++ tiny ++ odd
+    assert(tiny.forall(_.toString.contains("E")))
+    for ((x0, y0, x1, y1) <- coords; score <- scores) {
+      val r = Region(Vocab.StdKind, x0, y0, x1, y1, score)
+      assert(Assemble.regionText(r) == reference(r), s"score $score at ($x0,$y0,$x1,$y1)")
+    }
+  }
+
   test("fx08: an all-below-threshold map yields no regions") {
     val probs = mapWith(64, 64, Seq((10, 10, 40, 40)), v = 60) // 60/255 < 0.3
     assert(Detect.std(probs, 0, 64, 64).isEmpty)

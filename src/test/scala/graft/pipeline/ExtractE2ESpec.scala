@@ -11,6 +11,11 @@ import graft.schema._
 class ExtractE2ESpec extends SparkSpec {
   private val seed = GenData.DefaultSeed
   private val nDocs = 300L
+  // every optional reference-tail feature on at once: rotated default path +
+  // use_dilation + use_angle_clf + rendered crops (cn_std.py:123,148-169,190-199)
+  private val fullCfg = DetectConfig(rotatedBbox = true, useDilation = true,
+    useAngleClf = true, renderCrops = true)
+  private val configs = Seq(DetectConfig.Default, fullCfg)
 
   test("generator is deterministic and media refs resolve") {
     val d1 = GenData.doc(seed, 7)
@@ -50,11 +55,13 @@ class ExtractE2ESpec extends SparkSpec {
     implicit val s = spark
     import s.implicits._
     val (docs, media) = Extract.generate(120, seed)
-    val a = Extract.run(docs.repartition(2), media.repartition(3))
-      .collect().map(d => d.doc_id -> d.spans).toMap
-    val b = Extract.run(docs.repartition(11), media.repartition(5))
-      .collect().map(d => d.doc_id -> d.spans).toMap
-    assert(a == b)
+    configs.foreach { cfg =>
+      val a = Extract.run(docs.repartition(2), media.repartition(3), cfg)
+        .collect().map(d => d.doc_id -> d.spans).toMap
+      val b = Extract.run(docs.repartition(11), media.repartition(5), cfg)
+        .collect().map(d => d.doc_id -> d.spans).toMap
+      assert(a == b, s"partitioning changed the output under $cfg")
+    }
   }
 
   test("salted assembly is identical to the unsalted pipeline") {
@@ -75,19 +82,24 @@ class ExtractE2ESpec extends SparkSpec {
       Doc("doc-a", Seq(RawSpan("text", "hello", "", 0), RawSpan("media", "", "m-bad", 1))),
       Doc("doc-b", Seq(RawSpan("media", "", "m-missing", 0)))).toDS()
     val media = Seq(Media("m-bad", Array[Byte](1, 2, 3))).toDS() // bad magic
-    val out = Extract.run(docs, media).collect().map(d => d.doc_id -> d.spans).toMap
-    assert(out("doc-a") == Seq(OutSpan("text", "hello", "", 0)))
-    assert(out.contains("doc-b"), "doc with only an orphaned media span must still be emitted")
-    assert(out("doc-b").isEmpty)
+    configs.foreach { cfg =>
+      val (ds, corrupt) = Extract.runWithMetrics(docs, media, cfg)
+      val out = ds.collect().map(d => d.doc_id -> d.spans).toMap
+      assert(out("doc-a") == Seq(OutSpan("text", "hello", "", 0)))
+      assert(out.contains("doc-b"), "doc with only an orphaned media span must still be emitted")
+      assert(out("doc-b").isEmpty)
+      // one corrupt payload plus one missing payload
+      assert(corrupt.value == 2, s"corrupt/missing counter under $cfg")
+    }
   }
 
-  test("config-driven rotated pipeline equals its oracle; default config hits the fast path") {
+  test("rotated pipeline equals its oracle; both oracles agree on Default") {
     implicit val s = spark
     import s.implicits._
-    val cfg = graft.schema.DetectConfig.ReferenceDefault // rotated_bbox=True, cn_std.py:49
+    val cfg = DetectConfig.ReferenceDefault // rotated_bbox=True, cn_std.py:49
     val n = 300
     val (docs, media) = Extract.generate(n, seed)
-    val out = Extract.runConfigured(docs, media, cfg).collect().map(d => d.doc_id -> d.spans).toMap
+    val out = Extract.run(docs, media, cfg).collect().map(d => d.doc_id -> d.spans).toMap
     assert(out.size == n)
     (0 until n).foreach { i =>
       val expect = Oracle.extractConfigured(GenData.doc(seed, i), ref => GenData.payload(seed, ref), cfg)
@@ -96,23 +108,23 @@ class ExtractE2ESpec extends SparkSpec {
     // rotated render is actually exercised (5-field rbbox text on std spans)
     assert(out.values.flatten.exists(sp => sp.kind == "std_text" && sp.text.count(_ == ',') == 4),
       "no rotated rbbox renders found — rotated path not exercised")
-    // the frozen Default config short-circuits to the columnar pipeline
-    val viaCfg = Extract.runConfigured(docs, media, graft.schema.DetectConfig.Default)
-      .collect().map(d => d.doc_id -> d.spans).toMap
-    val direct = Extract.run(docs, media).collect().map(d => d.doc_id -> d.spans).toMap
-    assert(viaCfg == direct)
+    // Extract.run renders through the kernel for every config, so under the
+    // frozen Default the config-driven oracle must equal the region oracle
+    (0 until n).foreach { i =>
+      val doc = GenData.doc(seed, i)
+      val payloadFor = (ref: String) => GenData.payload(seed, ref)
+      assert(Oracle.extractConfigured(doc, payloadFor, DetectConfig.Default) ==
+        Oracle.extract(doc, payloadFor), s"doc $i: the two oracles disagree under Default")
+    }
   }
 
   test("full-feature config (angle-clf + crops + dilation) equals its oracle") {
     implicit val s = spark
     import s.implicits._
-    // every round-3 toggle on at once: rotated default path + use_dilation +
-    // use_angle_clf + rendered crops (cn_std.py:123,148-169,190-199)
-    val cfg = graft.schema.DetectConfig(rotatedBbox = true, useDilation = true,
-      useAngleClf = true, renderCrops = true)
+    val cfg = fullCfg
     val n = 200
     val (docs, media) = Extract.generate(n, seed)
-    val out = Extract.runConfigured(docs, media, cfg).collect().map(d => d.doc_id -> d.spans).toMap
+    val out = Extract.run(docs, media, cfg).collect().map(d => d.doc_id -> d.spans).toMap
     assert(out.size == n)
     (0 until n).foreach { i =>
       val expect = Oracle.extractConfigured(GenData.doc(seed, i), ref => GenData.payload(seed, ref), cfg)
@@ -130,10 +142,12 @@ class ExtractE2ESpec extends SparkSpec {
     val docs = Seq(
       Doc("doc-empty", Seq.empty),
       Doc("doc-t", Seq(RawSpan("text", "hi", "", 0)))).toDS()
-    val out = Extract.run(docs, s.emptyDataset[Media]).collect().map(d => d.doc_id -> d.spans).toMap
-    assert(out.keySet == Set("doc-empty", "doc-t"), s"missing docs: $out")
-    assert(out("doc-empty").isEmpty)
-    assert(out("doc-t") == Seq(OutSpan("text", "hi", "", 0)))
+    configs.foreach { cfg =>
+      val out = Extract.run(docs, s.emptyDataset[Media], cfg).collect().map(d => d.doc_id -> d.spans).toMap
+      assert(out.keySet == Set("doc-empty", "doc-t"), s"missing docs under $cfg: $out")
+      assert(out("doc-empty").isEmpty)
+      assert(out("doc-t") == Seq(OutSpan("text", "hi", "", 0)))
+    }
     // matches the single-threaded oracle's contract
     assert(Oracle.extract(Doc("doc-empty", Seq.empty), _ => null) == ExtractedDoc("doc-empty", Seq.empty))
   }
