@@ -1,8 +1,9 @@
 package graft.kernel
 
-/** Per-image bitmap kernels: binarization, morphological opening, connected
-  * components. All within-row compute over one payload — never a distributed
-  * structure (one image is one row; H*W is bounded by the payload codec).
+/** Per-image bitmap kernels: binarization, morphological opening, dilation
+  * and the one connected-components labeler every detection path uses. All
+  * within-row compute over one payload — never a distributed structure (one
+  * image is one row; H*W is bounded by the payload codec).
   *
   * Hot path works on a Long-bitset bitmap built straight from the payload's
   * quantized byte cells — no Float[]/Boolean[] materialization per payload
@@ -117,26 +118,32 @@ object Bitmap {
     out
   }
 
-  /** A connected component's inclusive pixel-bounding box. */
-  final case class Component(xMin: Int, yMin: Int, xMax: Int, yMax: Int)
+  /** A connected component: its inclusive pixel-bounding box and, when the
+    * labeler was asked for them, its pixels (pixel = y*w + x) in fill order,
+    * else an empty array. Consumers sort or sum the pixels, so the order
+    * never reaches an output.
+    */
+  final case class Component(xMin: Int, yMin: Int, xMax: Int, yMax: Int, pixels: Array[Int])
 
   /** 8-connected component labeling via flood fill over the bitset,
-    * components emitted in row-major first-pixel order. DESTRUCTIVE: visited
-    * bits are cleared (the bitset doubles as the visited set). Replaces
+    * components emitted in row-major first-pixel order — the one labeler
+    * behind the axis-aligned box, the rotated min-area rect, the slow polygon
+    * score and the page angle. DESTRUCTIVE: visited bits are cleared (the
+    * bitset doubles as the visited set). Replaces
     * `cv2.findContours(RETR_EXTERNAL)` + `cv2.boundingRect`
-    * (/root/reference/cnstd/model/base.py:115-117) on the axis-aligned path.
-    * Capped at `max` components
+    * (cnstd/model/base.py:115-117). Capped at `max` components
     * (/root/reference/cnstd/ppocr/postprocess/db_postprocess.py:37,71).
+    *
+    * @param withPixels also collect each component's pixels. Off, the fill
+    *   allocates nothing per component beyond the Component: the axis-aligned
+    *   hot path only reads the bounding box.
     */
-  def connectedComponents(bits: Array[Long], w: Int, h: Int, max: Int): Seq[Component] = {
+  def connectedComponents(bits: Array[Long], w: Int, h: Int, max: Int,
+                          withPixels: Boolean = false): Seq[Component] = {
     val n = w * h
     val out = scala.collection.mutable.ArrayBuffer.empty[Component]
     var stack = new Array[Int](256)
-    var sp = 0
-    def push(v: Int): Unit = {
-      if (sp == stack.length) stack = java.util.Arrays.copyOf(stack, sp * 2)
-      stack(sp) = v; sp += 1
-    }
+    var pixels = if (withPixels) new Array[Int](256) else Array.emptyIntArray
     var word = 0
     while (word < bits.length && out.length < max) {
       while (bits(word) != 0L && out.length < max) {
@@ -146,10 +153,17 @@ object Bitmap {
           var xMin = Int.MaxValue; var yMin = Int.MaxValue
           var xMax = Int.MinValue; var yMax = Int.MinValue
           bits(start >>> 6) &= ~(1L << (start & 63))
-          push(start)
+          stack(0) = start
+          var sp = 1
+          var count = 0
           while (sp > 0) {
             sp -= 1
             val p = stack(sp)
+            if (withPixels) {
+              if (count == pixels.length) pixels = java.util.Arrays.copyOf(pixels, count * 2)
+              pixels(count) = p
+              count += 1
+            }
             val px = p % w
             val py = p / w
             if (px < xMin) xMin = px
@@ -166,7 +180,9 @@ object Bitmap {
                   val np = ny * w + nx
                   if (bit(bits, np)) {
                     bits(np >>> 6) &= ~(1L << (np & 63))
-                    push(np)
+                    if (sp == stack.length) stack = java.util.Arrays.copyOf(stack, sp * 2)
+                    stack(sp) = np
+                    sp += 1
                   }
                 }
                 dx += 1
@@ -174,74 +190,8 @@ object Bitmap {
               dy += 1
             }
           }
-          out += Component(xMin, yMin, xMax, yMax)
-        }
-      }
-      word += 1
-    }
-    out.toSeq
-  }
-
-  /** A connected component with its pixel membership (pixel = y*w + x),
-    * emitted in flood-fill pop order. Slow-path variant used by the rotated
-    * min-area-rect path and the `score_mode='slow'` polygon score, which need
-    * per-pixel masks; the hot axis-aligned path keeps the allocation-free
-    * bounding-box-only labeling above.
-    */
-  final case class ComponentPx(xMin: Int, yMin: Int, xMax: Int, yMax: Int, pixels: Array[Int])
-
-  /** 8-connected labeling like connectedComponents, also collecting each
-    * component's pixels. DESTRUCTIVE on `bits`.
-    */
-  def connectedComponentsPixels(bits: Array[Long], w: Int, h: Int, max: Int): Seq[ComponentPx] = {
-    val n = w * h
-    val out = scala.collection.mutable.ArrayBuffer.empty[ComponentPx]
-    var stack = new Array[Int](256)
-    var sp = 0
-    def push(v: Int): Unit = {
-      if (sp == stack.length) stack = java.util.Arrays.copyOf(stack, sp * 2)
-      stack(sp) = v; sp += 1
-    }
-    var word = 0
-    while (word < bits.length && out.length < max) {
-      while (bits(word) != 0L && out.length < max) {
-        val start = (word << 6) + java.lang.Long.numberOfTrailingZeros(bits(word))
-        if (start >= n) { bits(word) = 0L }
-        else {
-          var xMin = Int.MaxValue; var yMin = Int.MaxValue
-          var xMax = Int.MinValue; var yMax = Int.MinValue
-          val px = scala.collection.mutable.ArrayBuffer.empty[Int]
-          bits(start >>> 6) &= ~(1L << (start & 63))
-          push(start)
-          while (sp > 0) {
-            sp -= 1
-            val p = stack(sp)
-            px += p
-            val x = p % w
-            val y = p / w
-            if (x < xMin) xMin = x
-            if (x > xMax) xMax = x
-            if (y < yMin) yMin = y
-            if (y > yMax) yMax = y
-            var dy = -1
-            while (dy <= 1) {
-              var dx = -1
-              while (dx <= 1) {
-                val ny = y + dy
-                val nx = x + dx
-                if (ny >= 0 && ny < h && nx >= 0 && nx < w) {
-                  val np = ny * w + nx
-                  if (bit(bits, np)) {
-                    bits(np >>> 6) &= ~(1L << (np & 63))
-                    push(np)
-                  }
-                }
-                dx += 1
-              }
-              dy += 1
-            }
-          }
-          out += ComponentPx(xMin, yMin, xMax, yMax, px.toArray)
+          out += Component(xMin, yMin, xMax, yMax,
+            if (withPixels) java.util.Arrays.copyOf(pixels, count) else pixels)
         }
       }
       word += 1

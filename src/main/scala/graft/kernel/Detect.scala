@@ -4,7 +4,9 @@ import graft.schema.{DetectConfig, Params, RRegion, Region, Vocab}
 
 /** The three detection stages, re-expressed as pure JVM kernels over decoded
   * payloads. Each returns the stage's region list after its own filters and
-  * the shared sort+dedup tail (Order.finalize).
+  * the shared sort+dedup tail (Order.finalizeBy). Both STD tails, axis-aligned
+  * `std` and rotated `stdRotated`, run over one front (threshold → open →
+  * optional dilation → label → min-extent filter) and take a DetectConfig.
   */
 object Detect {
 
@@ -14,70 +16,41 @@ object Detect {
     case Payload.Candidates(stage, w, h, cands) => Order.finalize(yolo(stage, w, h, cands))
   }
 
-  /** Scene-text detection tail of the DBNet path:
-    * binarize > bin_thresh (/root/reference/cnstd/model/core.py:121) →
-    * morphological open, k = 1 + H/512 (core.py:124-130) →
-    * connected components (/root/reference/cnstd/model/base.py:115-117) →
-    * min-extent filter (base.py:112-122) → rect-mean score + box_thresh
-    * (core.py:92-99, base.py:124-132) → unclip ratio 1.5 (base.py:61,74-98) →
-    * post-unclip min-size (base.py:141-144) → clip → final score/size filters
-    * (core.py:222-225) → REVERSED emission order (core.py:234).
+  /** Scene-text detection tail of the DBNet path, thresholds and sizes from
+    * `cfg` (the reference's detect kwargs, cn_std.py:140-143; the default
+    * config reproduces the frozen fixture semantics exactly):
+    * the shared front (`components`) → score: rect mean (core.py:92-99), or
+    * with `scoreSlow` (the PP `score_mode='slow'` toggle,
+    * db_postprocess.py:47-50) the mean over the filled component
+    * (db_postprocess.py:151-170) → box_thresh (base.py:124-132) → unclip
+    * ratio 1.5 (base.py:61,74-98) → post-unclip min-size (base.py:141-144) →
+    * clip → final score/size filters (core.py:222-225) → REVERSED emission
+    * order (core.py:234).
     */
-  def std(cells: Array[Byte], off: Int, w: Int, h: Int): Seq[Region] =
-    std(cells, off, w, h, scoreSlow = false)
-
-  /** @param scoreSlow the `score_mode` toggle
-    *   (/root/reference/cnstd/ppocr/postprocess/db_postprocess.py:47-50):
-    *   'fast' (default) scores the bounding rect mean; 'slow' scores the mean
-    *   over the filled component polygon (db_postprocess.py:151-170) —
-    *   tighter for non-rectangular components whose bounding rect is mostly
-    *   background.
-    */
-  def std(cells: Array[Byte], off: Int, w: Int, h: Int, scoreSlow: Boolean): Seq[Region] =
-    std(cells, off, w, h, DetectConfig(scoreSlow = scoreSlow))
-
-  /** Config-driven axis-aligned STD tail (thresholds/sizes from cfg — the
-    * reference's detect kwargs, cn_std.py:140-143). The default config
-    * reproduces the frozen fixture semantics exactly.
-    */
-  def std(cells: Array[Byte], off: Int, w: Int, h: Int, cfg: DetectConfig): Seq[Region] = {
-    val bitmap = Bitmap.thresholdBits(cells, off, w * h, cfg.binThresh)
-    val k = 1 + h / 512
-    val opened = Bitmap.morphOpenBits(bitmap, w, h, k)
-    // PP use_dilation (db_postprocess.py:182-187): dilate the MASK the
-    // components are found in; scores still read the raw prob map
-    val mask = if (cfg.useDilation) Bitmap.dilateBits(opened, w, h) else opened
-    val minSizeBox = 1 + h / 512
-    val comps =
-      if (cfg.scoreSlow) Bitmap.connectedComponentsPixels(mask, w, h, Params.MaxCandidates)
-        .map(c => (Bitmap.Component(c.xMin, c.yMin, c.xMax, c.yMax), c.pixels))
-      else Bitmap.connectedComponents(mask, w, h, Params.MaxCandidates).map(c => (c, null))
-    val out = comps.flatMap { case (c, pixels) =>
-      // contour max-min per axis (inclusive extent) must reach min_size_box
-      if (c.xMax - c.xMin < minSizeBox || c.yMax - c.yMin < minSizeBox) None
+  def std(cells: Array[Byte], off: Int, w: Int, h: Int,
+          cfg: DetectConfig = DetectConfig.Default): Seq[Region] = {
+    val out = components(cells, off, w, h, cfg, withPixels = cfg.scoreSlow).flatMap { c =>
+      // boundingRect semantics: x,y,w,h with w = xMax-xMin+1
+      val bx = c.xMin; val by = c.yMin
+      val bw = c.xMax - c.xMin + 1; val bh = c.yMax - c.yMin + 1
+      // fast: score over points [[x,y],[x,y+h],[x+w,y+h],[x+w,y]] → inclusive
+      // rect [x .. x+w] x [y .. y+h], clipped (core.py:92-99)
+      val score =
+        if (cfg.scoreSlow) Rotated.scoreSlow(cells, off, c.pixels)
+        else Bitmap.rectMean(cells, off, w, h, bx, by, bx + bw, by + bh)
+      if (score < cfg.boxThresh) None
       else {
-        // boundingRect semantics: x,y,w,h with w = xMax-xMin+1
-        val bx = c.xMin; val by = c.yMin
-        val bw = c.xMax - c.xMin + 1; val bh = c.yMax - c.yMin + 1
-        // fast: score over points [[x,y],[x,y+h],[x+w,y+h],[x+w,y]] → inclusive
-        // rect [x .. x+w] x [y .. y+h], clipped (core.py:92-99)
-        val score =
-          if (cfg.scoreSlow) Rotated.scoreSlow(cells, off, pixels)
-          else Bitmap.rectMean(cells, off, w, h, bx, by, bx + bw, by + bh)
-        if (score < cfg.boxThresh) None
+        // the axis kernel IS the rotated_bbox=False path → ratio 1.5
+        // (base.py:62) unless explicitly overridden
+        val (ux0, uy0, ux1, uy1) = Geom.unclipRect(bx, by, bx + bw, by + bh,
+          cfg.unclipRatioOverride.getOrElse(Params.UnclipRatio))
+        if (ux1 - ux0 < minSize(h) || uy1 - uy0 < minSize(h)) None
         else {
-          // the axis kernel IS the rotated_bbox=False path → ratio 1.5
-          // (base.py:62) unless explicitly overridden
-          val (ux0, uy0, ux1, uy1) = Geom.unclipRect(bx, by, bx + bw, by + bh,
-            cfg.unclipRatioOverride.getOrElse(Params.UnclipRatio))
-          if (ux1 - ux0 < minSizeBox || uy1 - uy0 < minSizeBox) None
-          else {
-            val (cx0, cy0, cx1, cy1) = Geom.clip(ux0, uy0, ux1, uy1, w, h)
-            // final filters (core.py:222-225): score >= box_score_thresh
-            // (implied by box_thresh at the defaults) + min side filter
-            if (math.min(cx1 - cx0, cy1 - cy0) < cfg.minBoxSize) None
-            else Some(Region(Vocab.StdKind, cx0, cy0, cx1, cy1, score))
-          }
+          val (cx0, cy0, cx1, cy1) = Geom.clip(ux0, uy0, ux1, uy1, w, h)
+          // final filters (core.py:222-225): score >= box_score_thresh
+          // (implied by box_thresh at the defaults) + min side filter
+          if (math.min(cx1 - cx0, cy1 - cy0) < cfg.minBoxSize) None
+          else Some(Region(Vocab.StdKind, cx0, cy0, cx1, cy1, score))
         }
       }
     }
@@ -86,7 +59,7 @@ object Detect {
 
   /** Rotated-path STD tail (`rotated_bbox=True`, the reference DEFAULT —
     * /root/reference/cnstd/cn_std.py:49):
-    * same binarize → open → CCL → min-extent front as std, then per component
+    * the shared front (`components`), then per component
     * (/root/reference/cnstd/model/base.py:100-173 rotated branches):
     * rotated objectness over the filled component (core.py:100-105) →
     * box_thresh filter → min-area rect (`fit_rbbox`, geometry.py:39-41) →
@@ -95,46 +68,59 @@ object Detect {
     * coordinate clip (base.py:166-168: np.clip of x,y,w,h; alpha kept) →
     * REVERSED emission (core.py:234).
     */
-  def stdRotated(cells: Array[Byte], off: Int, w: Int, h: Int): Seq[RRegion] =
-    stdRotated(cells, off, w, h, DetectConfig(rotatedBbox = true))
-
-  def stdRotated(cells: Array[Byte], off: Int, w: Int, h: Int, cfg: DetectConfig): Seq[RRegion] = {
-    val bitmap = Bitmap.thresholdBits(cells, off, w * h, cfg.binThresh)
-    val k = 1 + h / 512
-    val opened = Bitmap.morphOpenBits(bitmap, w, h, k)
-    val mask = if (cfg.useDilation) Bitmap.dilateBits(opened, w, h) else opened
-    val minSizeBox = 1 + h / 512
-    val comps = Bitmap.connectedComponentsPixels(mask, w, h, Params.MaxCandidates)
-    val out = comps.flatMap { c =>
-      if (c.xMax - c.xMin < minSizeBox || c.yMax - c.yMin < minSizeBox) None
+  def stdRotated(cells: Array[Byte], off: Int, w: Int, h: Int,
+                 cfg: DetectConfig = DetectConfig.ReferenceDefault): Seq[RRegion] = {
+    val out = components(cells, off, w, h, cfg, withPixels = true).flatMap { c =>
+      val score = Rotated.scoreRotated(cells, off, c.pixels)
+      if (score < cfg.boxThresh) None
       else {
-        val score = Rotated.scoreRotated(cells, off, c.pixels)
-        if (score < cfg.boxThresh) None
+        val (hx, hy) = Rotated.convexHull(c.pixels, w)
+        val r = Rotated.minAreaRect(hx, hy) // rect extremes: hull == contour
+        // the rotated kernel IS the rotated_bbox=True path → ratio 2.2;
+        // d comes from the TRACED contour polygon (possibly concave), like
+        // the reference's Polygon(contour) — not from the hull (base.py:74-79)
+        val (ctx, cty) = Rotated.traceContour(c.pixels, w)
+        val d = Rotated.offsetDistance(ctx, cty,
+          cfg.unclipRatioOverride.getOrElse(Params.UnclipRatioRotated))
+        val gw = r.w + 2 * d
+        val gh = r.h + 2 * d
+        if (gw < minSize(h) || gh < minSize(h)) None
         else {
-          val (hx, hy) = Rotated.convexHull(c.pixels, w)
-          val r = Rotated.minAreaRect(hx, hy) // rect extremes: hull == contour
-          // the rotated kernel IS the rotated_bbox=True path → ratio 2.2;
-          // d comes from the TRACED contour polygon (possibly concave), like
-          // the reference's Polygon(contour) — not from the hull (base.py:74-79)
-          val (ctx, cty) = Rotated.traceContour(c.pixels, w)
-          val d = Rotated.offsetDistance(ctx, cty,
-            cfg.unclipRatioOverride.getOrElse(Params.UnclipRatioRotated))
-          val gw = r.w + 2 * d
-          val gh = r.h + 2 * d
-          if (gw < minSizeBox || gh < minSizeBox) None
-          else {
-            def clampD(v: Double, hi: Double) = math.min(math.max(v, 0.0), hi)
-            val (cw, ch) = (clampD(gw, w), clampD(gh, h))
-            // final crop-level filters (core.py:222-225): the rotated crop's
-            // dims are int(w), int(h) of the unclipped-expanded rbbox
-            if (math.min(cw.toInt, ch.toInt) < cfg.minBoxSize) None
-            else Some(RRegion(Vocab.StdKind,
-              clampD(r.cx, w), clampD(r.cy, h), cw, ch, r.alpha, score))
-          }
+          def clampD(v: Double, hi: Double) = math.min(math.max(v, 0.0), hi)
+          val (cw, ch) = (clampD(gw, w), clampD(gh, h))
+          // final crop-level filters (core.py:222-225): the rotated crop's
+          // dims are int(w), int(h) of the unclipped-expanded rbbox
+          if (math.min(cw.toInt, ch.toInt) < cfg.minBoxSize) None
+          else Some(RRegion(Vocab.StdKind,
+            clampD(r.cx, w), clampD(r.cy, h), cw, ch, r.alpha, score))
         }
       }
     }
     out.reverse
+  }
+
+  /** min_size_box = 1 + H/512 (cnstd/model/base.py:112-122). */
+  private def minSize(h: Int): Int = 1 + h / 512
+
+  /** binarize > bin_thresh (cnstd/model/core.py:121) →
+    * morphological open, k = 1 + H/512 (core.py:124-130).
+    */
+  private def openedBits(cells: Array[Byte], off: Int, w: Int, h: Int, binThresh: Double): Array[Long] =
+    Bitmap.morphOpenBits(Bitmap.thresholdBits(cells, off, w * h, binThresh), w, h, 1 + h / 512)
+
+  /** The STD front both tails share: openedBits → PP use_dilation of the
+    * MASK the components are found in (db_postprocess.py:182-187; scores
+    * still read the raw prob map) → connected components
+    * (cnstd/model/base.py:115-117) → min-extent filter: the
+    * contour's max-min per axis (inclusive extent) must reach
+    * min_size_box (base.py:112-122).
+    */
+  private def components(cells: Array[Byte], off: Int, w: Int, h: Int,
+                         cfg: DetectConfig, withPixels: Boolean): Seq[Bitmap.Component] = {
+    val opened = openedBits(cells, off, w, h, cfg.binThresh)
+    val mask = if (cfg.useDilation) Bitmap.dilateBits(opened, w, h) else opened
+    Bitmap.connectedComponents(mask, w, h, Params.MaxCandidates, withPixels)
+      .filter(c => c.xMax - c.xMin >= minSize(h) && c.yMax - c.yMin >= minSize(h))
   }
 
   /** Config-driven rendered extraction for one payload: the full per-payload
@@ -155,9 +141,7 @@ object Detect {
         val (cells, off) =
           if (!cfg.autoRotateWholeImage) (cells0, off0)
           else {
-            val bits = Bitmap.thresholdBits(cells0, off0, w * h, cfg.binThresh)
-            val opened = Bitmap.morphOpenBits(bits, w, h, 1 + h / 512)
-            val angle = Rotated.pageAngle(opened, w, h)
+            val angle = Rotated.pageAngle(openedBits(cells0, off0, w, h, cfg.binThresh), w, h)
             if (!Rotated.shouldRotate(angle)) (cells0, off0)
             else {
               val img = Resize.Img(java.util.Arrays.copyOfRange(cells0, off0, off0 + w * h), w, h)
@@ -186,11 +170,10 @@ object Detect {
             crop.w, crop.h, fnv64(crop.cells))
         }
         if (cfg.rotatedBbox) {
-          val rs = stdRotated(cells, off, w, h, cfg)
-          val withRect = rs.map { r =>
+          val withRect = stdRotated(cells, off, w, h, cfg).map { r =>
             val pts = Rotated.sortBoxPoints(
               Rotated.boxPoints(Rotated.RBox(r.cx, r.cy, r.w, r.h, r.alpha)))
-            (r, (pts(0)._1, pts(0)._2, pts(2)._1, pts(2)._2))
+            (r, Order.Rect(pts(0)._1, pts(0)._2, pts(2)._1, pts(2)._2))
           }
           Order.finalizeBy(withRect)(_._2).map { case (r, _) =>
             // rotated crops use extract_rcrops (_utils.py:59-160) on the rbbox

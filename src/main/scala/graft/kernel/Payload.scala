@@ -59,6 +59,9 @@ object Payload {
     val h = bb.getShort().toInt
     stage match {
       case Vocab.StageStd =>
+        // a hostile header must fail here: the kernel sizes its bitset from w * h
+        Image.checkDims("std payload", w, h, 1)
+        require(bytes.length == 7 + w * h, s"std payload: ${bytes.length} bytes for $w x $h cells")
         ProbMap(w, h, bytes, 7)
       case s =>
         val n = bb.getShort().toInt

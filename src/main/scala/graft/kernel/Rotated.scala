@@ -283,7 +283,7 @@ object Rotated {
                 nCt: Int = 20, stdMax: Double = 3.0): Double = {
     // CCL is destructive on its bitset; the caller's bitmap is still needed
     // for box extraction afterwards (core.py computes the angle first)
-    val comps = Bitmap.connectedComponentsPixels(bits.clone(), w, h, Int.MaxValue)
+    val comps = Bitmap.connectedComponents(bits.clone(), w, h, Int.MaxValue, withPixels = true)
     if (comps.isEmpty) return 0.0
     val fitted = comps.map { c =>
       val (hx, hy) = convexHull(c.pixels, w)

@@ -40,8 +40,9 @@ final case class ExtractedDoc(doc_id: String, spans: Seq[OutSpan])
 /** Config surface of the detection stage — the Spark analog of the
   * reference's constructor/detect kwargs (/root/reference/cnstd/cn_std.py:44-143:
   * `rotated_bbox` (DEFAULT true, :49), `auto_rotate_whole_image` (:48),
-  * thresholds/sizes (:140-143)); `unclipRatio` auto-selects 2.2/1.5 by path
-  * like the reference (model/base.py:62) unless overridden; `scoreSlow` is
+  * thresholds/sizes (:140-143)); the unclip ratio is 2.2 on the rotated
+  * path and 1.5 on the axis path like the reference (model/base.py:62)
+  * unless `unclipRatioOverride` is set; `scoreSlow` is
   * the PP `score_mode` toggle (db_postprocess.py:47-50). Defaults reproduce
   * the engine's frozen fixture semantics bit-for-bit.
   */
@@ -65,10 +66,7 @@ final case class DetectConfig(
       * dims + content digest to each media span's text, so the crop patch —
       * straight extract_crops or rotated extract_rcrops, post angle-clf —
       * is part of the row invariant instead of coordinates only. */
-    renderCrops: Boolean = false) {
-  def unclipRatio: Double = unclipRatioOverride.getOrElse(
-    if (rotatedBbox) Params.UnclipRatioRotated else Params.UnclipRatio)
-}
+    renderCrops: Boolean = false)
 
 object DetectConfig {
   /** The engine's frozen default (axis-aligned pipeline, SURVEY §7.5(2)). */

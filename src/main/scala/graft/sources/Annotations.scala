@@ -4,23 +4,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kernel.SplitMix64
 
-/** Training-data annotation sources — the Spark restatement of the
-  * reference's dataset loaders (S4/S5 in SURVEY §2.1):
-  *  - TSV index of `image<TAB>gt` pairs (`read_idx_file`,
-  *    /root/reference/cnstd/datasets/dataset.py:40-84)
-  *  - per-image annotation lines `x1,y1,...,x4,y4,label` with `###` as the
-  *    ignore marker (`StdDataset.load_ann`, dataset.py:86-103)
+/** Training-data annotation source — the Spark restatement of the
+  * reference's annotation loader (S5 in SURVEY §2.1): per-image annotation
+  * lines `x1,y1,...,x4,y4,label` with `###` as the ignore marker
+  * (`StdDataset.load_ann`, cnstd/datasets/dataset.py:86-103).
   *
-  * The files themselves are synthesized deterministically (no external data);
-  * the operators under test are the parse pipelines, which are pure
-  * codegen'd column expressions.
+  * The lines themselves are synthesized deterministically (no external data);
+  * the operator under test is the parse pipeline, which is a pure codegen'd
+  * column expression.
   */
 object Annotations {
 
-  /** Deterministic TSV index + annotation lines, seeded per image. */
-  def genIndexLines(seed: Long, n: Int): Seq[String] =
-    (0 until n).map(i => f"img_$i%05d.jpg\tgt_$i%05d.txt")
-
+  /** Deterministic annotation lines, seeded per image. */
   def genAnnLines(seed: Long, img: Int): Seq[String] = {
     val rng = SplitMix64.forKey(seed, s"ann-$img")
     val nBoxes = 1 + rng.nextInt(6)
@@ -30,14 +25,6 @@ object Annotations {
       val label = if (rng.nextInt(5) == 0) "###" else s"w${rng.nextInt(1000)}"
       s"$x,$y,${x + w},$y,${x + w},${y + h},$x,${y + h},$label"
     }
-  }
-
-  /** Parse the TSV index (S4): split into (img, gt) pairs. */
-  def parseIndex(spark: SparkSession, seed: Long, n: Int): DataFrame = {
-    import spark.implicits._
-    genIndexLines(seed, n).toDF("line")
-      .select(split(col("line"), "\t").as("p"))
-      .select(col("p")(0).as("img"), col("p")(1).as("gt"))
   }
 
   /** Parse annotation lines (S5): 8 polygon coords + label, `###` = ignore.

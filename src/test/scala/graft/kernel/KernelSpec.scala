@@ -1,7 +1,7 @@
 package graft.kernel
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.schema.{Params, Region, Vocab}
+import graft.schema.{DetectConfig, Params, Region, Vocab}
 
 class GeomSpec extends AnyFunSuite {
   test("iou of identical boxes is 1, disjoint is 0") {
@@ -35,6 +35,7 @@ class GeomSpec extends AnyFunSuite {
 }
 
 class BitmapSpec extends AnyFunSuite {
+  private def box(c: Bitmap.Component) = (c.xMin, c.yMin, c.xMax, c.yMax)
   private def mk(w: Int, h: Int, boxes: Seq[(Int, Int, Int, Int)], v: Int = 240): Array[Byte] = {
     val cells = new Array[Byte](w * h)
     for ((x0, y0, x1, y1) <- boxes; y <- y0 until y1; x <- x0 until x1)
@@ -51,15 +52,23 @@ class BitmapSpec extends AnyFunSuite {
 
   test("connected components finds separate blobs in row-major order") {
     val bits = Bitmap.thresholdBits(mk(64, 64, Seq((5, 5, 15, 12), (40, 40, 55, 50))), 0, 64 * 64, 0.3)
-    val comps = Bitmap.connectedComponents(bits, 64, 64, 1000)
-    assert(comps == Seq(Bitmap.Component(5, 5, 14, 11), Bitmap.Component(40, 40, 54, 49)))
+    val comps = Bitmap.connectedComponents(bits.clone(), 64, 64, 1000, withPixels = true)
+    assert(comps.map(box) == Seq((5, 5, 14, 11), (40, 40, 54, 49)))
+    // each component carries exactly its blob's pixels
+    assert(comps.map(_.pixels.sorted.toSeq) == Seq(
+      for (y <- 5 until 12; x <- 5 until 15) yield y * 64 + x,
+      for (y <- 40 until 50; x <- 40 until 55) yield y * 64 + x))
+    // without pixels: the same boxes, empty pixel arrays
+    val boxesOnly = Bitmap.connectedComponents(bits, 64, 64, 1000)
+    assert(boxesOnly.map(box) == comps.map(box) && boxesOnly.forall(_.pixels.isEmpty))
   }
 
   test("8-connectivity merges diagonal touch") {
     val bits = Bitmap.thresholdBits(mk(16, 16, Seq((0, 0, 3, 3), (3, 3, 6, 6))), 0, 256, 0.3)
-    val comps = Bitmap.connectedComponents(bits, 16, 16, 1000)
+    val comps = Bitmap.connectedComponents(bits, 16, 16, 1000, withPixels = true)
     assert(comps.length == 1)
-    assert(comps.head == Bitmap.Component(0, 0, 5, 5))
+    assert(box(comps.head) == ((0, 0, 5, 5)))
+    assert(comps.head.pixels.length == 18)
   }
 
   test("morphOpen k=2 removes 1px spurs, keeps solid blobs") {
@@ -88,28 +97,28 @@ class OrderSpec extends AnyFunSuite {
     val tr = r(20, 0, 30, 10)
     val bl = r(0, 20, 10, 30)
     val br = r(20, 20, 30, 30)
-    assert(Order.sortBoxes(Seq(br, tl, bl, tr)) == Seq(tl, tr, bl, br))
+    assert(Order.sortBoxes(Seq(br, tl, bl, tr))(Order.rectOf) == Seq(tl, tr, bl, br))
   }
 
   test("y-overlap > 0.5 orders by x even when y0 differs") {
     val a = r(50, 0, 60, 20) // starts higher but to the right
     val b = r(0, 5, 10, 25)  // overlap height 15 / min(20,20) = 0.75 > 0.5
-    assert(Order.sortBoxes(Seq(a, b)) == Seq(b, a))
+    assert(Order.sortBoxes(Seq(a, b))(Order.rectOf) == Seq(b, a))
   }
 
   test("dedup drops the more-covered box; earlier wins ties") {
     val big = r(0, 0, 10, 10)
     val small = r(0, 0, 5, 5)
-    assert(Order.dedupBoxes(Seq(big, small)) == Seq(big))
-    assert(Order.dedupBoxes(Seq(small, big)) == Seq(big))
+    assert(Order.dedupBoxes(Seq(big, small))(Order.rectOf) == Seq(big))
+    assert(Order.dedupBoxes(Seq(small, big))(Order.rectOf) == Seq(big))
     val dup = r(0, 0, 10, 10)
-    assert(Order.dedupBoxes(Seq(big, dup)) == Seq(big)) // equal coverage: first kept
+    assert(Order.dedupBoxes(Seq(big, dup))(Order.rectOf) == Seq(big)) // equal coverage: first kept
   }
 
   test("dedup keeps boxes below threshold") {
     val a = r(0, 0, 10, 10)
     val b = r(9, 9, 20, 20) // inter 1, v = 1/100 < 0.1
-    assert(Order.dedupBoxes(Seq(a, b)) == Seq(a, b))
+    assert(Order.dedupBoxes(Seq(a, b))(Order.rectOf) == Seq(a, b))
   }
 }
 
@@ -182,6 +191,20 @@ class DetectSpec extends AnyFunSuite {
       case Payload.Candidates(stage, w, h, got) =>
         assert(stage == Vocab.StageLayout && w == 100 && h == 200 && got == cs)
       case other => fail(s"unexpected $other")
+    }
+    // hostile STD headers (negative, zero, oversized, truncated or padded
+    // body) fail in decode, before any w * h allocation
+    def header(w: Int, h: Int, body: Int): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(7 + body)
+      bb.put(Payload.Magic).put(Payload.Version).put(Vocab.StageStd.toByte)
+      bb.putShort(w.toShort).putShort(h.toShort)
+      bb.array()
+    }
+    Seq(header(-200, 100, 64), header(32, -16, 64), header(0, 16, 0), header(32, 0, 0),
+        header(32767, 32767, 64), header(32, 16, 32 * 16 - 1), header(32, 16, 32 * 16 + 1)
+    ).foreach { p =>
+      intercept[IllegalArgumentException](Payload.decode(p))
+      assert(Detect.extractRenderedSafe(p, DetectConfig.Default) == ((Nil, true)))
     }
   }
 

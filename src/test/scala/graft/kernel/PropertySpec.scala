@@ -22,27 +22,43 @@ class PropertySpec extends AnyFunSuite {
 
   private val regionsGen: Gen[List[Region]] = Gen.listOfN(12, regionGen)
 
+  /** The rotated path's effective rects: non-integer corners, some boxes
+    * thinner than the comparator's 1px height floor.
+    */
+  private val rectsGen: Gen[List[Order.Rect]] = Gen.listOfN(12, for {
+    x0 <- Gen.choose(0.0, 200.0)
+    y0 <- Gen.choose(0.0, 200.0)
+    w <- Gen.choose(0.1, 100.0)
+    h <- Gen.choose(0.1, 100.0)
+  } yield Order.Rect(x0, y0, x0 + w, y0 + h))
+
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(1234L + i)))
 
-  test("sortBoxes is a permutation") {
-    samples(regionsGen, 200).foreach { rs =>
-      assert(Order.sortBoxes(rs).sortBy(r => (r.x0, r.y0, r.x1, r.y1, r.score)) ==
-        rs.sortBy(r => (r.x0, r.y0, r.x1, r.y1, r.score)))
+  private def isPermutation[T](rs: Seq[T])(rect: T => Order.Rect): Unit = {
+    val out = Order.sortBoxes(rs)(rect)
+    assert(out.length == rs.length && out.diff(rs).isEmpty, s"$out is not a permutation of $rs")
+  }
+
+  private def isIdempotentSubsequence[T](rs: Seq[T])(rect: T => Order.Rect): Unit = {
+    val out = Order.dedupBoxes(rs)(rect)
+    var i = 0
+    out.foreach { r =>
+      val j = rs.indexWhere(_ == r, i)
+      assert(j >= i)
+      i = j + 1
     }
+    assert(Order.dedupBoxes(out)(rect) == out)
+  }
+
+  test("sortBoxes is a permutation") {
+    samples(regionsGen, 200).foreach(isPermutation(_)(Order.rectOf))
+    samples(rectsGen, 200).foreach(isPermutation(_)(identity))
   }
 
   test("dedup output is a subsequence of its input and idempotent") {
-    samples(regionsGen, 200).foreach { rs =>
-      val out = Order.dedupBoxes(rs)
-      var i = 0
-      out.foreach { r =>
-        val j = rs.indexWhere(_ == r, i)
-        assert(j >= i)
-        i = j + 1
-      }
-      assert(Order.dedupBoxes(out) == out)
-    }
+    samples(regionsGen, 200).foreach(isIdempotentSubsequence(_)(Order.rectOf))
+    samples(rectsGen, 200).foreach(isIdempotentSubsequence(_)(identity))
   }
 
   test("extraction is deterministic and emits regions within payload bounds") {
@@ -110,7 +126,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("surviving dedup pairs: the reference keep-rule no longer fires") {
     samples(regionsGen, 200).foreach { rs =>
-      val out = Order.dedupBoxes(rs).toIndexedSeq
+      val out = Order.dedupBoxes(rs)(Order.rectOf).toIndexedSeq
       for (i <- out.indices; j <- i + 1 until out.length) {
         val v1 = Geom.partialOverlap(out(i), out(j))
         val v2 = Geom.partialOverlap(out(j), out(i))

@@ -1,7 +1,7 @@
 package graft.kernel
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.schema.Params
+import graft.schema.{DetectConfig, Params}
 
 /** Fixtures for the rotated-box path (`rotated_bbox=True`, the reference
   * default) mirroring /root/reference/cnstd/model/base.py:128-173, plus the
@@ -101,8 +101,8 @@ class RotatedSpec extends AnyFunSuite {
     // box_thresh 0.6 while the polygon mean is 1.0
     fillRect(cells, w, 10, 8, 29, 11, 255)
     fillRect(cells, w, 10, 8, 13, 27, 255)
-    assert(Detect.std(cells, 0, w, h, scoreSlow = false).isEmpty)
-    val slow = Detect.std(cells, 0, w, h, scoreSlow = true)
+    assert(Detect.std(cells, 0, w, h, DetectConfig(scoreSlow = false)).isEmpty)
+    val slow = Detect.std(cells, 0, w, h, DetectConfig(scoreSlow = true))
     assert(slow.length == 1)
     assert(slow.head.score == 1.0)
   }
@@ -114,7 +114,7 @@ class RotatedSpec extends AnyFunSuite {
     val cells = blank(w, h)
     fillRect(cells, w, 10, 8, 29, 19, 255)
     val bits = Bitmap.thresholdBits(cells, 0, w * h, 0.3)
-    val comp = Bitmap.connectedComponentsPixels(bits, w, h, 10).head
+    val comp = Bitmap.connectedComponents(bits, w, h, 10, withPixels = true).head
     val (cxs, cys) = Rotated.traceContour(comp.pixels, w)
     assert(math.abs(Rotated.polygonArea(cxs, cys) - 19.0 * 11.0) < 1e-9)
     assert(math.abs(Rotated.perimeter(cxs, cys) - 60.0) < 1e-9)
@@ -126,7 +126,7 @@ class RotatedSpec extends AnyFunSuite {
     fillRect(cells2, w, 10, 10, 29, 29, 255)
     fillRect(cells2, w, 18, 10, 29, 21, 0) // notch: pixels x>=18, y<=21 removed
     val bits2 = Bitmap.thresholdBits(cells2, 0, w * h, 0.3)
-    val comp2 = Bitmap.connectedComponentsPixels(bits2, w, h, 10).head
+    val comp2 = Bitmap.connectedComponents(bits2, w, h, 10, withPixels = true).head
     val (lx, ly) = Rotated.traceContour(comp2.pixels, w)
     val contourArea = Rotated.polygonArea(lx, ly)
     val (hx, hy) = Rotated.convexHull(comp2.pixels, w)
@@ -150,7 +150,7 @@ class RotatedSpec extends AnyFunSuite {
     val cells3 = blank(w, h)
     fillRect(cells3, w, 5, 5, 14, 5, 255)
     val bits3 = Bitmap.thresholdBits(cells3, 0, w * h, 0.3)
-    val comp3 = Bitmap.connectedComponentsPixels(bits3, w, h, 10).head
+    val comp3 = Bitmap.connectedComponents(bits3, w, h, 10, withPixels = true).head
     val (dx, dy) = Rotated.traceContour(comp3.pixels, w)
     assert(Rotated.polygonArea(dx, dy) == 0.0)
     assert(math.abs(Rotated.perimeter(dx, dy) - 18.0) < 1e-9) // 9 out + 9 back

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.SparkSpec
 import graft.schema._
+import graft.kernel.Payload
 
 /** The end-to-end correctness gate: the distributed pipeline must match the
   * single-threaded oracle per row on (kind, text, media_ref, order) — the
@@ -80,16 +81,21 @@ class ExtractE2ESpec extends SparkSpec {
     import s.implicits._
     val docs = Seq(
       Doc("doc-a", Seq(RawSpan("text", "hello", "", 0), RawSpan("media", "", "m-bad", 1))),
-      Doc("doc-b", Seq(RawSpan("media", "", "m-missing", 0)))).toDS()
-    val media = Seq(Media("m-bad", Array[Byte](1, 2, 3))).toDS() // bad magic
+      Doc("doc-b", Seq(RawSpan("media", "", "m-missing", 0))),
+      Doc("doc-c", Seq(RawSpan("media", "", "m-neg", 0)))).toDS()
+    // bad magic, and an STD header claiming w = -200 over a 64-byte body
+    val negWidth = Array[Byte](Payload.Magic, Payload.Version, Vocab.StageStd.toByte,
+      0xff.toByte, 0x38, 0, 100) ++ new Array[Byte](64)
+    val media = Seq(Media("m-bad", Array[Byte](1, 2, 3)), Media("m-neg", negWidth)).toDS()
     configs.foreach { cfg =>
       val (ds, corrupt) = Extract.runWithMetrics(docs, media, cfg)
       val out = ds.collect().map(d => d.doc_id -> d.spans).toMap
       assert(out("doc-a") == Seq(OutSpan("text", "hello", "", 0)))
       assert(out.contains("doc-b"), "doc with only an orphaned media span must still be emitted")
       assert(out("doc-b").isEmpty)
-      // one corrupt payload plus one missing payload
-      assert(corrupt.value == 2, s"corrupt/missing counter under $cfg")
+      assert(out("doc-c").isEmpty)
+      // two corrupt payloads plus one missing payload
+      assert(corrupt.value == 3, s"corrupt/missing counter under $cfg")
     }
   }
 
