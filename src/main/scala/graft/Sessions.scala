@@ -33,8 +33,8 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       // unfiltered count()/min/max over parquet read row-group METADATA
       // instead of scanning rows (off by default). Several operators pay a
-      // sizing count per invocation (the mm* oracle-side keys, sim2/sim5's
-      // nRows, ctn3's bloom sizing feed): value-identical, and at 100 TB a
+      // sizing count per invocation (the side-table key n in
+      // MultimodalOps.decoded, sim2/sim5's nRows, ctn3's bloom sizing feed): value-identical, and at 100 TB a
       // metadata count is the difference between a footer read and a full
       // corpus scan.
       .config("spark.sql.parquet.aggregatePushdown", "true")

@@ -37,15 +37,15 @@ object ExtractOps {
 
   private def writeOracleSide(spark: SparkSession, n: Long, path: String,
                               one: Long => graft.schema.ExtractedDoc): Unit = {
-    if (OracleSide.exists(path)) return
     import spark.implicits._
-    spark.range(n)
-      .flatMap { i =>
-        val d = one(i)
-        d.spans.map(s => (d.doc_id, s.kind, s.text, s.media_ref, s.order))
-      }
-      .toDF("doc_id", "kind", "text", "media_ref", "span_order")
-      .write.mode("overwrite").parquet(path)
+    OracleSide.ensure(path) {
+      spark.range(n)
+        .flatMap { i =>
+          val d = one(i)
+          d.spans.map(s => (d.doc_id, s.kind, s.text, s.media_ref, s.order))
+        }
+        .toDF("doc_id", "kind", "text", "media_ref", "span_order")
+    }
   }
 
   /** Full pipeline, flattened to one row per output span (deterministic

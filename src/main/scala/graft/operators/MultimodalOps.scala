@@ -1,13 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{concat, lit}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, concat, lit}
 import graft.kernel.{Bitmap, Detect, Image, Order, Payload, Resize}
 import graft.pipeline.GenData
 
 /** Multimodal-column plumbing: media as opaque `binary` columns with typed
-  * metadata, decoded inside batched mapPartitions — exactly how a
+  * metadata, synthesized and decoded per row — exactly how a
   * Pandas-UDF/`mapInPandas` decode stage sits in this plan on a cluster.
+  * Every mm query is [[decoded]] plus its own tail.
   *
   * Two decode paths, both real:
   *  - mm1 decodes the ENGINE's tensor payload codec (graft.kernel.Payload —
@@ -46,11 +48,24 @@ object MultimodalOps {
     var acc = 0L
     var i = 0
     while (i < gray.length) {
-      acc = (acc * DedupOps.HashB1 + (gray(i) & 0xff)) % DedupOps.HashM1
+      acc = fold(acc, gray(i) & 0xff)
       i += 1
     }
     acc
   }
+
+  /** One step of the B1/M1 polynomial digest every mm kernel folds. */
+  private def fold(acc: Long, v: Long): Long = (acc * DedupOps.HashB1 + v) % DedupOps.HashM1
+
+  /** Box corners folded in (x0, y0, x1, y1) order, each shifted by one. */
+  private def foldBox(acc: Long, x0: Int, y0: Int, x1: Int, y1: Int): Long =
+    fold(fold(fold(fold(acc, x0 + 1), y0 + 1), x1 + 1), y1 + 1)
+
+  /** Luma of a decoded image, expanding gray to 3 channels first (the
+    * reference's GRAY2BGR branch).
+    */
+  private def lumaOf(px: Image.Pixmap): Array[Byte] =
+    Image.gray(if (px.channels == 1) Image.grayToRgb(px) else px)
 
   /** Parse a real raster file (BMP/PGM/PPM), expand gray to 3 channels
     * (the reference's GRAY2BGR branch), take the luma back out, and run the
@@ -59,8 +74,7 @@ object MultimodalOps {
     */
   private def decodeImageMeta(r: MediaRow): ImageMeta = {
     val px = Image.decode(r.payload)
-    val expanded = if (px.channels == 1) Image.grayToRgb(px) else px
-    val luma = Image.gray(expanded)
+    val luma = lumaOf(px)
     // the full STD tail including the sort+dedup finalize — identical to what
     // extract() runs on a tensor payload of the same cells (ImageSpec parity)
     val regions = Order.finalize(Detect.std(luma, 0, px.width, px.height))
@@ -85,7 +99,7 @@ object MultimodalOps {
     */
   private def detectOnImage(r: MediaRow): ImageDetectRow = {
     val px = Image.decode(r.payload)
-    val luma = Image.gray(if (px.channels == 1) Image.grayToRgb(px) else px)
+    val luma = lumaOf(px)
     val (rh, rw, ratioH, ratioW) = Resize.detResizeType0(px.height, px.width, 160, "resize_long")
     val resized = Resize.bilinear(Resize.Img(luma, px.width, px.height), rw, rh)
     val regions = Order.finalize(Detect.std(resized.cells, 0, rw, rh))
@@ -97,9 +111,7 @@ object MultimodalOps {
       val y0 = clip(g.y0 / ratioH, px.height - 1)
       val x1 = clip(g.x1 / ratioW, px.width - 1)
       val y1 = clip(g.y1 / ratioH, px.height - 1)
-      Seq(x0, y0, x1, y1).foreach { c =>
-        digest = (digest * DedupOps.HashB1 + c + 1) % DedupOps.HashM1
-      }
+      digest = foldBox(digest, x0, y0, x1, y1)
       area += (x1 - x0 + 1).toLong * (y1 - y0 + 1).toLong
     }
     ImageDetectRow(r.media_ref, px.width, px.height, rw, rh, regions.length, digest, area)
@@ -126,10 +138,7 @@ object MultimodalOps {
     val nCls = graft.schema.Vocab.categories(stage).length
     comps.map { c =>
       val conf = Bitmap.rectMean(luma, 0, w, h, c.xMin, c.yMin, c.xMax, c.yMax)
-      var g = 0L
-      Seq(c.xMin, c.yMin, c.xMax, c.yMax).foreach { v =>
-        g = (g * DedupOps.HashB1 + v + 1) % DedupOps.HashM1
-      }
+      val g = foldBox(0L, c.xMin, c.yMin, c.xMax, c.yMax)
       val cls =
         if (stage == graft.schema.Vocab.StageLayout) 1 + (g % (nCls - 1)).toInt
         else (g % nCls).toInt
@@ -147,7 +156,7 @@ object MultimodalOps {
     */
   private def detectStages(r: MediaRow): Seq[StageDetectRow] = {
     val px = Image.decode(r.payload)
-    val luma = Image.gray(if (px.channels == 1) Image.grayToRgb(px) else px)
+    val luma = lumaOf(px)
     Seq(graft.schema.Vocab.StageStd, graft.schema.Vocab.StageMfd,
         graft.schema.Vocab.StageLayout).map { stage =>
       val (nCands, regions) =
@@ -161,10 +170,8 @@ object MultimodalOps {
       var bd = 0L
       var area = 0L
       regions.foreach { g =>
-        g.kind.foreach(ch => kd = (kd * DedupOps.HashB1 + ch) % DedupOps.HashM1)
-        Seq(g.x0, g.y0, g.x1, g.y1).foreach { c =>
-          bd = (bd * DedupOps.HashB1 + c + 1) % DedupOps.HashM1
-        }
+        g.kind.foreach(ch => kd = fold(kd, ch))
+        bd = foldBox(bd, g.x0, g.y0, g.x1, g.y1)
         area += (g.x1 - g.x0 + 1).toLong * (g.y1 - g.y0 + 1).toLong
       }
       StageDetectRow(r.media_ref, stage, px.width, px.height, nCands,
@@ -185,9 +192,8 @@ object MultimodalOps {
   private def quarantineMeta(r: MediaRow): QuarantineRow =
     Image.decodeSafe(r.payload) match {
       case Right(px) =>
-        val luma = Image.gray(if (px.channels == 1) Image.grayToRgb(px) else px)
         QuarantineRow(r.media_ref, "ok", "", px.format, px.width, px.height,
-          pixHash(luma), r.payload.length)
+          pixHash(lumaOf(px)), r.payload.length)
       case Left(f) =>
         QuarantineRow(r.media_ref, "quarantined", f.kind, "", -1, -1, 0L, r.payload.length)
     }
@@ -201,36 +207,39 @@ object MultimodalOps {
 
   def imageDetectOracleTable(dir: String, n: Long): String = OracleSide.path("mm3_oracle_det", dir, n)
 
-  /** Attach a synthetic binary payload to every document row and extract
-    * typed metadata + region counts inside batched mapPartitions.
-    *
-    * Driver-visible value check (round-3): the same rows are ALSO computed
-    * sequentially on the driver — plain Scala loop, no mapPartitions/batching
-    * machinery — and written as a side parquet for the DuckDB compare. The
-    * collect is bounded: one short string per document at sf scale (the check
-    * corpus), never the production path.
+  /** The one mm query shape over refs `prefix` + doc_id. The side table is
+    * a plain sequential driver loop over the sorted refs (bounded: one short
+    * string per document of the check corpus, never the production path).
+    * The distributed side spreads the NARROW refs, then synthesizes and
+    * decodes each payload, so only ref strings shuffle. `spread` is
+    * [[byRef]] for the map-only queries that end in `sortWithinPartitions`
+    * (a final orderBy's range sampler re-ran the decode), `Par.spread` for
+    * the tails that reshuffle anyway (window, band join).
     */
-  def mediaMeta(spark: SparkSession, dir: String): DataFrame = {
+  private def decoded[R <: Product : TypeTag](spark: SparkSession, dir: String, prefix: String,
+      sidePath: Long => String, payloadOf: String => Array[Byte],
+      spread: Dataset[String] => Dataset[String])(decode: MediaRow => Seq[R]): DataFrame = {
     import spark.implicits._
     val refs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(concat(lit("m-doc-"), $"doc_id").as("media_ref"))
+      .select(concat(lit(prefix), $"doc_id").as("media_ref"))
       .as[String]
-    val side = oracleTable(dir, refs.count())
-    if (!OracleSide.exists(side)) {
-      val seq = refs.collect().sorted.toSeq
-        .map(ref => decodeMeta(MediaRow(ref, GenData.payload(GenData.DefaultSeed, ref))))
-      spark.createDataFrame(seq).write.mode("overwrite").parquet(side)
+    val synth = (ref: String) => MediaRow(ref, payloadOf(ref))
+    OracleSide.ensure(sidePath(refs.count())) {
+      spark.createDataFrame(refs.collect().sorted.toSeq.map(synth).flatMap(decode))
     }
-    // range-spread on the sort key (Par scaladoc): synth+decode run once —
-    // the final orderBy's range sampler re-executed them before — and the
-    // exchange moves short ref strings, never payloads
-    val media = Par.rangeSpread(refs.toDF(), $"media_ref")
-      .as[String].map(ref => MediaRow(ref, GenData.payload(GenData.DefaultSeed, ref)))
-    media
-      .mapPartitions(_.grouped(graft.schema.Params.BatchSize).flatMap(_.map(decodeMeta)))
-      .toDF()
-      .sortWithinPartitions("media_ref")
+    spread(refs).map(synth).flatMap(decode).toDF()
   }
+
+  private def byRef(refs: Dataset[String]): Dataset[String] = Par.rangeSpread(refs, col("media_ref"))
+
+  /** mm1: attach a synthetic binary payload to every document row and
+    * extract typed metadata + region counts, value-checked against the
+    * sequential driver-side oracle.
+    */
+  def mediaMeta(spark: SparkSession, dir: String): DataFrame =
+    decoded(spark, dir, "m-doc-", oracleTable(dir, _),
+      GenData.payload(GenData.DefaultSeed, _), byRef)(r => Seq(decodeMeta(r)))
+      .sortWithinPartitions("media_ref")
 
   /** mm2: the same plumbing over REAL image-format payloads (BMP/PGM/PPM
     * bytes generated per ref), decoded by the pure-JVM parser and value-
@@ -238,79 +247,34 @@ object MultimodalOps {
     * count the detection kernel finds on the decoded pixels — against a
     * sequential driver-side oracle, like mm1.
     */
-  def imageMeta(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val refs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(concat(lit("img-doc-"), $"doc_id").as("media_ref"))
-      .as[String]
-    val side = imageOracleTable(dir, refs.count())
-    if (!OracleSide.exists(side)) {
-      val seq = refs.collect().sorted.toSeq
-        .map(ref => decodeImageMeta(MediaRow(ref, GenData.imagePayload(GenData.DefaultSeed, ref))))
-      spark.createDataFrame(seq).write.mode("overwrite").parquet(side)
-    }
-    // range-spread BEFORE the payload synth/decode (Par scaladoc): only the
-    // short ref strings shuffle, the CPU-dense work lands evenly on every
-    // core, and the decode runs ONCE (the orderBy's range sampler
-    // re-executed the whole synth+decode pass before)
-    val media = Par.rangeSpread(refs.toDF(), $"media_ref")
-      .as[String].map(ref => MediaRow(ref, GenData.imagePayload(GenData.DefaultSeed, ref)))
-    media
-      .mapPartitions(_.grouped(graft.schema.Params.BatchSize).flatMap(_.map(decodeImageMeta)))
-      .toDF()
+  def imageMeta(spark: SparkSession, dir: String): DataFrame =
+    decoded(spark, dir, "img-doc-", imageOracleTable(dir, _),
+      GenData.imagePayload(GenData.DefaultSeed, _), byRef)(r => Seq(decodeImageMeta(r)))
       .sortWithinPartitions("media_ref")
-  }
 
   /** mm3: real decode + resize policy + detection + coordinate
-    * de-normalization per image, distributed via the same batched
-    * mapPartitions plumbing and value-checked (dims, resized dims, region
-    * count, box-coordinate digest, total area) against a sequential
-    * driver-side oracle.
+    * de-normalization per image, distributed via the same plumbing and
+    * value-checked (dims, resized dims, region count, box-coordinate digest,
+    * total area) against a sequential driver-side oracle.
     */
-  def imageDetect(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val refs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(concat(lit("img-doc-"), $"doc_id").as("media_ref"))
-      .as[String]
-    val side = imageDetectOracleTable(dir, refs.count())
-    if (!OracleSide.exists(side)) {
-      val seq = refs.collect().sorted.toSeq
-        .map(ref => detectOnImage(MediaRow(ref, GenData.imagePayload(GenData.DefaultSeed, ref))))
-      spark.createDataFrame(seq).write.mode("overwrite").parquet(side)
-    }
-    Par.rangeSpread(refs.toDF(), $"media_ref")
-      .as[String].map(ref => MediaRow(ref, GenData.imagePayload(GenData.DefaultSeed, ref)))
-      .mapPartitions(_.grouped(graft.schema.Params.BatchSize).flatMap(_.map(detectOnImage)))
-      .toDF()
+  def imageDetect(spark: SparkSession, dir: String): DataFrame =
+    decoded(spark, dir, "img-doc-", imageDetectOracleTable(dir, _),
+      GenData.imagePayload(GenData.DefaultSeed, _), byRef)(r => Seq(detectOnImage(r)))
       .sortWithinPartitions("media_ref")
-  }
 
   def stageDetectOracleTable(dir: String, n: Long): String = OracleSide.path("mm5_oracle_stages", dir, n)
 
   /** mm5: every detection stage the reference runs — STD, MFD, and layout —
     * driven over GENUINELY DECODED pixels (any supported raster format), one
-    * output row per (image, stage), via the same batched mapPartitions
-    * plumbing and a sequential driver-side oracle. This closes the coverage
-    * gap where the YOLO tails only ever saw synthetic candidate payloads
-    * (x1–x4) while real bytes only ever reached the STD tail (mm3).
+    * output row per (image, stage), via the same plumbing and a sequential
+    * driver-side oracle. This closes the coverage gap where the YOLO tails
+    * only ever saw synthetic candidate payloads (x1–x4) while real bytes
+    * only ever reached the STD tail (mm3).
     */
-  def imageDetectStages(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val refs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(concat(lit("img-doc-"), $"doc_id").as("media_ref"))
-      .as[String]
-    val side = stageDetectOracleTable(dir, refs.count())
-    if (!OracleSide.exists(side)) {
-      val seq = refs.collect().sorted.toSeq
-        .flatMap(ref => detectStages(MediaRow(ref, GenData.imagePayload(GenData.DefaultSeed, ref))))
-      spark.createDataFrame(seq).write.mode("overwrite").parquet(side)
-    }
-    Par.rangeSpread(refs.toDF(), $"media_ref")
-      .as[String].map(ref => MediaRow(ref, GenData.imagePayload(GenData.DefaultSeed, ref)))
-      .mapPartitions(_.grouped(graft.schema.Params.BatchSize).flatMap(_.flatMap(detectStages)))
-      .toDF()
+  def imageDetectStages(spark: SparkSession, dir: String): DataFrame =
+    decoded(spark, dir, "img-doc-", stageDetectOracleTable(dir, _),
+      GenData.imagePayload(GenData.DefaultSeed, _), byRef)(detectStages)
       .sortWithinPartitions("media_ref", "stage")
-  }
 
   final case class PhashRow(media_ref: String, format: String, width: Int,
                             height: Int, phash: String, pix_hash: Long)
@@ -320,8 +284,7 @@ object MultimodalOps {
     */
   private def phashRow(r: MediaRow): PhashRow = {
     val px = Image.decode(r.payload)
-    val expanded = if (px.channels == 1) Image.grayToRgb(px) else px
-    val luma = Image.gray(expanded)
+    val luma = lumaOf(px)
     PhashRow(r.media_ref, px.format, px.width, px.height,
       graft.kernel.Phash.hex(graft.kernel.Phash.hash(luma, px.width, px.height)),
       pixHash(luma))
@@ -339,8 +302,8 @@ object MultimodalOps {
     * format, the perceptual hash, the byte-level pixel hash, and the dedup
     * verdict over the phash group (`n_same`, keeper = min ref, `is_dup`).
     *
-    * Scale shape: decode + hash ride the batched mapPartitions plumbing
-    * (CPU-dense, spread BEFORE synth); the dedup verdict is one window over
+    * Scale shape: decode + hash ride the [[decoded]] plumbing (CPU-dense,
+    * spread BEFORE synth); the dedup verdict is one window over
     * the HIGH-cardinality phash key — one shuffle, no join, no skew (a
     * pathological all-same-image corpus would hot-key exactly like dd1's
     * exact-dup groupBy and gets the same salting answer). The driver-side
@@ -349,22 +312,10 @@ object MultimodalOps {
     * the window semantics are value-checked cross-engine too.
     */
   def imagePhashDupes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{col, count, min, when}
-    val refs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(concat(lit("pdup-doc-"), $"doc_id").as("media_ref"))
-      .as[String]
-    val side = phashOracleTable(dir, refs.count())
-    if (!OracleSide.exists(side)) {
-      val seq = refs.collect().sorted.toSeq
-        .map(ref => phashRow(MediaRow(ref, GenData.nearDupImagePayload(GenData.DefaultSeed, ref))))
-      spark.createDataFrame(seq).write.mode("overwrite").parquet(side)
-    }
-    val rows = Par.spread(refs)
-      .map(ref => MediaRow(ref, GenData.nearDupImagePayload(GenData.DefaultSeed, ref)))
-      .mapPartitions(_.grouped(graft.schema.Params.BatchSize).flatMap(_.map(phashRow)))
-      .toDF()
+    import org.apache.spark.sql.functions.{count, min, when}
+    val rows = decoded(spark, dir, "pdup-doc-", phashOracleTable(dir, _),
+      GenData.nearDupImagePayload(GenData.DefaultSeed, _), Par.spread[String])(r => Seq(phashRow(r)))
     val w = Window.partitionBy("phash")
     rows
       .withColumn("n_same", count(lit(1)).over(w))
@@ -377,9 +328,7 @@ object MultimodalOps {
 
   private def phashBitsRow(r: MediaRow): PhashBitsRow = {
     val px = Image.decode(r.payload)
-    val expanded = if (px.channels == 1) Image.grayToRgb(px) else px
-    val luma = Image.gray(expanded)
-    PhashBitsRow(r.media_ref, graft.kernel.Phash.hash(luma, px.width, px.height))
+    PhashBitsRow(r.media_ref, graft.kernel.Phash.hash(lumaOf(px), px.width, px.height))
   }
 
   /** Bands for mm7's Hamming-banded phash join: 8 bands × 8 bits over the
@@ -418,26 +367,14 @@ object MultimodalOps {
     * single-scene corpus hot-keys like dd1 and gets the same salting answer).
     */
   def imagePhashBandedPairs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{array, bit_count, col, explode, shiftrightunsigned}
-    val refs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(concat(lit("hdup-doc-"), $"doc_id").as("media_ref"))
-      .as[String]
-    val side = phashBandedOracleTable(dir, refs.count())
-    if (!OracleSide.exists(side)) {
-      val seq = refs.collect().sorted.toSeq
-        .map(ref => phashBitsRow(MediaRow(ref, GenData.hammingDupImagePayload(GenData.DefaultSeed, ref))))
-      spark.createDataFrame(seq).write.mode("overwrite").parquet(side)
-    }
+    import org.apache.spark.sql.functions.{array, bit_count, explode, shiftrightunsigned}
     // materialize the decoded hashes ONCE: the band self-join's broadcast
     // build side re-ran the whole synth+decode+phash pipeline before (a
     // BroadcastExchange over an identical subtree is never reused against
     // the probe side — verified in the round-6 before-plan: two full
     // Scan->Exchange->MapPartitions chains)
-    val rows = Par.spread(refs)
-      .map(ref => MediaRow(ref, GenData.hammingDupImagePayload(GenData.DefaultSeed, ref)))
-      .mapPartitions(_.grouped(graft.schema.Params.BatchSize).flatMap(_.map(phashBitsRow)))
-      .toDF()
+    val rows = decoded(spark, dir, "hdup-doc-", phashBandedOracleTable(dir, _),
+      GenData.hammingDupImagePayload(GenData.DefaultSeed, _), Par.spread[String])(r => Seq(phashBitsRow(r)))
       .localCheckpoint()
     val keys = (0 until HammingBands).map(b =>
       (lit(b.toLong * 256L)
@@ -462,21 +399,8 @@ object MultimodalOps {
     * quarantined, with which class, and every surviving pixel hash — is
     * value-checked against a sequential driver-side oracle.
     */
-  def decodeQuarantine(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val refs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(concat(lit("mix-doc-"), $"doc_id").as("media_ref"))
-      .as[String]
-    val side = quarantineOracleTable(dir, refs.count())
-    if (!OracleSide.exists(side)) {
-      val seq = refs.collect().sorted.toSeq
-        .map(ref => quarantineMeta(MediaRow(ref, GenData.mixedPayload(GenData.DefaultSeed, ref))))
-      spark.createDataFrame(seq).write.mode("overwrite").parquet(side)
-    }
-    Par.rangeSpread(refs.toDF(), $"media_ref")
-      .as[String].map(ref => MediaRow(ref, GenData.mixedPayload(GenData.DefaultSeed, ref)))
-      .mapPartitions(_.grouped(graft.schema.Params.BatchSize).flatMap(_.map(quarantineMeta)))
-      .toDF()
+  def decodeQuarantine(spark: SparkSession, dir: String): DataFrame =
+    decoded(spark, dir, "mix-doc-", quarantineOracleTable(dir, _),
+      GenData.mixedPayload(GenData.DefaultSeed, _), byRef)(r => Seq(quarantineMeta(r)))
       .sortWithinPartitions("media_ref")
-  }
 }

@@ -1,11 +1,13 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+
 /** Side-table plumbing for driver-visible value checks of non-SQL-expressible
   * operators (extraction kernels, PRNG-seeded generators): the query path
   * ALSO writes an independently-computed oracle result as parquet, and the
   * driver's DuckDB oracle SQL reads it back with `read_parquet(...)` — so the
   * rows/schema/hash compare becomes a real cross-implementation value check
-  * instead of `no_oracle`.
+  * instead of `no_oracle`. Every such table is written through [[ensure]].
   *
   * Paths are derived from a configurable root (default: the sbt working
   * directory's target/, so nothing bakes in the checkout location) and carry
@@ -30,9 +32,10 @@ object OracleSide {
   def path(name: String, dir: String, n: Long): String =
     s"$root/${name}_${new java.io.File(dir).getName}_${n}_$Version"
 
-  /** True when a complete side table is already on disk for this (name, n,
-    * Version) — deterministic content, safe to reuse (the bench's best-of-N
-    * loop then times the query, not the oracle write).
+  /** Writes `rows` to `p` unless a complete table (`p/_SUCCESS`) is there;
+    * then `rows` is never evaluated (deterministic content, so the bench's
+    * best-of-N loop times the query, not the oracle write).
     */
-  def exists(p: String): Boolean = new java.io.File(s"$p/_SUCCESS").exists()
+  def ensure(p: String)(rows: => DataFrame): Unit =
+    if (!new java.io.File(s"$p/_SUCCESS").exists()) rows.write.mode("overwrite").parquet(p)
 }

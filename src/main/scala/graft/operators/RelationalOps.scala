@@ -26,12 +26,13 @@ object RelationalOps {
         count(lit(1)).as("cnt"))
       .orderBy("l_returnflag", "l_linestatus")
 
-  /** Revenue by market segment — broadcast join (customer is the small dim). */
+  /** Revenue by market segment — no broadcast hint on customer (150k × SF
+    * rows): the planner decides from its size. */
   def marketRevenue(spark: SparkSession, dir: String): DataFrame = {
     val orders = t(spark, dir, "orders")
     val customer = t(spark, dir, "customer")
     orders
-      .join(broadcast(customer), orders("o_custkey") === customer("c_custkey"))
+      .join(customer, orders("o_custkey") === customer("c_custkey"))
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_orders"), round(sum("o_totalprice"), 2).as("revenue"))
       .orderBy("c_mktsegment")
@@ -88,8 +89,8 @@ object RelationalOps {
 
   /** Shipping-priority style 3-way join (customer ⋈ orders ⋈ lineitem) with
     * post-join aggregation and top-N — the multi-join/agg plan shape of
-    * TPC-H Q3. Customer is broadcast; the orders⋈lineitem join shuffles on
-    * the key both sides are later grouped by.
+    * TPC-H Q3. Customer is unhinted (see marketRevenue); the orders⋈lineitem
+    * join shuffles on the key both sides are later grouped by.
     */
   def shippingPriority(spark: SparkSession, dir: String): DataFrame = {
     val customer = t(spark, dir, "customer").where(col("c_mktsegment") === "BUILDING")
@@ -97,7 +98,7 @@ object RelationalOps {
     val lineitem = t(spark, dir, "lineitem")
     lineitem
       .join(orders, lineitem("l_orderkey") === orders("o_orderkey"))
-      .join(broadcast(customer), orders("o_custkey") === customer("c_custkey"))
+      .join(customer, orders("o_custkey") === customer("c_custkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
       .orderBy(desc("revenue"), asc("l_orderkey"))

@@ -491,12 +491,9 @@ object SimilarityOps {
     // as a side parquet for the DuckDB compare (bit-equal by the fixed
     // summation tree — see annIvfOracleRows)
     val nRows = emb(spark, dir).count()
-    val side = oracleTable(dir, nRows, nCells, nProbe)
-    if (!OracleSide.exists(side)) {
-      import spark.implicits._
-      annIvfOracleRows(spark, dir, nCells, nProbe)
-        .toDF("q_id", "n_id", "cos", "rank")
-        .write.mode("overwrite").parquet(side)
+    import spark.implicits._
+    OracleSide.ensure(oracleTable(dir, nRows, nCells, nProbe)) {
+      annIvfOracleRows(spark, dir, nCells, nProbe).toDF("q_id", "n_id", "cos", "rank")
     }
     annIvfDistributed(spark, dir, nCells, nProbe)
   }
@@ -553,12 +550,10 @@ object SimilarityOps {
     */
   def semDedup(spark: SparkSession, dir: String): DataFrame = {
     val nRows = emb(spark, dir).count()
-    val side = semOracleTable(dir, nRows)
-    if (!OracleSide.exists(side)) {
-      import spark.implicits._
+    import spark.implicits._
+    OracleSide.ensure(semOracleTable(dir, nRows)) {
       semDedupOracleRows(spark, dir)
         .toDF("vec_id", "cell", "group_id", "group_size", "keep", "centroid_cos")
-        .write.mode("overwrite").parquet(side)
     }
     semDedupDistributed(spark, dir)
   }

@@ -91,9 +91,8 @@ object Extract {
   }
 
   /** Kernel phase: explode spans, join media payloads, run
-    * Detect.extractRendered under `cfg` in batched mapPartitions (the analog
-    * of the reference's batch_size=20 inference loop, one payload batch in
-    * memory per task), union with the pass-through text pieces.
+    * Detect.extractRendered under `cfg` per payload in mapPartitions, union
+    * with the pass-through text pieces.
     */
   private def piecesOf(docs: Dataset[Doc], media: Dataset[Media], cfg: DetectConfig)(
       implicit spark: SparkSession): (Dataset[SpanPiece], LongAccumulator) = {
@@ -114,13 +113,11 @@ object Extract {
 
     val corrupt = spark.sparkContext.longAccumulator("graft.corrupt_or_missing_payloads")
     val mediaPieces: Dataset[SpanPiece] = mediaTasks.mapPartitions { it =>
-      it.grouped(Params.BatchSize).flatMap { batch =>
-        batch.map { t =>
-          // corrupt/missing payloads degrade to zero regions, never fail the task
-          val (rendered, dropped) = Detect.extractRenderedSafe(t.payload, cfg)
-          if (dropped) corrupt.add(1)
-          SpanPiece(t.doc_id, t.offset, rendered.map { case (k, x) => RSpan(k, x, t.media_ref) })
-        }
+      it.map { t =>
+        // corrupt/missing payloads degrade to zero regions, never fail the task
+        val (rendered, dropped) = Detect.extractRenderedSafe(t.payload, cfg)
+        if (dropped) corrupt.add(1)
+        SpanPiece(t.doc_id, t.offset, rendered.map { case (k, x) => RSpan(k, x, t.media_ref) })
       }
     }
 

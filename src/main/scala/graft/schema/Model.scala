@@ -130,6 +130,4 @@ object Params {
   final val MaxDet = 300
   /** Max boxes into NMS (/root/reference/cnstd/yolov7/general.py:603). */
   final val MaxNms = 30000
-  /** Kernel batch size inside a partition (/root/reference/cnstd/detector.py:181). */
-  final val BatchSize = 20
 }

@@ -163,6 +163,26 @@ class OperatorsSpec extends SparkSpec {
       assert(r.getAs[Int]("n_regions") >= 0)
       assert(r.getAs[Int]("n_bytes") > 0)
     }
+    // distributed output == sequential driver oracle, row for row
+    val side = spark.read.parquet(MultimodalOps.oracleTable(sf, nDocs))
+      .orderBy("media_ref")
+      .select("media_ref", "stage", "width", "height", "n_bytes", "n_regions")
+      .collect()
+    assert(rows.map(_.toSeq).toSeq == side.map(_.toSeq).toSeq)
+  }
+
+  test("mm6: per-image phash columns equal the sequential oracle, row for row") {
+    val cols = Seq("media_ref", "format", "width", "height", "phash", "pix_hash")
+    val out = MultimodalOps.imagePhashDupes(spark, sf).select(cols.map(col): _*).collect()
+    val nDocs = spark.read.parquet(s"$sf/documents.parquet").count()
+    assert(out.length == nDocs)
+    val side = spark.read.parquet(MultimodalOps.phashOracleTable(sf, nDocs))
+      .orderBy("media_ref")
+      .select(cols.map(col): _*)
+      .collect()
+    val got = out.map(_.toSeq).toSeq
+    val want = side.map(_.toSeq).toSeq
+    assert(got == want, s"first diff: ${got.zip(want).find(p => p._1 != p._2)}")
   }
 
   test("mm2: distributed real-image decode equals the sequential driver oracle, all formats hit") {
