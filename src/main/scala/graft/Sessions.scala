@@ -32,11 +32,12 @@ object Sessions {
       // config knob has to trade one query against another.
       .config("spark.sql.session.timeZone", "UTC")
       // unfiltered count()/min/max over parquet read row-group METADATA
-      // instead of scanning rows (off by default). Several operators pay a
-      // sizing count per invocation (the side-table key n in
-      // MultimodalOps.decoded, sim2/sim5's nRows, ctn3's bloom sizing feed): value-identical, and at 100 TB a
-      // metadata count is the difference between a footer read and a full
-      // corpus scan.
+      // instead of scanning rows (off by default): value-identical, and at
+      // 100 TB a metadata count is the difference between a footer read and
+      // a full corpus scan. ExtractJob's written-row counts take that path.
+      // Side-table keys take n from the scale factor, never from a count;
+      // ctn3's bloom sizing count runs over a checkpointed frame, not a
+      // parquet scan.
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.file.transferTo", "false")

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
+import graft.pipeline.Oracle
+import graft.sources.Annotations
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -123,14 +125,47 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ExtractOps.extractSpans(spark, "/root/testdata/sf0.001")
 
+  private type Query = (SparkSession, String) => DataFrame
+
+  /** A query value-checked through an oracle side table: the registry, not
+    * the operator, decides which single-threaded oracle rows back it and
+    * under which path. `OracleSide.ensure` writes `rows` at `path(dir)` when
+    * no complete table is there, then the operator runs. `path` takes its
+    * `n` from the same per-scale-factor function [[oracleSqlFor]] reads the
+    * table with, so writer and reader always agree.
+    */
+  private def sided(path: String => String)(rows: Query)(op: Query): Query =
+    (spark, dir) => {
+      OracleSide.ensure(path(dir))(rows(spark, dir))
+      op(spark, dir)
+    }
+
+  /** documents.parquet row count per scale factor (TESTDATA.md). */
+  def nDocsTable(sfDir: String): Long = if (sfDir.contains("sf0.1")) 5000L else 500L
+
+  /** embeddings.parquet row count per scale factor (TESTDATA.md). */
+  def nEmbTable(sfDir: String): Long = if (sfDir.contains("sf0.1")) 2000L else 500L
+
+  private def mm[R <: Product : scala.reflect.runtime.universe.TypeTag](
+      table: (String, Long) => String, src: MultimodalOps.MmSource[R])(op: Query): Query =
+    sided(d => table(d, nDocsTable(d)))(Oracle.mmRows(src))(op)
+
+  private def extracted(table: (String, Long) => String)(rows: Query)(op: Query): Query =
+    sided(d => table(d, ExtractOps.nDocsFor(d)))(rows)(op)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // extraction pipeline (north rule core)
-    "x1_extract_spans" -> (ExtractOps.extractSpans _),
-    "x2_extract_metrics" -> (ExtractOps.extractMetrics _),
-    "x3_extract_rotated" -> (ExtractOps.extractSpansRotated _),
+    "x1_extract_spans" -> extracted(ExtractOps.oracleSpansTable)(Oracle.spanRows)(
+      ExtractOps.extractSpans),
+    "x2_extract_metrics" -> extracted(ExtractOps.sideTable)(Oracle.spanKindRows)(
+      ExtractOps.extractMetrics),
+    "x3_extract_rotated" -> extracted(ExtractOps.oracleRotatedTable)(
+      Oracle.configuredSpanRows(graft.schema.DetectConfig.ReferenceDefault))(
+      ExtractOps.extractSpansRotated),
     // every optional reference-tail feature on: dilation + angle-clf + crop
     // digests (cropped_img analog) through the rotated pipeline
-    "x4_extract_full" -> (ExtractOps.extractSpansFull _),
+    "x4_extract_full" -> extracted(ExtractOps.oracleFullTable)(
+      Oracle.configuredSpanRows(ExtractOps.FullConfig))(ExtractOps.extractSpansFull),
     // relational / window / event plumbing
     "q1_pricing_agg" -> (RelationalOps.pricingAgg _),
     "q2_market_revenue" -> (RelationalOps.marketRevenue _),
@@ -148,7 +183,9 @@ object SparkEntry {
     // hour-over-hour cohort retention: distinct pairs + shifted-key self-join
     "ev5_retention" -> (RelationalOps.retention _),
     // annotation sources (TSV index + GT line parse, SURVEY S4/S5)
-    "src1_gt_summary" -> (graft.sources.Annotations.gtSummary _),
+    "src1_gt_summary" -> sided(d => Annotations.sideTable(d, Annotations.nFor(d)))(
+      (s, d) => Annotations.parseAnnotations(s, Annotations.Seed, Annotations.nFor(d)))(
+      Annotations.gtSummary),
     // text analysis
     "txt1_token_count" -> (TextOps.tokenCount _),
     "txt2_quality_score" -> (TextOps.qualityScore _),
@@ -249,11 +286,13 @@ object SparkEntry {
     "dd7_dup_clusters" -> (DedupOps.dupClusters _),
     // similarity search
     "sim1_cosine_topk" -> (SimilarityOps.cosineTopK _),
-    "sim2_ann_ivf" -> (SimilarityOps.annIvf _),
+    "sim2_ann_ivf" -> sided(d => SimilarityOps.oracleTable(d, nEmbTable(d), SimilarityOps.NCells,
+      SimilarityOps.NProbe))(Oracle.annIvfRows)(SimilarityOps.annIvf),
     // SemDeDup: k-means cells -> within-cell cosine pairs -> semantic-dup
     // groups -> keep the member farthest from its centroid; bit-deterministic
     // like sim2, so the single-threaded oracle side table value-checks it
-    "sim5_semdedup" -> (SimilarityOps.semDedup _),
+    "sim5_semdedup" -> sided(d => SimilarityOps.semOracleTable(d, nEmbTable(d)))(
+      Oracle.semDedupRows)(SimilarityOps.semDedup),
     // SRP-LSH bucketed cosine near-dup: dd5's sub-quadratic regime, with a
     // bucket the DuckDB oracle recomputes from the same plane literals
     // (full value check of the LSH path)
@@ -262,31 +301,38 @@ object SparkEntry {
     // shape — explode to (table, bucket) keys, one equi-join, exact verify
     "sim4_srp_banded" -> ((s: SparkSession, d: String) => SimilarityOps.srpNearDupBanded(s, d)),
     // multimodal plumbing (engine tensor payloads)
-    "mm1_media_meta" -> (MultimodalOps.mediaMeta _),
+    "mm1_media_meta" -> mm(MultimodalOps.oracleTable, MultimodalOps.MetaSource)(
+      MultimodalOps.mediaMeta),
     // real image decode: BMP/PGM/PPM/PNG bytes -> pixels -> luma -> STD
     // kernel, pure-JVM parsers, value-checked against a sequential oracle
-    "mm2_image_meta" -> (MultimodalOps.imageMeta _),
+    "mm2_image_meta" -> mm(MultimodalOps.imageOracleTable, MultimodalOps.ImageSource)(
+      MultimodalOps.imageMeta),
     // decode + resize policy (type0 resize_long, /32) + detect + P7 box
     // de-normalization back to source coords, digest value-checked
-    "mm3_image_detect" -> (MultimodalOps.imageDetect _),
+    "mm3_image_detect" -> mm(MultimodalOps.imageDetectOracleTable, MultimodalOps.DetectSource)(
+      MultimodalOps.imageDetect),
     // corrupt-payload quarantine: a payload mix with deterministic bad
     // records (truncation / lied magic / bit-rot / decode-bomb headers) —
     // bad rows classified and quarantined, never a task failure; survivors
     // pixel-hash value-checked like mm2
-    "mm4_decode_quarantine" -> (MultimodalOps.decodeQuarantine _),
+    "mm4_decode_quarantine" -> mm(MultimodalOps.quarantineOracleTable,
+      MultimodalOps.QuarantineSource)(MultimodalOps.decodeQuarantine),
     // all three stage tails (STD + the two YOLO heads) on genuinely decoded
     // pixels: CCL candidate proposal stands in for the neural forward, the
     // tails are the reference semantics; kind+box digests value-checked
-    "mm5_detect_stages" -> (MultimodalOps.imageDetectStages _),
+    "mm5_detect_stages" -> mm(MultimodalOps.stageDetectOracleTable, MultimodalOps.StagesSource)(
+      MultimodalOps.imageDetectStages),
     // perceptual-hash image near-dup detection: container re-encodes and a
     // uniform re-exposure collide on the DCT phash (bytes differ), distinct
     // scenes don't; dedup verdict = one window over the phash key
-    "mm6_phash_dupes" -> (MultimodalOps.imagePhashDupes _),
+    "mm6_phash_dupes" -> mm(MultimodalOps.phashOracleTable, MultimodalOps.PhashSource)(
+      MultimodalOps.imagePhashDupes),
     // Hamming-banded phash near-dup pairs (the lossy-JPEG class mm6's exact
     // grouping structurally misses): 8x8-bit bands, bucket join, exact
     // bit_count(xor) verify — pigeonhole-exact for Hamming<=7, so the
     // DuckDB oracle brute-forces the identical set over the side table
-    "mm7_phash_banded" -> (MultimodalOps.imagePhashBandedPairs _),
+    "mm7_phash_banded" -> mm(MultimodalOps.phashBandedOracleTable, MultimodalOps.PhashBitsSource)(
+      MultimodalOps.imagePhashBandedPairs),
     // HTML boilerplate strip (north rule surface): wrap each doc's text in a
     // deterministic full page, strip it back with the DOM-heuristic kernel;
     // oracle is md5(text) straight off the source table — no side table
@@ -307,9 +353,8 @@ object SparkEntry {
   def oracleSqlFor(sfDir: String): Map[String, String] = {
     val nX = ExtractOps.nDocsFor(sfDir)
     val nAnn = graft.sources.Annotations.nFor(sfDir)
-    // documents/embeddings.parquet row counts per driver sf (TESTDATA.md)
-    val nDocsTable = if (sfDir.contains("sf0.1")) 5000L else 500L
-    val nEmbTable = if (sfDir.contains("sf0.1")) 2000L else 500L
+    val nDocsTable = SparkEntry.nDocsTable(sfDir)
+    val nEmbTable = SparkEntry.nEmbTable(sfDir)
     val base = Map(
     // the IVF index is approximate but DETERMINISTIC (fixed summation tree in
     // trainCentroids), so its single-threaded oracle reproduces it bit-exactly

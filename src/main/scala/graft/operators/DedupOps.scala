@@ -625,9 +625,9 @@ object DedupOps {
 /** Union-find over long ids whose root is always the set's minimum, with
   * path compression — the per-partition contraction step of
   * [[DedupOps.componentLabels]] and the grouping of sim5's single-threaded
-  * oracle (SimilarityOps.semDedupOracleRows).
+  * oracle (pipeline.Oracle.semDedupOracleRows).
   */
-private[operators] final class MinUnionFind {
+private[graft] final class MinUnionFind {
   private val parent = scala.collection.mutable.HashMap.empty[Long, Long]
 
   def find(x: Long): Long = {

@@ -2,21 +2,20 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Extract, GenData, Oracle}
+import graft.pipeline.Extract
 
 /** Driver-facing wrappers around the extraction pipeline. The interleaved doc
   * table is synthesized deterministically at a size matched to the scale
   * factor of `dir` (no external data; BASELINE.json input_hint shape).
   *
-  * x1/x3 carry driver-visible VALUE checks (round-3): alongside the
-  * distributed pipeline's result, the per-doc single-threaded oracle
-  * (pipeline.Oracle — straight-line extraction, no joins/unions/shuffles,
-  * the same independent path ExtractE2ESpec compares against) is written as
-  * a side parquet, and the driver's DuckDB oracle SQL reads THAT back. A
-  * distribution bug (cross-partition ordering, lost docs, re-merge after
-  * skew splits) now fails the driver's rows/schema/hash compare instead of
-  * hiding behind `no_oracle`. The oracle map is distributed over doc ids for
-  * speed but shares none of the pipeline's plan machinery.
+  * x1/x3/x4 carry DuckDB-visible VALUE checks (round-3): the per-doc
+  * single-threaded oracle (pipeline.Oracle — straight-line extraction, no
+  * joins/unions/shuffles, the same independent path ExtractE2ESpec compares
+  * against) is a side parquet the query registry writes
+  * (SparkEntry.queries), and the DuckDB oracle SQL reads THAT back.
+  * A distribution bug (cross-partition ordering, lost docs, re-merge after
+  * skew splits) fails the oracle's rows/schema/hash compare instead of
+  * hiding behind `no_oracle`. The operators here only compute.
   */
 object ExtractOps {
 
@@ -25,6 +24,10 @@ object ExtractOps {
     if (dir.contains("sf0.1")) 8000L
     else if (dir.contains("sf0.01")) 2000L
     else 300L
+
+  /** x4's config: every optional reference-tail feature on. */
+  val FullConfig: graft.schema.DetectConfig = graft.schema.DetectConfig(
+    rotatedBbox = true, useDilation = true, useAngleClf = true, renderCrops = true)
 
   private def flatSpans(df: DataFrame): DataFrame =
     df.select(col("doc_id"), explode(col("spans")).as("s"))
@@ -35,29 +38,12 @@ object ExtractOps {
   def oracleSpansTable(dir: String, n: Long): String = OracleSide.path("x1_oracle_spans", dir, n)
   def oracleRotatedTable(dir: String, n: Long): String = OracleSide.path("x3_oracle_rotated", dir, n)
 
-  private def writeOracleSide(spark: SparkSession, n: Long, path: String,
-                              one: Long => graft.schema.ExtractedDoc): Unit = {
-    import spark.implicits._
-    OracleSide.ensure(path) {
-      spark.range(n)
-        .flatMap { i =>
-          val d = one(i)
-          d.spans.map(s => (d.doc_id, s.kind, s.text, s.media_ref, s.order))
-        }
-        .toDF("doc_id", "kind", "text", "media_ref", "span_order")
-    }
-  }
-
   /** Full pipeline, flattened to one row per output span (deterministic
-    * order); also materializes the oracle side table the driver value-checks
-    * this query against.
+    * order).
     */
   def extractSpans(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val n = nDocsFor(dir)
-    writeOracleSide(spark, n, oracleSpansTable(dir, n),
-      i => Oracle.extractGenerated(GenData.DefaultSeed, i))
-    flatSpans(Extract.runGenerated(n).toDF()).orderBy("doc_id", "span_order")
+    flatSpans(Extract.runGenerated(nDocsFor(dir)).toDF()).orderBy("doc_id", "span_order")
   }
 
   /** The reference-default flow (`rotated_bbox=True`, cn_std.py:49) through
@@ -65,16 +51,8 @@ object ExtractOps {
     * "[cx,cy,w,h,alpha];score" spans — value-checked by the driver against
     * the config-driven single-threaded oracle's side table.
     */
-  def extractSpansRotated(spark: SparkSession, dir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val n = nDocsFor(dir)
-    val cfg = graft.schema.DetectConfig.ReferenceDefault
-    writeOracleSide(spark, n, oracleRotatedTable(dir, n),
-      i => Oracle.extractConfigured(GenData.doc(GenData.DefaultSeed, i),
-        ref => GenData.payload(GenData.DefaultSeed, ref), cfg))
-    val (docs, media) = Extract.generate(n)
-    flatSpans(Extract.run(docs, media, cfg).toDF()).orderBy("doc_id", "span_order")
-  }
+  def extractSpansRotated(spark: SparkSession, dir: String): DataFrame =
+    configured(spark, dir, graft.schema.DetectConfig.ReferenceDefault)
 
   def oracleFullTable(dir: String, n: Long): String = OracleSide.path("x4_oracle_full", dir, n)
 
@@ -86,35 +64,30 @@ object ExtractOps {
     * Same config as the full-feature E2E gate; driver-value-checked against
     * the config-driven single-threaded oracle's side table.
     */
-  def extractSpansFull(spark: SparkSession, dir: String): DataFrame = {
+  def extractSpansFull(spark: SparkSession, dir: String): DataFrame =
+    configured(spark, dir, FullConfig)
+
+  private def configured(spark: SparkSession, dir: String,
+                         cfg: graft.schema.DetectConfig): DataFrame = {
     implicit val s: SparkSession = spark
-    val n = nDocsFor(dir)
-    val cfg = graft.schema.DetectConfig(rotatedBbox = true, useDilation = true,
-      useAngleClf = true, renderCrops = true)
-    writeOracleSide(spark, n, oracleFullTable(dir, n),
-      i => Oracle.extractConfigured(GenData.doc(GenData.DefaultSeed, i),
-        ref => GenData.payload(GenData.DefaultSeed, ref), cfg))
-    val (docs, media) = Extract.generate(n)
+    val (docs, media) = Extract.generate(nDocsFor(dir))
     flatSpans(Extract.run(docs, media, cfg).toDF()).orderBy("doc_id", "span_order")
   }
 
   /** Fixed side-table path for the exploded extraction spans at size n: the
-    * driver's DuckDB oracle re-aggregates the SAME rows (the extraction
-    * content itself is value-checked by x1; what the oracle checks here is
-    * the metrics aggregation). Written partitioned — a `coalesce(1)` here
-    * was a single-task serialization point at scale (round-2 verdict).
+    * DuckDB oracle re-aggregates the single-threaded oracle's
+    * `(doc_id, kind, media_ref)` rows (the extraction content itself is
+    * value-checked by x1; what the oracle checks here is the metrics
+    * aggregation).
     */
   def sideTable(dir: String, n: Long): String = OracleSide.path("x2_spans", dir, n)
 
   /** Extraction metrics table (north rule: per-partition/per-kind counts). */
   def extractMetrics(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val n = nDocsFor(dir)
-    val spans = Extract.runGenerated(n)
-      .select(col("doc_id"), explode(col("spans")).as("s"))
-      .select(col("doc_id"), col("s.kind").as("kind"), col("s.media_ref").as("media_ref"))
-    spans.write.mode("overwrite").parquet(sideTable(dir, n))
-    spark.read.parquet(sideTable(dir, n))
+    Extract.runGenerated(nDocsFor(dir))
+      .select(explode(col("spans")).as("s"))
+      .select(col("s.kind").as("kind"), col("s.media_ref").as("media_ref"))
       .groupBy("kind")
       .agg(count(lit(1)).as("n_spans"), countDistinct(col("media_ref")).as("n_media"))
       .orderBy("kind")

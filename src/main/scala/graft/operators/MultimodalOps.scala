@@ -207,27 +207,50 @@ object MultimodalOps {
 
   def imageDetectOracleTable(dir: String, n: Long): String = OracleSide.path("mm3_oracle_det", dir, n)
 
-  /** The one mm query shape over refs `prefix` + doc_id. The side table is
-    * a plain sequential driver loop over the sorted refs (bounded: one short
-    * string per document of the check corpus, never the production path).
-    * The distributed side spreads the NARROW refs, then synthesizes and
-    * decodes each payload, so only ref strings shuffle. `spread` is
+  /** One mm query's input and kernel: refs are `prefix` + doc_id, each ref's
+    * payload is `payloadOf(ref)`, and `decode` turns one payload into output
+    * rows. The operator ([[decoded]]) and the sequential oracle
+    * (pipeline.Oracle.mmRows) both run from the same value, so they cannot
+    * drift apart.
+    */
+  final case class MmSource[R](prefix: String, payloadOf: String => Array[Byte],
+                               decode: MediaRow => Seq[R]) {
+    def rows(ref: String): Seq[R] = decode(MediaRow(ref, payloadOf(ref)))
+  }
+
+  val MetaSource = MmSource("m-doc-", GenData.payload(GenData.DefaultSeed, _),
+    r => Seq(decodeMeta(r)))
+  val ImageSource = MmSource("img-doc-", GenData.imagePayload(GenData.DefaultSeed, _),
+    r => Seq(decodeImageMeta(r)))
+  val DetectSource = MmSource("img-doc-", GenData.imagePayload(GenData.DefaultSeed, _),
+    r => Seq(detectOnImage(r)))
+  val QuarantineSource = MmSource("mix-doc-", GenData.mixedPayload(GenData.DefaultSeed, _),
+    r => Seq(quarantineMeta(r)))
+  val StagesSource = MmSource("img-doc-", GenData.imagePayload(GenData.DefaultSeed, _),
+    detectStages)
+  val PhashSource = MmSource("pdup-doc-", GenData.nearDupImagePayload(GenData.DefaultSeed, _),
+    r => Seq(phashRow(r)))
+  val PhashBitsSource = MmSource("hdup-doc-", GenData.hammingDupImagePayload(GenData.DefaultSeed, _),
+    r => Seq(phashBitsRow(r)))
+
+  /** The refs of `src` over the documents table of `dir`. */
+  def refs(spark: SparkSession, dir: String, src: MmSource[_]): Dataset[String] = {
+    import spark.implicits._
+    spark.read.parquet(s"$dir/documents.parquet")
+      .select(concat(lit(src.prefix), $"doc_id").as("media_ref"))
+      .as[String]
+  }
+
+  /** The one mm query shape: spread the NARROW refs, then synthesize and
+    * decode each payload, so only ref strings shuffle. `spread` is
     * [[byRef]] for the map-only queries that end in `sortWithinPartitions`
     * (a final orderBy's range sampler re-ran the decode), `Par.spread` for
     * the tails that reshuffle anyway (window, band join).
     */
-  private def decoded[R <: Product : TypeTag](spark: SparkSession, dir: String, prefix: String,
-      sidePath: Long => String, payloadOf: String => Array[Byte],
-      spread: Dataset[String] => Dataset[String])(decode: MediaRow => Seq[R]): DataFrame = {
+  private def decoded[R <: Product : TypeTag](spark: SparkSession, dir: String, src: MmSource[R],
+      spread: Dataset[String] => Dataset[String]): DataFrame = {
     import spark.implicits._
-    val refs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(concat(lit(prefix), $"doc_id").as("media_ref"))
-      .as[String]
-    val synth = (ref: String) => MediaRow(ref, payloadOf(ref))
-    OracleSide.ensure(sidePath(refs.count())) {
-      spark.createDataFrame(refs.collect().sorted.toSeq.map(synth).flatMap(decode))
-    }
-    spread(refs).map(synth).flatMap(decode).toDF()
+    spread(refs(spark, dir, src)).flatMap(src.rows).toDF()
   }
 
   private def byRef(refs: Dataset[String]): Dataset[String] = Par.rangeSpread(refs, col("media_ref"))
@@ -237,8 +260,7 @@ object MultimodalOps {
     * sequential driver-side oracle.
     */
   def mediaMeta(spark: SparkSession, dir: String): DataFrame =
-    decoded(spark, dir, "m-doc-", oracleTable(dir, _),
-      GenData.payload(GenData.DefaultSeed, _), byRef)(r => Seq(decodeMeta(r)))
+    decoded(spark, dir, MetaSource, byRef)
       .sortWithinPartitions("media_ref")
 
   /** mm2: the same plumbing over REAL image-format payloads (BMP/PGM/PPM
@@ -248,8 +270,7 @@ object MultimodalOps {
     * sequential driver-side oracle, like mm1.
     */
   def imageMeta(spark: SparkSession, dir: String): DataFrame =
-    decoded(spark, dir, "img-doc-", imageOracleTable(dir, _),
-      GenData.imagePayload(GenData.DefaultSeed, _), byRef)(r => Seq(decodeImageMeta(r)))
+    decoded(spark, dir, ImageSource, byRef)
       .sortWithinPartitions("media_ref")
 
   /** mm3: real decode + resize policy + detection + coordinate
@@ -258,8 +279,7 @@ object MultimodalOps {
     * total area) against a sequential driver-side oracle.
     */
   def imageDetect(spark: SparkSession, dir: String): DataFrame =
-    decoded(spark, dir, "img-doc-", imageDetectOracleTable(dir, _),
-      GenData.imagePayload(GenData.DefaultSeed, _), byRef)(r => Seq(detectOnImage(r)))
+    decoded(spark, dir, DetectSource, byRef)
       .sortWithinPartitions("media_ref")
 
   def stageDetectOracleTable(dir: String, n: Long): String = OracleSide.path("mm5_oracle_stages", dir, n)
@@ -272,8 +292,7 @@ object MultimodalOps {
     * only ever reached the STD tail (mm3).
     */
   def imageDetectStages(spark: SparkSession, dir: String): DataFrame =
-    decoded(spark, dir, "img-doc-", stageDetectOracleTable(dir, _),
-      GenData.imagePayload(GenData.DefaultSeed, _), byRef)(detectStages)
+    decoded(spark, dir, StagesSource, byRef)
       .sortWithinPartitions("media_ref", "stage")
 
   final case class PhashRow(media_ref: String, format: String, width: Int,
@@ -314,8 +333,7 @@ object MultimodalOps {
   def imagePhashDupes(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{count, min, when}
-    val rows = decoded(spark, dir, "pdup-doc-", phashOracleTable(dir, _),
-      GenData.nearDupImagePayload(GenData.DefaultSeed, _), Par.spread[String])(r => Seq(phashRow(r)))
+    val rows = decoded(spark, dir, PhashSource, Par.spread[String])
     val w = Window.partitionBy("phash")
     rows
       .withColumn("n_same", count(lit(1)).over(w))
@@ -373,8 +391,7 @@ object MultimodalOps {
     // BroadcastExchange over an identical subtree is never reused against
     // the probe side — verified in the round-6 before-plan: two full
     // Scan->Exchange->MapPartitions chains)
-    val rows = decoded(spark, dir, "hdup-doc-", phashBandedOracleTable(dir, _),
-      GenData.hammingDupImagePayload(GenData.DefaultSeed, _), Par.spread[String])(r => Seq(phashBitsRow(r)))
+    val rows = decoded(spark, dir, PhashBitsSource, Par.spread[String])
       .localCheckpoint()
     val keys = (0 until HammingBands).map(b =>
       (lit(b.toLong * 256L)
@@ -400,7 +417,6 @@ object MultimodalOps {
     * value-checked against a sequential driver-side oracle.
     */
   def decodeQuarantine(spark: SparkSession, dir: String): DataFrame =
-    decoded(spark, dir, "mix-doc-", quarantineOracleTable(dir, _),
-      GenData.mixedPayload(GenData.DefaultSeed, _), byRef)(r => Seq(quarantineMeta(r)))
+    decoded(spark, dir, QuarantineSource, byRef)
       .sortWithinPartitions("media_ref")
 }

@@ -3,11 +3,13 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** Side-table plumbing for driver-visible value checks of non-SQL-expressible
-  * operators (extraction kernels, PRNG-seeded generators): the query path
-  * ALSO writes an independently-computed oracle result as parquet, and the
-  * driver's DuckDB oracle SQL reads it back with `read_parquet(...)` — so the
+  * operators (extraction kernels, PRNG-seeded generators): the registry
+  * (SparkEntry.queries) writes an independently-computed oracle result
+  * (pipeline.Oracle) as parquet before the operator runs, and the DuckDB
+  * oracle SQL reads it back with `read_parquet(...)` — so the
   * rows/schema/hash compare becomes a real cross-implementation value check
-  * instead of `no_oracle`. Every such table is written through [[ensure]].
+  * instead of `no_oracle`. Every such table is written through [[ensure]];
+  * operators themselves write nothing.
   *
   * Paths are derived from a configurable root (default: the sbt working
   * directory's target/, so nothing bakes in the checkout location) and carry

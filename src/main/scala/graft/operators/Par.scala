@@ -50,6 +50,11 @@ object Par {
     * passed EXPLICITLY so AQE's byte-based coalescing cannot fold a tiny —
     * but CPU-dense — probe-scale input onto one task; at production sizes
     * the explicit count equals what the sort would have chosen anyway.
+    *
+    * Contract: rows and their order are deterministic. Part-file boundaries
+    * are not: `RangePartitioner` seeds its sample with the RDD id, so once
+    * the input outgrows the sample the range bounds depend on how many RDDs
+    * the session built before. Compare outputs by rows and order, not bytes.
     */
   def rangeSpread[T](ds: Dataset[T], keys: Column*): Dataset[T] = {
     val n = ds.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt

@@ -129,19 +129,19 @@ object SimilarityOps {
     * assignment kernel, merged on the driver (the standard Spark k-means
     * shape; an earlier posexplode+groupBy-avg form cost two extra stages and
     * a shuffle per iteration).
+    *
+    * `NCells` is the coarse-quantizer size. At 100 TB choose ~sqrt(N) (the
+    * standard IVF rule): the centroid model stays O(NCells x Dim) while
+    * per-cell candidate lists stay O(sqrt(N)). The sf value keeps the frozen
+    * test semantics.
     */
-  /** @param nCells coarse-quantizer size. At 100 TB choose ~sqrt(N) (the
-    *   standard IVF rule): the driver-side model stays O(nCells x Dim) while
-    *   per-cell candidate lists stay O(sqrt(N)). The sf defaults keep the
-    *   frozen test semantics.
-    */
-  private[operators] def trainCentroids(base: DataFrame,
-                                        nCells: Int = NCells): IndexedSeq[IndexedSeq[Double]] = {
+  private def trainCentroids(base: DataFrame): IndexedSeq[IndexedSeq[Double]] = {
     val spark = base.sparkSession
     import spark.implicits._
     val dim = Dim // fixed embedding dimensionality; avoids a per-train action
+    // bounded collect: <= NCells rows of model state
     var centroids: IndexedSeq[IndexedSeq[Double]] = base
-      .orderBy("vec_id").limit(nCells).collect()
+      .orderBy("vec_id").limit(NCells).collect()
       .map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq
     for (_ <- 0 until KMeansIters) {
       val nc = centroids.length
@@ -155,7 +155,8 @@ object SimilarityOps {
       // and the driver merges blocks in ascending block order. The result is
       // a fixed summation tree: same bits at local[4] and on 1000 executors,
       // and exactly replicable by the single-threaded oracle
-      // (annIvfOracleRows) the driver value-checks sim2 against.
+      // (pipeline.Oracle.annIvfOracleRows) the DuckDB oracle value-checks
+      // sim2 against. The collect is bounded: one partial per block, NBlocks rows.
       val partials = cellAssignments(base, centroids, 1)
         .select(col("vec_id"), col("cell"), col("vec")).as[(Long, Int, Seq[Double])]
         .mapPartitions { it =>
@@ -190,50 +191,25 @@ object SimilarityOps {
     centroids
   }
 
-  private def l2norm(c: IndexedSeq[Double]): IndexedSeq[Double] = {
+  private[graft] def l2norm(c: IndexedSeq[Double]): IndexedSeq[Double] = {
     val n = math.sqrt(c.map(x => x * x).sum)
     if (n == 0) c else c.map(_ / n)
   }
 
-  /** Exact cosine over candidate pairs in a primitive-array kernel, with the
-    * same arithmetic as DuckDB's list_cosine_similarity after 4dp HALF_UP
-    * rounding: float->double products, left-to-right accumulation.
-    */
   /** The ONE near-threshold cosine gate all exact-verify kernels share:
     * cheap raw prefilter (anything below threshold - 0.5e-4 cannot round up
     * to the threshold at 4dp), then exact HALF_UP rounding for survivors.
-    * A single definition because OperatorsSpec asserts the three callers
-    * (verifiedPairs, dedupEmbedding, dedupEmbeddingExact) are bit-identical
-    * — tuning the epsilon or rounding mode in one copy would silently
-    * de-synchronize the others.
+    * A single definition because OperatorsSpec asserts its two callers
+    * (dedupEmbedding and the test-side exact all-pairs reference) are
+    * bit-identical — tuning the epsilon or rounding mode in one copy would
+    * silently de-synchronize the other.
     */
-  @inline private def roundedGate(raw: Double, threshold: Double): Option[Double] =
+  @inline private[operators] def roundedGate(raw: Double, threshold: Double): Option[Double] =
     if (raw < threshold - 0.5e-4) None
     else {
       val cos = BigDecimal(raw).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       if (cos >= threshold) Some(cos) else None
     }
-
-  private def verifiedPairs(spark: SparkSession, pairs: org.apache.spark.sql.Dataset[(Long, Long, Seq[Float], Seq[Float])],
-                            threshold: Double): DataFrame = {
-    import spark.implicits._
-    pairs.mapPartitions { it =>
-      it.flatMap { case (ida, idb, eaSeq, ebSeq) =>
-        val ea = eaSeq.toArray
-        val eb = ebSeq.toArray
-        var na = 0.0; var nb = 0.0; var dotAb = 0.0
-        var i = 0
-        while (i < ea.length) {
-          na += ea(i).toDouble * ea(i).toDouble
-          nb += eb(i).toDouble * eb(i).toDouble
-          dotAb += ea(i).toDouble * eb(i).toDouble
-          i += 1
-        }
-        val raw = dotAb / math.sqrt(na) / math.sqrt(nb)
-        roundedGate(raw, threshold).map(cos => (ida, idb, cos))
-      }
-    }.toDF("vec_a", "vec_b", "cos")
-  }
 
   /** Embedding-cosine near-duplicate pairs: EXACT all-pairs at threshold,
     * distributed via the classic block-pair ("triangle") join — vectors are
@@ -243,14 +219,14 @@ object SimilarityOps {
     * nBlocks copies of the table), per-task memory is O(2n/nBlocks x Dim),
     * and NOTHING is collected to the driver. The O(n^2) pair compute is
     * irreducible for an exact join at cos >= 0.35 (pairs 69 degrees apart
-    * share no geometric cell — see dedupEmbeddingApprox for the sub-quadratic
-    * approximate regime), so the design goal is spreading it: n^2/2 dots over
-    * nBlocks(nBlocks+1)/2 tasks, nBlocks chosen so a task's two blocks fit in
-    * memory (at 100 TB: nBlocks ~ n / 10^5).
+    * share no geometric cell — sim3/sim4's SRP-LSH buckets are the
+    * sub-quadratic approximate regime), so the design goal is spreading it:
+    * n^2/2 dots over nBlocks(nBlocks+1)/2 tasks, nBlocks chosen so a task's
+    * two blocks fit in memory (at 100 TB: nBlocks ~ n / 10^5).
     *
-    * Output is bit-identical to dedupEmbeddingExact (same per-pair
-    * arithmetic, same pair set) — asserted in OperatorsSpec; value-checked
-    * against DuckDB by the driver.
+    * Output is bit-identical to the exact all-pairs reference in the tests
+    * (same per-pair arithmetic, same pair set) — asserted in OperatorsSpec;
+    * value-checked against DuckDB.
     */
   def dedupEmbedding(spark: SparkSession, dir: String, threshold: Double = 0.35,
                      nBlocks: Int = 8): DataFrame = {
@@ -305,209 +281,26 @@ object SimilarityOps {
     out.toDF("vec_a", "vec_b", "cos").orderBy("vec_a", "vec_b")
   }
 
-  /** Approximate (sub-quadratic) regime of the embedding near-dup join:
-    * IVF-cell-blocked candidates — assign every vector to its top-`nProbe`
-    * cells, pair only vectors sharing a cell, verify candidates with exact
-    * cosine. Candidates shrink by ~NCells/nProbe^2, but recall < 1 at weak
-    * thresholds: a pair at cos 0.35 is ~69 degrees apart and often shares no
-    * cell (measured recall ~0.7 at threshold 0.35 on the test corpus; -> 1 as
-    * the threshold rises). OperatorsSpec gates candidates SUBSET-of-exact and
-    * recall; use dedupEmbedding when the output must be exact.
-    */
-  def dedupEmbeddingApprox(spark: SparkSession, dir: String, threshold: Double = 0.35,
-                           nProbe: Int = 2): DataFrame = {
-    import spark.implicits._
-    // cache only for the Lloyd iterations; unpersist before returning so the
-    // cached blocks can't leak into later queries in the same session
-    val base = normalized(spark, dir).persist()
-    val centroids = trainCentroids(base)
-    base.unpersist(blocking = false)
-    val probed = cellAssignments(base, centroids, nProbe)
-      .select(col("vec_id"), explode(col("probes")).as("cell"))
-    val cand = probed.as("a")
-      .join(probed.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .distinct()
-    val e = emb(spark, dir).select(col("vec_id"), col("embedding"))
-    val pairs = cand
-      .join(e.withColumnRenamed("vec_id", "vec_a").withColumnRenamed("embedding", "emb_a"), "vec_a")
-      .join(e.withColumnRenamed("vec_id", "vec_b").withColumnRenamed("embedding", "emb_b"), "vec_b")
-      .select(col("vec_a"), col("vec_b"), col("emb_a"), col("emb_b"))
-      .as[(Long, Long, Seq[Float], Seq[Float])]
-    verifiedPairs(spark, pairs, threshold).orderBy("vec_a", "vec_b")
-  }
-
-  /** Exact all-pairs reference for dedupEmbedding: broadcast the full table
-    * as a primitive-array kernel side. SMALL-SCALE ORACLE ONLY — the
-    * `collect()` makes this a driver OOM beyond test scale; the blocked path
-    * above is the production operator, and OperatorsSpec asserts the two are
-    * identical on the test corpora.
-    */
-  def dedupEmbeddingExact(spark: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
-    import spark.implicits._
-    val rows = emb(spark, dir).select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])]
-    def norm(v: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val side = rows.collect().sortBy(_._1)
-      .map { case (id, e) => (id, e.toArray, norm(e.toArray)) }
-    val bc = spark.sparkContext.broadcast(side)
-    val out = rows.mapPartitions { it =>
-      val all = bc.value
-      it.flatMap { case (ida, eaSeq) =>
-        val ea = eaSeq.toArray
-        val na = norm(ea)
-        all.iterator.filter(_._1 > ida).flatMap { case (idb, eb, nb) =>
-          var dotAb = 0.0; var i = 0
-          while (i < ea.length) { dotAb += ea(i).toDouble * eb(i).toDouble; i += 1 }
-          val raw = dotAb / na / nb
-          roundedGate(raw, threshold).map(cos => (ida, idb, cos))
-        }
-      }
-    }
-    out.toDF("vec_a", "vec_b", "cos").orderBy("vec_a", "vec_b")
-  }
-
   /** IVF approximate top-k: assign all vectors to cells once, probe the
     * `NProbe` nearest cells per query, exact cosine only within probed cells.
     * Recall vs cosineTopK is asserted in OperatorsSpec. Centroid scoring runs
     * in the broadcast kernel; only the per-candidate dot (64 terms) is an
     * expression, so the whole plan stays inside whole-stage codegen.
+    * `NCells`/`NProbe` set the index granularity (see trainCentroids for the
+    * sqrt(N) scaling rule; the probe count trades recall for candidates).
+    * Bit-deterministic by the fixed summation tree, so the single-threaded
+    * oracle (pipeline.Oracle.annIvfOracleRows) reproduces it exactly.
     */
-  def annIvf(spark: SparkSession, dir: String): DataFrame =
-    annIvf(spark, dir, NCells, NProbe)
-
-  /** Single-threaded reimplementation of the whole IVF path — normalize,
-    * deterministic Lloyd iterations with the SAME fixed summation tree
-    * (block by vec_id % NBlocks, sort within block, merge blocks ascending),
-    * probe, exact cosine, 4dp HALF_UP round, rank. Because trainCentroids'
-    * reduction is bit-deterministic by construction, this plain-Scala loop
-    * reproduces the distributed result EXACTLY, which is what lets the
-    * driver's DuckDB hash compare value-check an approximate index
-    * (sim2 was the suite's last no_oracle query). SMALL-SCALE ORACLE ONLY:
-    * the collect is the whole embeddings table.
-    */
-  def annIvfOracleRows(spark: SparkSession, dir: String,
-                       nCells: Int = NCells, nProbe: Int = NProbe): Seq[(Long, Long, Double, Int)] = {
-    val vecs = oracleVecs(spark, dir)
-    val centroids = oracleCentroids(vecs, nCells)
-    def score(v: Array[Double], c: Array[Double]): Double = oracleScore(v, c)
-    val indexed = oracleAssign(vecs, centroids, nProbe)
-    val byId = vecs.toMap
-    vecs.filter(_._1 < NumQueries).toSeq.flatMap { case (qId, qVec) =>
-      val probes = indexed(qId)._2.toSet
-      val cands = vecs.iterator
-        .filter { case (id, _) => id != qId && probes.contains(indexed(id)._1) }
-        .map { case (id, v) => (id, score(qVec, v)) }
-        .toSeq
-      cands.sortBy { case (id, cos) => (-cos, id) }.take(TopK).zipWithIndex.map {
-        case ((nId, cos), r) =>
-          (qId, nId, BigDecimal(cos).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble, r + 1)
-      }
-    }.sortBy(t => (t._1, t._4))
-  }
-
-  /** Collect + normalize the embeddings exactly like `normalized`:
-    * float->double products left-to-right, then per-element double division.
-    * SMALL-SCALE ORACLE ONLY — the collect is the whole table.
-    */
-  private[operators] def oracleVecs(spark: SparkSession, dir: String): Array[(Long, Array[Double])] = {
-    import spark.implicits._
-    emb(spark, dir).select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-      .map { case (id, e) =>
-        var s = 0.0
-        e.foreach(f => s += f.toDouble * f.toDouble)
-        val n = math.sqrt(s)
-        (id, e.map(_.toDouble / n).toArray)
-      }
-  }
-
-  private[operators] def oracleScore(v: Array[Double], c: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i) * c(i); i += 1 }
-    s
-  }
-
-  private[operators] def oracleAssign(vecs: Array[(Long, Array[Double])],
-      centroids: IndexedSeq[IndexedSeq[Double]], nPr: Int): Map[Long, (Int, Seq[Int])] = {
-    val cents = centroids.map(c => l2norm(c).toArray).toArray
-    vecs.map { case (id, v) =>
-      val scores = cents.map(c => oracleScore(v, c))
-      val order = Array.range(0, cents.length).sortBy(i => (-scores(i), i))
-      id -> (order(0), order.take(math.min(nPr, cents.length)).toSeq)
-    }.toMap
-  }
-
-  /** The single-threaded mirror of [[trainCentroids]] — deterministic Lloyd
-    * iterations with the SAME fixed summation tree (block by vec_id %
-    * NBlocks, sort within block, merge blocks ascending).
-    */
-  private[operators] def oracleCentroids(vecs: Array[(Long, Array[Double])],
-                                         nCells: Int): IndexedSeq[IndexedSeq[Double]] = {
-    val dim = Dim
-    var centroids: IndexedSeq[IndexedSeq[Double]] =
-      vecs.take(nCells).map(_._2.toIndexedSeq).toIndexedSeq
-    for (_ <- 0 until KMeansIters) {
-      val cells = oracleAssign(vecs, centroids, 1)
-      val nc = centroids.length
-      val next = Array.fill(nc)(new Array[Double](dim))
-      val counts = new Array[Long](nc)
-      vecs.groupBy(_._1 % NBlocks).toSeq.sortBy(_._1).foreach { case (_, members) =>
-        val blockSums = Array.fill(nc)(new Array[Double](dim))
-        val blockCounts = new Array[Long](nc)
-        members.sortBy(_._1).foreach { case (id, v) =>
-          val c = cells(id)._1
-          blockCounts(c) += 1
-          var i = 0
-          while (i < dim) { blockSums(c)(i) += v(i); i += 1 }
-        }
-        for (k <- 0 until nc) {
-          counts(k) += blockCounts(k)
-          var i = 0
-          while (i < dim) { next(k)(i) += blockSums(k)(i); i += 1 }
-        }
-      }
-      centroids = centroids.indices.map { k =>
-        if (counts(k) == 0) centroids(k) else next(k).map(_ / counts(k)).toIndexedSeq
-      }
-    }
-    centroids
-  }
-
-  /** Side parquet holding the single-threaded IVF oracle's rows. */
-  def oracleTable(dir: String, n: Long, nCells: Int, nProbe: Int): String =
-    OracleSide.path(s"sim2_oracle_ivf_c${nCells}_p$nProbe", dir, n)
-
-  /** @param nCells/nProbe index granularity — see trainCentroids for the
-    *   sqrt(N) scaling rule; probe count trades recall for candidate volume.
-    */
-  def annIvf(spark: SparkSession, dir: String, nCells: Int, nProbe: Int): DataFrame = {
-    // driver-visible value check: write the single-threaded oracle's result
-    // as a side parquet for the DuckDB compare (bit-equal by the fixed
-    // summation tree — see annIvfOracleRows)
-    val nRows = emb(spark, dir).count()
-    import spark.implicits._
-    OracleSide.ensure(oracleTable(dir, nRows, nCells, nProbe)) {
-      annIvfOracleRows(spark, dir, nCells, nProbe).toDF("q_id", "n_id", "cos", "rank")
-    }
-    annIvfDistributed(spark, dir, nCells, nProbe)
-  }
-
-  private def annIvfDistributed(spark: SparkSession, dir: String, nCells: Int, nProbe: Int): DataFrame = {
+  def annIvf(spark: SparkSession, dir: String): DataFrame = {
     // cache only for the Lloyd iterations + the eager query collect below
     // (review fix: unpersisting before the collect forced one extra full
     // normalize+scoring recompute); the returned lazy plan still recomputes
     val base = normalized(spark, dir).persist()
-    val centroids = trainCentroids(base, nCells)
-    val indexed = cellAssignments(base, centroids, nProbe)
-    // the query side is <= NumQueries rows — collect it eagerly so the big
-    // `indexed` subtree appears ONCE in the final plan instead of being
-    // recomputed for the broadcast side
+    val centroids = trainCentroids(base)
+    val indexed = cellAssignments(base, centroids, NProbe)
+    // bounded collect: the query side is <= NumQueries rows — collect it
+    // eagerly so the big `indexed` subtree appears ONCE in the final plan
+    // instead of being recomputed for the broadcast side
     import spark.implicits._
     val qRows = indexed.where(col("vec_id") < NumQueries)
       .select(col("vec_id"), col("vec"), col("probes"))
@@ -526,6 +319,10 @@ object SimilarityOps {
       .select(col("q_id"), col("n_id"), round(col("cos"), 4).as("cos"), col("rank"))
       .orderBy("q_id", "rank")
   }
+
+  /** Side parquet holding the single-threaded IVF oracle's rows. */
+  def oracleTable(dir: String, n: Long, nCells: Int, nProbe: Int): String =
+    OracleSide.path(s"sim2_oracle_ivf_c${nCells}_p$nProbe", dir, n)
 
   /** Cosine gate for semantic-duplicate groups (sim5). */
   final val SemThreshold = 0.35
@@ -549,23 +346,9 @@ object SimilarityOps {
     * semantic index with a hard value check, like sim2.
     */
   def semDedup(spark: SparkSession, dir: String): DataFrame = {
-    val nRows = emb(spark, dir).count()
-    import spark.implicits._
-    OracleSide.ensure(semOracleTable(dir, nRows)) {
-      semDedupOracleRows(spark, dir)
-        .toDF("vec_id", "cell", "group_id", "group_size", "keep", "centroid_cos")
-    }
-    semDedupDistributed(spark, dir)
-  }
-
-  /** Side parquet holding the single-threaded SemDeDup oracle's rows. */
-  def semOracleTable(dir: String, n: Long): String =
-    OracleSide.path(s"sim5_oracle_semdedup_c$NCells", dir, n)
-
-  private[operators] def semDedupDistributed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = normalized(spark, dir).persist()
-    val centroids = trainCentroids(base, NCells)
+    val centroids = trainCentroids(base)
     val cents = centroids.map(c => l2norm(c))
     val centDf = cents.zipWithIndex.map { case (c, k) => (k, c) }.toDF("cell", "cvec")
     // materialize once: three consumers (both self-join sides + the group
@@ -592,7 +375,7 @@ object SimilarityOps {
     // (candidates share a cell), so components never span cells. Shuffling
     // the pairs by cell puts every component in one pair partition, where
     // the shared CC helper's local union-find settles it (the oracle's own
-    // algorithm, semDedupOracleRows): no vertex is split across partitions,
+    // algorithm, pipeline.Oracle.semDedupOracleRows): no vertex is split across partitions,
     // so no propagation round runs. Per-task state is O(cell pairs), bounded
     // by the sqrt(N)-cell design — the same bound the pairwise join above
     // already commits to. Same fixpoint: group id = min member id; sizes
@@ -613,34 +396,9 @@ object SimilarityOps {
       .orderBy("vec_id")
   }
 
-  /** Single-threaded mirror of [[semDedupDistributed]] — same k-means, same
-    * assignment, exact within-cell pairwise cosines, union-find min-label
-    * groups, same keeper rule. Bit-equal by the fixed summation tree.
-    */
-  def semDedupOracleRows(spark: SparkSession, dir: String): Seq[(Long, Int, Long, Long, Int, Double)] = {
-    val vecs = oracleVecs(spark, dir)
-    val centroids = oracleCentroids(vecs, NCells)
-    val asg = oracleAssign(vecs, centroids, 1)
-    val cents = centroids.map(c => l2norm(c).toArray).toArray
-    val ccos = vecs.map { case (id, v) => id -> oracleScore(v, cents(asg(id)._1)) }.toMap
-    // union-find with min-label fixpoint semantics (same as clustersFromPairs)
-    val uf = new MinUnionFind
-    vecs.groupBy(v => asg(v._1)._1).foreach { case (_, members) =>
-      val m = members.sortBy(_._1)
-      for (i <- m.indices; j <- (i + 1) until m.length)
-        if (oracleScore(m(i)._2, m(j)._2) >= SemThreshold) uf.union(m(i)._1, m(j)._1)
-    }
-    val groupOf = vecs.map(v => v._1 -> uf.find(v._1)).toMap
-    val sizes = groupOf.values.groupBy(identity).map { case (g, xs) => g -> xs.size.toLong }
-    val keeperOf = vecs.groupBy(v => groupOf(v._1)).map { case (g, members) =>
-      g -> members.map(_._1).minBy(id => (ccos(id), id))
-    }
-    vecs.map { case (id, _) =>
-      (id, asg(id)._1, groupOf(id), sizes(groupOf(id)),
-        if (keeperOf(groupOf(id)) == id) 1 else 0,
-        BigDecimal(ccos(id)).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    }.toSeq.sortBy(_._1)
-  }
+  /** Side parquet holding the single-threaded SemDeDup oracle's rows. */
+  def semOracleTable(dir: String, n: Long): String =
+    OracleSide.path(s"sim5_oracle_semdedup_c$NCells", dir, n)
 
   /** Default hyperplane count for the single-table SRP-LSH near-dup variant —
     * the FROZEN test/oracle instance: the DuckDB mirror (SparkEntry

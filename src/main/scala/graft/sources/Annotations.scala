@@ -45,13 +45,15 @@ object Annotations {
       .withColumn("ignored", (col("label") === "###").cast("int"))
   }
 
-  /** Fixed side-table path for the parsed annotation rows at size n. Written
-    * by gtSummary so the driver's DuckDB oracle can aggregate the SAME rows
-    * (the generator PRNG is not expressible in SQL; the parse+aggregate
-    * pipeline is what the oracle value-checks). Partitioned write — the
-    * round-2 `coalesce(1)` was a single-task serialization point at scale.
+  /** Fixed side-table path for the parsed annotation rows at size n. The
+    * query registry writes [[parseAnnotations]] there so the DuckDB oracle
+    * can aggregate the SAME rows (the generator PRNG is not
+    * expressible in SQL; the aggregation is what the oracle value-checks).
     */
   def sideTable(dir: String, n: Int): String = graft.operators.OracleSide.path("src1_ann", dir, n)
+
+  /** Generator seed of the annotation lines src1 parses. */
+  final val Seed = 42L
 
   /** Doc count per driver scale factor (mirrored in SparkEntry.oracleSqlFor). */
   def nFor(dir: String): Int =
@@ -60,11 +62,8 @@ object Annotations {
   /** Per-image annotation summary (queries entry): box/ignore counts and the
     * enclosing-bbox reduce (A5 analog: array_min/array_max over coords).
     */
-  def gtSummary(spark: SparkSession, dir: String): DataFrame = {
-    val n = nFor(dir)
-    val parsed = parseAnnotations(spark, 42L, n)
-    parsed.write.mode("overwrite").parquet(sideTable(dir, n))
-    spark.read.parquet(sideTable(dir, n))
+  def gtSummary(spark: SparkSession, dir: String): DataFrame =
+    parseAnnotations(spark, Seed, nFor(dir))
       .withColumn("xs", array(col("poly")(0), col("poly")(2), col("poly")(4), col("poly")(6)))
       .withColumn("ys", array(col("poly")(1), col("poly")(3), col("poly")(5), col("poly")(7)))
       .groupBy("img")
@@ -75,5 +74,4 @@ object Annotations {
         max(array_max(col("xs"))).as("x_max"),
         max(array_max(col("ys"))).as("y_max"))
       .orderBy("img")
-  }
 }

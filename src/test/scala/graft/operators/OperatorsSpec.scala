@@ -145,7 +145,7 @@ class OperatorsSpec extends SparkSpec {
     // reproduce every row exactly — including the unrounded rank order
     val dist = SimilarityOps.annIvf(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-    val oracle = SimilarityOps.annIvfOracleRows(spark, sf)
+    val oracle = graft.pipeline.Oracle.annIvfOracleRows(spark, sf)
     assert(dist == oracle, {
       val d = dist.toSet; val o = oracle.toSet
       s"IVF diverges from oracle; dist-only=${(d -- o).take(5)} oracle-only=${(o -- d).take(5)}"
@@ -153,7 +153,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("multimodal metadata decode covers all stages with valid dimensions") {
-    val rows = MultimodalOps.mediaMeta(spark, sf).collect()
+    val rows = SparkEntry.queries("mm1_media_meta")(spark, sf).collect()
     val nDocs = spark.read.parquet(s"$sf/documents.parquet").count()
     assert(rows.length == nDocs)
     val stages = rows.map(_.getAs[Int]("stage")).toSet
@@ -173,7 +173,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("mm6: per-image phash columns equal the sequential oracle, row for row") {
     val cols = Seq("media_ref", "format", "width", "height", "phash", "pix_hash")
-    val out = MultimodalOps.imagePhashDupes(spark, sf).select(cols.map(col): _*).collect()
+    val out = SparkEntry.queries("mm6_phash_dupes")(spark, sf).select(cols.map(col): _*).collect()
     val nDocs = spark.read.parquet(s"$sf/documents.parquet").count()
     assert(out.length == nDocs)
     val side = spark.read.parquet(MultimodalOps.phashOracleTable(sf, nDocs))
@@ -186,7 +186,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("mm2: distributed real-image decode equals the sequential driver oracle, all formats hit") {
-    val out = MultimodalOps.imageMeta(spark, sf).collect()
+    val out = SparkEntry.queries("mm2_image_meta")(spark, sf).collect()
     val nDocs = spark.read.parquet(s"$sf/documents.parquet").count()
     assert(out.length == nDocs)
     val side = spark.read.parquet(MultimodalOps.imageOracleTable(sf, nDocs))
@@ -202,7 +202,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("mm3: decode+resize+detect+denormalize equals the sequential oracle, resize is real") {
-    val out = MultimodalOps.imageDetect(spark, sf).collect()
+    val out = SparkEntry.queries("mm3_image_detect")(spark, sf).collect()
     val nDocs = spark.read.parquet(s"$sf/documents.parquet").count()
     assert(out.length == nDocs)
     val side = spark.read.parquet(MultimodalOps.imageDetectOracleTable(sf, nDocs))
@@ -221,7 +221,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("mm5: all three stage tails run on decoded pixels and equal the sequential oracle") {
-    val out = MultimodalOps.imageDetectStages(spark, sf).collect()
+    val out = SparkEntry.queries("mm5_detect_stages")(spark, sf).collect()
     val nDocs = spark.read.parquet(s"$sf/documents.parquet").count()
     assert(out.length == nDocs * 3, s"want 3 rows/ref, got ${out.length}")
     val side = spark.read.parquet(MultimodalOps.stageDetectOracleTable(sf, nDocs))
@@ -247,7 +247,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("mm4: corrupt payloads quarantine deterministically, survivors match the oracle") {
-    val out = MultimodalOps.decodeQuarantine(spark, sf).collect()
+    val out = SparkEntry.queries("mm4_decode_quarantine")(spark, sf).collect()
     val nDocs = spark.read.parquet(s"$sf/documents.parquet").count()
     assert(out.length == nDocs)
     // distributed output == sequential driver oracle, row for row
@@ -320,19 +320,9 @@ class OperatorsSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val blocked = pairs(SimilarityOps.dedupEmbedding(spark, sf))
-    val exact = pairs(SimilarityOps.dedupEmbeddingExact(spark, sf))
+    val exact = pairs(EmbeddingReference.dedupEmbeddingExact(spark, sf))
     assert(blocked == exact,
       s"block-pair path diverges: missing=${(exact -- blocked).take(5)}, extra=${(blocked -- exact).take(5)}")
-  }
-
-  test("approximate embedding dedup is a usable-recall subset of exact") {
-    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = pairs(SimilarityOps.dedupEmbeddingApprox(spark, sf))
-    val exact = pairs(SimilarityOps.dedupEmbeddingExact(spark, sf))
-    assert((approx -- exact).isEmpty, s"approx produced non-pairs: ${(approx -- exact).take(5)}")
-    val recall = (approx & exact).size.toDouble / math.max(1, exact.size)
-    assert(recall >= 0.6, s"cell-blocked recall $recall below floor at threshold 0.35")
   }
 
   private def round4(x: Double): Double =
@@ -460,7 +450,7 @@ class OperatorsSpec extends SparkSpec {
   test("SRP-LSH near-dup (single + banded) is a nonempty exact subset of the all-pairs set") {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val exact = pairs(SimilarityOps.dedupEmbeddingExact(spark, sf))
+    val exact = pairs(EmbeddingReference.dedupEmbeddingExact(spark, sf))
     // same exact-cosine verification on candidates → srp ⊆ exact, values equal
     val srp = pairs(SimilarityOps.srpNearDup(spark, sf))
     assert((srp -- exact).isEmpty, s"SRP produced non-pairs: ${(srp -- exact).take(5)}")
@@ -523,7 +513,7 @@ class OperatorsSpec extends SparkSpec {
     }
     val occ = vecs.groupBy(v => bucket(v._2)).map(_._2.length.toLong)
     val candidates = occ.map(c => c * (c - 1) / 2).sum
-    val exact = SimilarityOps.dedupEmbeddingExact(spark, sf).count()
+    val exact = EmbeddingReference.dedupEmbeddingExact(spark, sf).count()
     assert(candidates <= exact + n,
       s"rule-sized buckets produced $candidates candidates (> exact $exact + n $n)")
   }
@@ -682,10 +672,10 @@ class OperatorsSpec extends SparkSpec {
     // same argument as sim2: fixed-summation-tree k-means + left-to-right
     // dots make the whole semantic index deterministic, so the union-find
     // oracle (different algorithm, same fixpoint) must reproduce every row
-    val dist = SimilarityOps.semDedupDistributed(spark, sf).collect()
+    val dist = SimilarityOps.semDedup(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getInt(4), r.getDouble(5)))
       .toSeq
-    val oracle = SimilarityOps.semDedupOracleRows(spark, sf)
+    val oracle = graft.pipeline.Oracle.semDedupOracleRows(spark, sf)
     assert(dist == oracle,
       s"diverges: ${dist.zip(oracle).collectFirst { case (d, o) if d != o => s"$d != $o" }}")
     // structural invariants: one keeper per group, every group member shares it
