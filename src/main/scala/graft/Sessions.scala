@@ -42,10 +42,10 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.file.transferTo", "false")
 
-  def local(cpus: Int, app: String = "graft"): SparkSession = {
-    val spark = builder(s"local[$cpus]", cpus).appName(app).getOrCreate()
-    // engine-native Catalyst expressions (graft_dot): idempotent per session
-    graft.expr.GraftFunctions.register(spark)
-    spark
-  }
+  /** A `local[cpus]` session with the tuned configuration. The engine's
+    * native Columns (graft.expr.Native) need no per-session setup, so this
+    * only builds the session.
+    */
+  def local(cpus: Int, app: String = "graft"): SparkSession =
+    builder(s"local[$cpus]", cpus).appName(app).getOrCreate()
 }

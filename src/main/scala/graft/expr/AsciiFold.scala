@@ -2,54 +2,23 @@ package graft.expr
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: ASCII folding — NFD-normalize then strip
-  * combining marks (the public `java.text` analog of the reference's
-  * `unidecode` call, /root/reference/cnstd/utils/metrics.py:39-57). Replaces
+/** ASCII folding — NFD-normalize then strip combining marks (the public
+  * `java.text` analog of the reference's `unidecode` call,
+  * cnstd/utils/metrics.py:39-57). [[Native.fold]] calls
+  * [[foldUTF8]] as one static call inside whole-stage codegen; it replaced
   * the last Scala UDF in the repo: a UDF boxes its argument, hides nulls
-  * behind a wrapper, and blocks null-intolerant expression pushout; this
-  * form participates in whole-stage codegen as a single static call and
-  * keeps the usual null-propagation contract.
+  * behind a wrapper, and blocks null-intolerant expression pushout.
   *
   * ASCII-range fast path: strings with no code point >= 0x80 cannot change
   * under NFD (Latin letters/digits/punct are all NFC==NFD and carry no
   * combining marks), so the common case skips the Normalizer allocation
   * entirely and returns the input UTF8String unchanged.
   */
-case class AsciiFold(child: Expression) extends UnaryExpression {
-
-  // null in → null out, and the optimizer may push IsNotNull through
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_fold expects a string arg, got $t")
-  }
-
-  override def dataType: DataType = child.dataType
-
-  override def prettyName: String = "graft_fold"
-
-  override def nullSafeEval(input: Any): Any =
-    AsciiFold.foldUTF8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.AsciiFold$$.MODULE$$.foldUTF8($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object AsciiFold {
-  /** Fold one string; shared by eval, codegen, and the plain-Scala callers
-    * (metrics oracle paths). Kept on the companion so generated code can call
-    * it as a single static-shaped reference.
+  /** Fold one string; shared by the Column path and the plain-Scala callers
+    * (metrics oracle paths).
     */
   def fold(s: String): String =
     Normalizer.normalize(s, Normalizer.Form.NFD).replaceAll("\\p{M}+", "")

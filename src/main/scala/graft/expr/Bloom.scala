@@ -1,15 +1,11 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Immutable Bloom filter over strings, built once on the driver (or via the
-  * [[BloomAgg]] distributed aggregator) and shipped to executors inside a
-  * [[BloomMightContain]] expression — the engine's map-side membership
+  * [[BloomAgg]] distributed aggregator) and shipped to executors inside the
+  * [[Native.mightContain]] Column — the engine's map-side membership
   * prefilter for the decontamination path when the eval-suite gram set
   * outgrows a broadcast hash join (ctn3; the same posture as Spark's own
   * runtime row-level bloom pruning, reimplemented here so the filter can be
@@ -106,34 +102,4 @@ final case class BloomAgg(words: Int) extends Aggregator[String, Array[Long], Ar
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   override def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-}
-
-/** Native membership-test expression: `bloom.mightContain(child)`. The built
-  * filter rides the expression instance itself (serialized with the plan,
-  * referenced from generated code via `addReferenceObj`) — no giant binary
-  * literal in the plan tree, no UDF boxing, and the test stays inside
-  * whole-stage codegen as a single virtual call.
-  */
-case class BloomMightContain(child: Expression, bloom: LongBloom)
-    extends UnaryExpression with Predicate {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_bloom_contains expects a string arg, got $t")
-  }
-
-  override def prettyName: String = "graft_bloom_contains"
-
-  override def nullSafeEval(input: Any): Any =
-    bloom.mightContain(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftBloom", bloom, classOf[LongBloom].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.mightContain($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

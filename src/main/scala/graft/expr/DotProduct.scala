@@ -1,9 +1,7 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -12,16 +10,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * arrays in double precision, left-to-right accumulation — bit-identical to
   * the unrolled `(0 until Dim).map(x(i)*y(i)).reduce(_ + _)` expression tree
   * (left-associated) and to the mapPartitions kernels' sequential loops.
+  * Built only through [[Native.dot]].
   *
-  * Why a custom Expression (the prompt's extension-preference order: built-in
-  * functions > native Expression > UDF): the unrolled-tree form generates
-  * O(Dim) Java statements PER USE — three dots in one cosine = 192 inlined
-  * multiply-adds, and stacking per-centroid copies of it is exactly what blew
-  * Janino's 64 KB method cap in round 1. This expression generates ONE loop
-  * regardless of Dim, participates fully in whole-stage codegen
-  * (CodegenGuardSpec runs it under spark.sql.codegen.fallback=false), and
-  * keeps nulls/empty semantics explicit. A Scala UDF would box every element
-  * and break codegen at each call site.
+  * Why an Expression class and not a [[Native]] static call: the generated
+  * loop is specialized on each side's element type (float or double) and
+  * emits the per-element null check only when the type admits null
+  * elements, which one static method over `ArrayData` cannot do. The
+  * unrolled-tree form generates O(Dim) Java statements PER USE — three dots
+  * in one cosine = 192 inlined multiply-adds, and stacking per-centroid
+  * copies of it is exactly what blew Janino's 64 KB method cap in round 1.
+  * This expression generates ONE loop regardless of Dim, participates fully
+  * in whole-stage codegen (CodegenGuardSpec runs it under
+  * spark.sql.codegen.fallback=false), and keeps nulls/empty semantics
+  * explicit. A Scala UDF would box every element and break codegen at each
+  * call site.
   *
   * Shorter arrays bound the loop (min length); both float and double element
   * types are accepted, promoted to double like the `.cast("double")` tree.
@@ -104,30 +106,4 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object GraftFunctions {
-  /** Register `graft_dot` in the session's function registry so it is usable
-    * via `functions.call_function("graft_dot", a, b)` and in SQL — the
-    * SparkSessionExtensions-style hook, applied per session (Sessions.local
-    * calls this).
-    */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[DotProduct].getCanonicalName, "graft_dot")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dot"),
-      info,
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "graft_dot(arrayA, arrayB)")
-        DotProduct(exprs.head, exprs(1))
-      })
-    val foldInfo = new ExpressionInfo(classOf[AsciiFold].getCanonicalName, "graft_fold")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_fold"),
-      foldInfo,
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_fold(string)")
-        AsciiFold(exprs.head)
-      })
-  }
 }

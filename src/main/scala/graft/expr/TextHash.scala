@@ -2,40 +2,37 @@ package graft.expr
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst replacements for the repo's three hottest interpreted
-  * higher-order-function kernels (guide §1.2 step 2 / §4: once the job shape
-  * is right, the per-task work must not run through CodegenFallback lambdas).
-  * Spark's array HOFs (`transform`, `aggregate`) evaluate their lambda bodies
-  * with the INTERPRETED expression evaluator per element — a per-token
-  * `aggregate(sequence(1, length(tok)), ...)` allocates a boxed position
-  * array and walks an expression tree per character. These expressions
-  * generate one static call inside whole-stage codegen and match the
-  * replaced Column trees bit-for-bit:
+/** The kernels behind the engine's native text-hash Columns, which replaced
+  * the repo's three hottest interpreted higher-order-function kernels (guide
+  * §1.2 step 2 / §4: once the job shape is right, the per-task work must not
+  * run through CodegenFallback lambdas). Spark's array HOFs (`transform`,
+  * `aggregate`) evaluate their lambda bodies with the INTERPRETED expression
+  * evaluator per element — a per-token `aggregate(sequence(1, length(tok)),
+  * ...)` allocates a boxed position array and walks an expression tree per
+  * character. [[Native]] calls each kernel below as one static call inside
+  * whole-stage codegen, and each matches the replaced Column tree
+  * bit-for-bit:
   *
-  *  - [[PolyHash]]  == aggregate(sequence(1, length(s)), 0L,
+  *  - [[TextHash.polyHash]] == aggregate(sequence(1, length(s)), 0L,
   *                       (acc, i) => (acc*b + ascii(substr(s, i, 1))) % m)
   *    Spark's `ascii` is `toString.codePointAt(0)` of the 1-char substring
   *    (verified against the 4.1.2 bytecode), i.e. a CODE-POINT walk — the
   *    loop here decodes the same way, so zh/CJK tokens hash identically.
-  *  - [[GramMd5s]]  == transform(sequence(1, size(toks)-k+1),
+  *  - [[TextHash.gramMd5s]] == transform(sequence(1, size(toks)-k+1),
   *                       i => md5(array_join(slice(toks, i, k), " ")))
   *    md5 bytes == MD5 over the UTF-8 concatenation with single 0x20
   *    separators; null elements are skipped exactly like array_join.
-  *  - [[Winnow]]    == the fingerprints pipeline's hash+window+distinct:
+  *  - [[TextHash.winnow]] == the fingerprints pipeline's hash+window+distinct:
   *    array_distinct(transform(.., j => array_min(slice(hs, j, w)))) over
   *    hs = transform(.., i => Horner fold of k code points mod m), with
   *    array_distinct's first-occurrence order preserved.
-  *  - [[SimHashSig]] == the per-doc SimHash aggregate: explode of
-  *    split(trim(text), "\\s+") minus empty tokens, two [[PolyHash]] folds
-  *    per token, then one sum(when(parity, 1).otherwise(-1)) per bit and
-  *    bit i set iff its sum is > 0.
+  *  - [[TextHash.simHashSig]] == the per-doc SimHash aggregate: explode of
+  *    split(trim(text), "\\s+") minus empty tokens, two polyHash folds per
+  *    token, then one sum(when(parity, 1).otherwise(-1)) per bit and bit i
+  *    set iff its sum is > 0.
   */
 object TextHash {
   private val Hex = "0123456789abcdef".toCharArray
@@ -46,7 +43,9 @@ object TextHash {
 
   /** Horner fold of the string's Unicode code points: acc*b + cp mod m.
     * Walks `toString` + codePointAt so malformed byte sequences degrade to
-    * U+FFFD exactly like the `ascii(substr(...))` tree it replaces.
+    * U+FFFD exactly like the `ascii(substr(...))` tree it replaces. Plain
+    * integer arithmetic that DuckDB evaluates identically (the oracle SQL
+    * mirrors it): acc < m <= 1e9, so acc*b + cp never overflows.
     */
   def polyHash(s: UTF8String, b: Long, m: Long): Long = {
     val str = s.toString
@@ -116,6 +115,14 @@ object TextHash {
       i += 1
     }
     sig
+  }
+
+  /** [[simHash]] boxed for a nullable Column: null when `s` has no token
+    * (the rows the replaced explode + groupBy never produced).
+    */
+  def simHashSig(s: UTF8String, bits: Int, b1: Long, m1: Long, b2: Long, m2: Long): java.lang.Long = {
+    val sig = simHash(s, bits, b1, m1, b2, m2)
+    if (sig < 0) null else sig
   }
 
   /** md5 hex (lowercase — DigestUtils.md5Hex parity) of every k-token
@@ -321,176 +328,4 @@ object ShingleMinHash {
     }
     c
   }
-}
-
-/** See [[ShingleMinHash.shingleHashes]]. */
-case class ShingleHashes(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_shingles expects a string arg, got $t")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_shingles"
-  override def nullSafeEval(input: Any): Any =
-    ShingleMinHash.shingleHashes(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.ShingleMinHash$$.MODULE$$.shingleHashes($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** See [[ShingleMinHash.minhash]]. */
-case class MinHashSig(child: Expression, p: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_minhash expects array<bigint>, got $t")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash"
-  override def nullSafeEval(input: Any): Any =
-    ShingleMinHash.minhash(input.asInstanceOf[ArrayData], p)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.ShingleMinHash$$.MODULE$$.minhash($c, $p)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** See [[ShingleMinHash.positionalEq]]. */
-case class PositionalEqCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_sig_agree expects array<bigint> args, got $t")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "graft_sig_agree"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ShingleMinHash.positionalEq(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ShingleMinHash$$.MODULE$$.positionalEq($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** See [[ShingleMinHash.intersectCount]]. */
-case class IntersectCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_intersect_n expects array<bigint> args, got $t")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "graft_intersect_n"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ShingleMinHash.intersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.ShingleMinHash$$.MODULE$$.intersectCount($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** See [[TextHash.polyHash]]. */
-case class PolyHash(child: Expression, b: Long, m: Long) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_polyhash expects a string arg, got $t")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_polyhash"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.polyHash(input.asInstanceOf[UTF8String], b, m)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.TextHash$$.MODULE$$.polyHash($c, ${b}L, ${m}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** See [[TextHash.gramMd5s]]. */
-case class GramMd5s(child: Expression, k: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_gram_md5 expects array<string>, got $t")
-  }
-
-  // containsNull=true, matching the nullability the replaced transform()
-  // tree declared — parquet field optionality (and so the driver's schema
-  // compare) must not shift under a pure performance change
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def prettyName: String = "graft_gram_md5"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.gramMd5s(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.TextHash$$.MODULE$$.gramMd5s($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** See [[TextHash.winnow]]. */
-case class Winnow(child: Expression, k: Int, w: Int, b: Long, m: Long) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_winnow expects a string arg, got $t")
-  }
-
-  // containsNull=true: nullability parity with the replaced HOF tree (see
-  // GramMd5s)
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "graft_winnow"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.winnow(input.asInstanceOf[UTF8String], k, w, b, m)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.TextHash$$.MODULE$$.winnow($c, $k, $w, ${b}L, ${m}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** See [[TextHash.simHash]]: the doc's SimHash signature, null when the text
-  * is null or has no token (the rows the replaced explode + groupBy never
-  * produced).
-  */
-case class SimHashSig(child: Expression, bits: Int, b1: Long, m1: Long, b2: Long, m2: Long)
-    extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_simhash expects a string arg, got $t")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-
-  override def nullSafeEval(input: Any): Any = {
-    val sig = TextHash.simHash(input.asInstanceOf[UTF8String], bits, b1, m1, b2, m2)
-    if (sig < 0) null else sig
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.expr.TextHash$$.MODULE$$.simHash($c, $bits, ${b1}L, ${m1}L, ${b2}L, ${m2}L);
-         |${ev.isNull} = ${ev.value} < 0L;""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * (/root/reference/cnstd/utils/metrics.py:60-137): word accuracy in raw,
   * caseless, ASCII-folded ("unidecode" analog via NFD + combining-mark strip),
   * and caseless+folded variants, as plain codegen'd aggregates. Folding is
-  * the native [[graft.expr.AsciiFold]] expression (registered as
-  * `graft_fold` by Sessions.local), not a UDF — same fold as
+  * the native [[graft.expr.Native.fold]] Column, not a UDF — same fold as
   * [[graft.expr.AsciiFold.fold]].
   */
 object TextMatch {
@@ -16,7 +15,7 @@ object TextMatch {
   /** ASCII folding as a String function (oracle/test convenience). */
   def fold(s: String): String = graft.expr.AsciiFold.fold(s)
 
-  private def foldCol(c: Column): Column = call_function("graft_fold", c)
+  private def foldCol(c: Column): Column = graft.expr.Native.fold(c)
 
   /** Match-rate summary over (gt, pred) string column pairs. */
   def summary(df: DataFrame, gt: Column, pred: Column): DataFrame = {

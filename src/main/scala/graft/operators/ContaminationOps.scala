@@ -85,7 +85,7 @@ object ContaminationOps {
     *     distributed pass ([[graft.expr.BloomAgg]] — partials OR-merge, the
     *     driver holds one bounded bit array);
     *  2. prefilter the exploded training gram POSITIONS map-side with the
-    *     native [[graft.expr.BloomMightContain]] expression (whole-stage
+    *     native [[graft.expr.Native.mightContain]] Column (whole-stage
     *     codegen, no UDF boxing) — at real contamination rates this kills
     *     ~everything, so the corpus-scale position stream never reaches a
     *     shuffle;
@@ -127,9 +127,7 @@ object ContaminationOps {
       .select(graft.expr.BloomAgg(graft.expr.LongBloom.wordsFor(nEval)).toColumn)
       .head()
     val bloom = new graft.expr.LongBloom(bits, graft.expr.LongBloom.K)
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val mightContain = ColumnBridge.column(
-      graft.expr.BloomMightContain(ColumnBridge.expression(col("h")), bloom))
+    val mightContain = graft.expr.Native.mightContain(bloom, col("h"))
     val isTrain = col("doc_id") % EvalMod =!= 0
     // map-side-only totals pass: every training doc, no shuffle
     val totals = mat.where(isTrain)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.expr.Native
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,38 +53,6 @@ object DedupOps {
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
 
-  /** Horner-rule polynomial hash of a string column, mod m — O(len) integer
-    * arithmetic both Spark and DuckDB evaluate identically (codepoints via
-    * ascii(), left-to-right fold, no wrapping overflow: acc < m <= 1e9 so
-    * acc*b + c < 2^63). Native codegen expression (graft.expr.PolyHash):
-    * the former `aggregate(sequence(1, length(s)), ...)` HOF evaluated an
-    * interpreted expression tree per CHARACTER and allocated a boxed
-    * position array per token (the SimHash signatures now fold the same
-    * hashes inside graft.expr.SimHashSig). Value-identical by the
-    * code-point walk (TextHash scaladoc; NativeTextHashSpec asserts parity
-    * against the HOF tree, zh/CJK included).
-    */
-  private[operators] def polyHash(s: Column, b: Long, m: Long): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.expr.PolyHash(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(s), b, m))
-
-  /** Character-trigram shingle hashes per doc, WITH duplicates: every
-    * consumer below is itself a dedupe (min-aggregation ignores repeats,
-    * collect_set is a set), so the former `.distinct()` here only added a
-    * full (doc_id, h) exchange — and, worse, pushed the CPU-dense 64-hash
-    * partial aggregation BEHIND that exchange, where AQE's byte-based
-    * coalescing serialized it onto 1-2 tasks (~2.6 s single-task at sf0.1).
-    * Without it the partial min/collect_set aggregates run map-side in the
-    * spread scan stage (a doc's grams never split across partitions — the
-    * explode happens after the doc-level spread), and only per-doc partials
-    * reach the exchange.
-    */
-  private def bridged(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(e)
-  private def expr0(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)
-
   /** Candidate near-dup pairs via LSH banding + exact Jaccard verification.
     * Output: (doc_a, doc_b, est_sim, jaccard) for pairs with jaccard >= minJaccard.
     *
@@ -106,7 +75,7 @@ object DedupOps {
 
   def minHashPairs(d: DataFrame, minJaccard: Double): DataFrame = {
     // The per-doc signature build is a PURE MAP, one native pass per doc
-    // (graft.expr.ShingleHashes + MinHashSig): the former shape exploded
+    // (Native.shingleHashes + minHash): the former shape exploded
     // every (doc, shingle) row and ran 64 xxhash64 min-aggregate columns
     // through an ObjectHashAggregate + exchange — value-identical because
     // min_h xxhash64(i, h) is order- and duplicate-invariant, and the
@@ -114,13 +83,15 @@ object DedupOps {
     // produced (NativeTextHashSpec pins both). Materialized ONCE: the band
     // self-join and the est/verify joins each re-planned the whole pipeline
     // before (a broadcast build side never reuses the probe side's
-    // exchange — the mm7/dd4 lesson).
-    val shingles = bridged(graft.expr.ShingleHashes(expr0(col("text"))))
+    // exchange — the mm7/dd4 lesson). The shingle hashes keep duplicates:
+    // the min-aggregation and the array_distinct below are themselves
+    // dedupes, and a `.distinct()` would only add a (doc_id, h) exchange.
+    val shingles = Native.shingleHashes(col("text"))
     val perDoc = Par.spread(
         d.where(length(col("text")) >= 3).select(col("doc_id"), col("text")))
       .select(col("doc_id"), shingles.as("sh"))
       .select(col("doc_id"),
-        bridged(graft.expr.MinHashSig(expr0(col("sh")), NumPerms)).as("sig"),
+        Native.minHash(col("sh"), NumPerms).as("sig"),
         array_distinct(col("sh")).as("hs"))
       .localCheckpoint()
     val sig = perDoc.select("doc_id", "sig")
@@ -141,8 +112,8 @@ object DedupOps {
       .join(sig.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a"), "doc_a")
       .join(sig.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b"), "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        round(bridged(graft.expr.PositionalEqCount(expr0(col("sig_a")), expr0(col("sig_b"))))
-          .cast("double") / NumPerms, 4).as("est_sim"))
+        round(Native.positionalEq(col("sig_a"), col("sig_b")).cast("double") / NumPerms, 4)
+          .as("est_sim"))
     // exact verification on candidates only (sets are per-doc bounded);
     // prefilter on signature agreement cuts the verification join for
     // candidates whose estimated similarity is far below the gate. Slack is
@@ -152,7 +123,7 @@ object DedupOps {
     // so one native intersect count replaces the interpreted per-pair
     // array_intersect + array_union set builds.
     val sets = perDoc.select("doc_id", "hs")
-    val inter = bridged(graft.expr.IntersectCount(expr0(col("hs_a")), expr0(col("hs_b"))))
+    val inter = Native.intersectCount(col("hs_a"), col("hs_b"))
     withEst
       .where(col("est_sim") >= minJaccard - 0.3)
       .join(sets.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("hs", "hs_a"), "doc_a")
@@ -172,7 +143,7 @@ object DedupOps {
     * Tokens are the non-empty elements of split(trim(text), "\\s+"); docs
     * without one (null, empty or whitespace-only text) get no signature.
     *
-    * One native pass per doc (graft.expr.SimHashSig), a pure map after the
+    * One native pass per doc (Native.simHash), a pure map after the
     * spread — the minHashPairs pattern: no per-token rows, no aggregate, no
     * exchange beyond the spread. NativeTextHashSpec pins it to the explode +
     * 60 sum(when(..)) aggregate the DuckDB oracle mirrors. The signature is
@@ -181,13 +152,13 @@ object DedupOps {
     */
   def simHashSignatures(d: DataFrame): DataFrame = {
     // `\S` matches exactly the texts with a token, so the signature below is
-    // never null; AssertNotNull states that in the schema (a non-null
+    // never null; assertNotNull states that in the schema (a non-null
     // `simhash`, and so dd4's non-null `hamming`, as the former aggregate
     // declared). The filter runs on the scan side of the spread: a filter on
     // the signature itself would be pushed below the spread's exchange and
     // hash every doc twice, once on the single scan task.
-    val sig = bridged(org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
-      graft.expr.SimHashSig(expr0(col("text")), SimBits, HashB1, HashM1, HashB2, HashM2)))
+    val sig = Native.assertNotNull(
+      Native.simHash(col("text"), SimBits, HashB1, HashM1, HashB2, HashM2))
     Par.spread(d.where(col("text").rlike("\\S")).select(col("doc_id"), col("text")))
       .select(col("doc_id"), sig.as("simhash"))
   }
@@ -444,9 +415,7 @@ object DedupOps {
     // md5(array_join(slice(...)))) HOF ran interpreted per gram and
     // re-sliced + re-joined the window each time; one MessageDigest now
     // streams each window's bytes (value-identical — NativeTextHashSpec)
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.expr.GramMd5s(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(toks), DupGramK))
+    Native.gramMd5s(toks, DupGramK)
 
   /** Cross-document duplicated-n-gram coverage (the distributed signal behind
     * exact-substring dedup, Lee et al. 2022 "Deduplicating Training Data

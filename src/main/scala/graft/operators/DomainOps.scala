@@ -47,7 +47,7 @@ object DomainOps {
     * bucket for a document by construction.
     */
   private[operators] def splitBucket: org.apache.spark.sql.Column = pmod(
-    DedupOps.polyHash(col("doc_id").cast("string"), DedupOps.HashB1, DedupOps.HashM1),
+    graft.expr.Native.polyHash(col("doc_id").cast("string"), DedupOps.HashB1, DedupOps.HashM1),
     lit(SplitBuckets))
 
   /** ds2: deterministic train/val/test assignment by portable hash of the

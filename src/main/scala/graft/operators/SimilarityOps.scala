@@ -1,6 +1,8 @@
 package graft.operators
 
+import graft.expr.{CosineF32, Native}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -33,36 +35,36 @@ object SimilarityOps {
   private def emb(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/embeddings.parquet")
 
-  /** Cosine similarity in double precision, left-to-right accumulation. */
-  private def cosine(a: Column, b: Column): Column =
-    dot(a, b) / sqrt(dot(a, a)) / sqrt(dot(b, b))
-
   /** Dot product via the engine's native Catalyst expression
     * (graft.expr.DotProduct): ONE generated loop instead of Dim inlined
     * multiply-adds, same left-to-right double accumulation as the previous
-    * unrolled tree (bit-identical — sim1/dd5 stay oracle-green) and as the
-    * mapPartitions kernels. The HOF form `aggregate(zip_with(...))`
-    * materializes a Dim-length array per invocation — at 12.5M pairs that
-    * alone cost ~60x wall time; the unrolled tree form stacked per-centroid
-    * was what blew Janino's 64 KB cap in round 1.
+    * unrolled tree and as the mapPartitions kernels (sim2, sim5 and the SRP
+    * bucket projections, whose oracles are double). The HOF form
+    * `aggregate(zip_with(...))` materializes a Dim-length array per
+    * invocation — at 12.5M pairs that alone cost ~60x wall time; the
+    * unrolled tree form stacked per-centroid was what blew Janino's 64 KB cap
+    * in round 1. Cosines do not use it: they follow the oracle's float32
+    * recipe ([[CosineF32]], through [[Native.cosine]]).
     */
-  private def dot(x: Column, y: Column): Column = call_function("graft_dot", x, y)
+  private def dot(x: Column, y: Column): Column = Native.dot(x, y)
 
   /** Brute-force exact top-k cosine neighbors for the first `NumQueries`
-    * vectors. The query side is tiny → broadcast; ranking via window with a
-    * deterministic vec_id tie-break.
+    * vectors. The query side is tiny → broadcast; ranking via window on the
+    * unrounded float32 cosine with a deterministic vec_id tie-break, as the
+    * oracle ranks.
     */
   def cosineTopK(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir).select(col("vec_id"), col("embedding"))
     val queries = all.where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val scored = all.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), cosine(col("q_emb"), col("embedding")).as("cos"))
+      .select(col("q_id"), col("vec_id").as("n_id"),
+        Native.cosine(col("q_emb"), col("embedding")).as("cos"))
     val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
     scored
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= TopK)
-      .select(col("q_id"), col("n_id"), round(col("cos"), 4).as("cos"), col("rank"))
+      .select(col("q_id"), col("n_id"), Native.round4(col("cos")).as("cos"), col("rank"))
       .orderBy("q_id", "rank")
   }
 
@@ -196,20 +198,20 @@ object SimilarityOps {
     if (n == 0) c else c.map(_ / n)
   }
 
-  /** The ONE near-threshold cosine gate all exact-verify kernels share:
-    * cheap raw prefilter (anything below threshold - 0.5e-4 cannot round up
-    * to the threshold at 4dp), then exact HALF_UP rounding for survivors.
-    * A single definition because OperatorsSpec asserts its two callers
-    * (dedupEmbedding and the test-side exact all-pairs reference) are
-    * bit-identical — tuning the epsilon or rounding mode in one copy would
-    * silently de-synchronize the other.
+  /** The ONE cosine gate all exact-verify kernels share: the float32 cosine
+    * of two vectors given as float arrays with their [[CosineF32.norm]]s,
+    * rounded to 4dp as the oracle rounds it ([[CosineF32]]), kept when the
+    * rounded value reaches `threshold`. A single definition because
+    * OperatorsSpec asserts its two callers (dedupEmbedding and the test-side
+    * exact all-pairs reference) are bit-identical — a change to the recipe
+    * in one copy would silently de-synchronize the other.
     */
-  @inline private[operators] def roundedGate(raw: Double, threshold: Double): Option[Double] =
-    if (raw < threshold - 0.5e-4) None
-    else {
-      val cos = BigDecimal(raw).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      if (cos >= threshold) Some(cos) else None
-    }
+  @inline private[operators] def roundedGate(a: UnsafeArrayData, normA: Float,
+                                             b: UnsafeArrayData, normB: Float,
+                                             threshold: Double): Option[Double] = {
+    val cos = CosineF32.round4(CosineF32.of(CosineF32.dot(a, b), normA, normB).toDouble)
+    if (cos >= threshold) Some(cos) else None
+  }
 
   /** Embedding-cosine near-duplicate pairs: EXACT all-pairs at threshold,
     * distributed via the classic block-pair ("triangle") join — vectors are
@@ -248,18 +250,12 @@ object SimilarityOps {
       val p = bp / nb
       val q = bp % nb
       val members = it.map { case (_, blk, id, e) =>
-        val v = e.toArray
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-        (blk, id, v, math.sqrt(s))
+        val v = UnsafeArrayData.fromPrimitiveArray(e.toArray)
+        (blk, id, v, CosineF32.norm(v))
       }.toArray
-      def pair(a: (Int, Long, Array[Float], Double), b: (Int, Long, Array[Float], Double)) = {
+      def pair(a: (Int, Long, UnsafeArrayData, Float), b: (Int, Long, UnsafeArrayData, Float)) = {
         val (lo, hi) = if (a._2 < b._2) (a, b) else (b, a)
-        val ea = lo._3; val eb = hi._3
-        var dotAb = 0.0; var i = 0
-        while (i < ea.length) { dotAb += ea(i).toDouble * eb(i).toDouble; i += 1 }
-        val raw = dotAb / lo._4 / hi._4
-        roundedGate(raw, threshold).map(cos => (lo._2, hi._2, cos))
+        roundedGate(lo._3, lo._4, hi._3, hi._4, threshold).map(cos => (lo._2, hi._2, cos))
       }
       if (p == q) {
         val ms = members.sortBy(_._2)
@@ -488,7 +484,7 @@ object SimilarityOps {
     * subset+recall ScalaTest gate).
     *
     * Projections are folded left-to-right in double precision by the native
-    * `graft_dot` loop; DuckDB's `list_dot_product` over DOUBLE lists uses the
+    * DotProduct loop; DuckDB's `list_dot_product` over DOUBLE lists uses the
     * same fold order (verified bit-identical), and signs are taken on the
     * 4dp-rounded projection in both engines.
     */
@@ -526,7 +522,7 @@ object SimilarityOps {
     b.as("a").join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        round(cosine(col("a.embedding"), col("b.embedding")), 4).as("cos"))
+        Native.round4(Native.cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
       .where(col("cos") >= threshold)
       .orderBy("vec_a", "vec_b")
   }
@@ -571,7 +567,7 @@ object SimilarityOps {
       .join(vecs.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")
       .join(vecs.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), "vec_b")
       .select(col("vec_a"), col("vec_b"),
-        round(cosine(col("emb_a"), col("emb_b")), 4).as("cos"))
+        Native.round4(Native.cosine(col("emb_a"), col("emb_b"))).as("cos"))
       .where(col("cos") >= threshold)
       .orderBy("vec_a", "vec_b")
   }

@@ -152,7 +152,7 @@ object TextOps {
   def fingerprints(spark: SparkSession, dir: String): DataFrame = {
     val len = length(col("text"))
     // the whole hash+window+distinct kernel is ONE native codegen expression
-    // (graft.expr.Winnow): the former transform/array_min/slice HOF pipeline
+    // (Native.winnow): the former transform/array_min/slice HOF pipeline
     // ran interpreted per position — O(len·(FpK+FpW)) tree-walks per doc,
     // the most CPU-dense columnar stage in the suite — and the sliding
     // minimum is now the O(len) monotonic-deque form. Output SET per doc is
@@ -161,10 +161,7 @@ object TextOps {
     // a single task when the scan is one small file (a no-op at production
     // split counts); range-spread is not used here because the explode
     // changes cardinality before the sort keys exist.
-    val fps = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.expr.Winnow(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("text")),
-        FpK, FpW, DedupOps.HashB1, DedupOps.HashM1))
+    val fps = graft.expr.Native.winnow(col("text"), FpK, FpW, DedupOps.HashB1, DedupOps.HashM1)
     Par.spread(docs(spark, dir).where(len >= FpK + FpW).select(col("doc_id"), col("text")))
       .select(col("doc_id"), explode(fps).as("fp"))
       .orderBy("doc_id", "fp")

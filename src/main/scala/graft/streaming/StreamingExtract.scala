@@ -54,7 +54,7 @@ object StreamingExtract {
     * in streaming mode, mirroring ExtractJob's batch flags.
     */
   def start(docsDir: String, outDir: String, checkpointDir: String, store: MediaStore,
-            availableNow: Boolean = true, cfg: DetectConfig = DetectConfig.Default)(
+            cfg: DetectConfig = DetectConfig.Default)(
       implicit spark: SparkSession): StreamingQuery = {
     import spark.implicits._
     val docs: Dataset[Doc] = spark.readStream
@@ -62,11 +62,12 @@ object StreamingExtract {
       .parquet(docsDir)
       .as[Doc]
     val out = docs.mapPartitions(_.map(d => extractOne(d, store, cfg)))
-    val writer = out.writeStream
+    out.writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+      .trigger(Trigger.AvailableNow())
+      .start()
   }
 }

@@ -1,8 +1,11 @@
 package graft.table
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
 import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** One completed doc_id range: lineage + extraction metrics
   * (north rule: "Iceberg-snapshot checkpoints that record per-partition
@@ -38,15 +41,10 @@ final case class Snapshot(version: Int, boundaries: Seq[String], completed: Seq[
 
 object Manifest {
 
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** JSON codec for [[Snapshot]]: the case-class fields in declaration
+    * order, the shape every manifest has been written in.
+    */
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
   def snapshotDir(root: String): Path = Paths.get(root, "snapshots")
 
@@ -66,85 +64,13 @@ object Manifest {
   def write(root: String, s: Snapshot): Unit = {
     val dir = snapshotDir(root)
     Files.createDirectories(dir)
-    val body = render(s)
     val tmp = dir.resolve(s".v${s.version}.json.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, json.writeValueAsBytes(s))
     Files.move(tmp, dir.resolve(s"v${s.version}.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def render(s: Snapshot): String = {
-    val bs = s.boundaries.map(q).mkString("[", ",", "]")
-    val es = s.completed.map { e =>
-      s"""{"rangeId":${e.rangeId},"lower":${q(e.lower)},"upper":${q(e.upper)},"path":${q(e.path)},""" +
-        s""""rows":${e.rows},"spans":${e.spans},"wallSecs":${e.wallSecs},"corruptPayloads":${e.corruptPayloads},"inputDocs":${q(e.inputDocs)}}"""
-    }.mkString("[", ",", "]")
-    s"""{"version":${s.version},"boundaries":$bs,"completed":$es}"""
-  }
-
-  /** Minimal JSON reader for the shape this object writes (no JSON lib in
-    * the offline dependency set; the format is fully under our control).
-    */
-  def read(p: Path): Snapshot = {
-    val body = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    val version = """"version":(\d+)""".r.findFirstMatchIn(body).get.group(1).toInt
-    val boundaries = {
-      // Escape-aware scan: boundaries are doc_ids sampled from input data and
-      // may contain ']' — a non-greedy `\[(.*?)\]` regex would stop at the
-      // first ']' and silently truncate the list, corrupting resume ranges.
-      // Consume quoted strings (the only array element type we write) until
-      // the ']' that closes the array OUTSIDE any string.
-      val start = body.indexOf("\"boundaries\":[")
-      require(start >= 0, s"no boundaries array in $p")
-      var i = start + "\"boundaries\":[".length
-      val out = Seq.newBuilder[String]
-      var closed = false
-      while (!closed) {
-        body.charAt(i) match {
-          case ']' => closed = true
-          case '"' =>
-            val sb = new StringBuilder
-            i += 1
-            while (body.charAt(i) != '"') {
-              if (body.charAt(i) == '\\') { sb += body.charAt(i); i += 1 }
-              sb += body.charAt(i); i += 1
-            }
-            out += unescape(sb.toString)
-            i += 1
-          case _ => i += 1 // comma / whitespace
-        }
-      }
-      out.result()
-    }
-    val entryRe =
-      ("""\{"rangeId":(\d+),"lower":"((?:[^"\\]|\\.)*)","upper":"((?:[^"\\]|\\.)*)","path":"((?:[^"\\]|\\.)*)",""" +
-        """"rows":(\d+),"spans":(\d+),"wallSecs":([0-9.Ee+-]+),"corruptPayloads":(\d+),"inputDocs":"((?:[^"\\]|\\.)*)"\}""").r
-    val completed = entryRe.findAllMatchIn(body).map { m =>
-      RangeEntry(m.group(1).toInt, unescape(m.group(2)), unescape(m.group(3)), unescape(m.group(4)),
-        m.group(5).toLong, m.group(6).toLong, m.group(7).toDouble, m.group(8).toLong, unescape(m.group(9)))
-    }.toSeq
-    Snapshot(version, boundaries, completed)
-  }
-
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'n' => sb += '\n'; i += 2
-          case 'r' => sb += '\r'; i += 2
-          case 't' => sb += '\t'; i += 2
-          case 'u' => sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case o => sb += o; i += 2
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
+  def read(p: Path): Snapshot = json.readValue(p.toFile, classOf[Snapshot])
 
   /** Range id for a doc_id given sorted boundaries (rangeId i covers
     * [boundaries(i-1), boundaries(i)), lexicographic).

@@ -7,11 +7,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** The standard Spark-extension access shim: `Column` in Spark 4 wraps an
   * implementation-agnostic ColumnNode, and the classic converters between it
   * and Catalyst `Expression`s are `private[sql]`. Libraries that construct
-  * expressions carrying runtime objects (here: [[graft.expr.BloomMightContain]]
-  * with its built filter — impossible to route through the function registry,
-  * which only sees analysis-time argument expressions) expose them to the
-  * DataFrame API from inside the `org.apache.spark.sql` namespace. Keep this
-  * object free of logic: one call each way.
+  * Catalyst expressions themselves (here: [[graft.expr.Native]], the one
+  * builder of the engine's native Columns, whose bloom Column even carries
+  * the built filter as an object literal) expose them to the DataFrame API
+  * from inside the `org.apache.spark.sql` namespace. Keep this object free of
+  * logic: one call each way.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -9,6 +9,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // session is JVM-shared, not stopped per suite
+
+  /** `c` evaluated by the interpreted expression path (no codegen): the
+    * analyzed expression's own `eval`, for columns over literals only.
+    */
+  def interpret(c: org.apache.spark.sql.Column): Any =
+    spark.range(1).select(c).queryExecution.analyzed.expressions.head.eval(null)
 }
 
 object SparkSpec {
@@ -16,7 +22,6 @@ object SparkSpec {
     val s = graft.Sessions.builder("local[4]", 7)
       .appName("graft-test")
       .getOrCreate()
-    graft.expr.GraftFunctions.register(s)
     s.sparkContext.setLogLevel("WARN")
     s
   }

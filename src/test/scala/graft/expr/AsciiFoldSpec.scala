@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Gates for the native graft_fold expression: parity with the plain-Scala
+/** Gates for the native fold Column (Native.fold): parity with the plain-Scala
   * fold (and with the Scala UDF it replaced), codegen and interpreted paths,
   * nulls, the pure-ASCII identity fast path, and multi-byte inputs that must
   * NOT take it.
@@ -23,17 +23,15 @@ class AsciiFoldSpec extends SparkSpec {
   test("codegen column path matches the plain-Scala fold on every case") {
     val s = spark
     import s.implicits._
-    val got = cases.toDF("t").select(call_function("graft_fold", col("t"))).collect()
+    val got = cases.toDF("t").select(Native.fold(col("t"))).collect()
     got.zip(cases).foreach { case (r, in) =>
       assert(r.getString(0) == AsciiFold.fold(in), s"mismatch for <$in>")
     }
   }
 
   test("interpreted eval path and UTF8 fast path agree") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
     cases.foreach { in =>
-      val e = AsciiFold(Literal.create(in, org.apache.spark.sql.types.StringType))
-      assert(e.eval(null).toString == AsciiFold.fold(in), s"eval mismatch for <$in>")
+      assert(interpret(Native.fold(lit(in))).toString == AsciiFold.fold(in), s"eval mismatch for <$in>")
       assert(AsciiFold.foldUTF8(UTF8String.fromString(in)).toString == AsciiFold.fold(in))
     }
     // the ASCII fast path must return the SAME object (no allocation)
@@ -45,14 +43,9 @@ class AsciiFoldSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = Seq(Some("café"), None).toDF("t")
-      .select(call_function("graft_fold", col("t")).as("f"))
+      .select(Native.fold(col("t")).as("f"))
     val out = df.orderBy(col("f").asc_nulls_last).collect()
     assert(out(0).getString(0) == "cafe")
     assert(out(1).isNullAt(0))
-  }
-
-  test("usable from SQL through the registered function") {
-    val got = spark.sql("SELECT graft_fold('résumé') AS f").head.getString(0)
-    assert(got == "resume")
   }
 }

@@ -42,14 +42,13 @@ class BloomSpec extends SparkSpec {
   test("expression: codegen filter keeps members, propagates nulls, drops strangers") {
     val s = spark
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     import s.implicits._
     val members = (0 until 100).map(key)
     val words = LongBloom.wordsFor(members.size)
     val buf = new Array[Long](words)
     members.foreach(LongBloom.add(buf, _))
     val bloom = new LongBloom(buf, LongBloom.K)
-    val mc = ColumnBridge.column(BloomMightContain(ColumnBridge.expression(col("h")), bloom))
+    val mc = Native.mightContain(bloom, col("h"))
     val rows = (members ++ Seq(null, "definitely-not-a-member-aaaa", "nor-this-bbbb"))
       .toDF("h")
     val kept = rows.where(mc).as[String].collect().toSet

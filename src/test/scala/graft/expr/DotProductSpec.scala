@@ -3,7 +3,7 @@ package graft.expr
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Gates for the native graft_dot Catalyst expression: value parity with the
+/** Gates for the native DotProduct Catalyst expression (Native.dot): value parity with the
   * unrolled expression tree (bit-identical accumulation), codegen and
   * interpreted paths, float/double inputs, null/short-array semantics.
   */
@@ -20,7 +20,7 @@ class DotProductSpec extends SparkSpec {
       Array.fill(64)(rng.nextFloat() * 2 - 1)))
     val df = rows.toDF("a", "b")
     val both = df.select(
-      call_function("graft_dot", col("a"), col("b")).as("native"),
+      Native.dot(col("a"), col("b")).as("native"),
       tree(col("a"), col("b"), 64).as("unrolled")).collect()
     both.foreach(r => assert(r.getDouble(0) == r.getDouble(1), "accumulation differs"))
   }
@@ -30,7 +30,7 @@ class DotProductSpec extends SparkSpec {
     import s.implicits._
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f))).toDF("a", "b")
     val expected = 1.0 * 4 + 2.0 * 5 + 3.0 * 6
-    assert(df.select(call_function("graft_dot", col("a"), col("b"))).head.getDouble(0) == expected)
+    assert(df.select(Native.dot(col("a"), col("b"))).head.getDouble(0) == expected)
     // force the interpreted path through direct eval (catalyst literals —
     // Column.expr is not exposed in the Spark 4 API split)
     import org.apache.spark.sql.catalyst.expressions.Literal
@@ -45,9 +45,9 @@ class DotProductSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = Seq((Array(1.0, 2.0, 3.0), Array(10.0, 20.0))).toDF("a", "b")
-    assert(df.select(call_function("graft_dot", col("a"), col("b"))).head.getDouble(0) == 50.0)
+    assert(df.select(Native.dot(col("a"), col("b"))).head.getDouble(0) == 50.0)
     val withNull = Seq((Some(Array(1.0)), Option.empty[Array[Double]])).toDF("a", "b")
-    assert(withNull.select(call_function("graft_dot", col("a"), col("b"))).head.isNullAt(0))
+    assert(withNull.select(Native.dot(col("a"), col("b"))).head.isNullAt(0))
   }
 
   test("null ELEMENT nulls the whole dot (codegen and interpreted paths)") {
@@ -58,7 +58,7 @@ class DotProductSpec extends SparkSpec {
       (Array[java.lang.Double](1.0, null, 3.0), Array[java.lang.Double](4.0, 5.0, 6.0)),
       (Array[java.lang.Double](1.0, 2.0), Array[java.lang.Double](3.0, 4.0))
     ).toDF("a", "b")
-    val out = df.select(call_function("graft_dot", col("a"), col("b")).as("d"))
+    val out = df.select(Native.dot(col("a"), col("b")).as("d"))
       .orderBy(col("d").asc_nulls_last).collect()
     assert(out(0).getDouble(0) == 11.0)
     assert(out(1).isNullAt(0), "null element must propagate to a null dot")
@@ -74,10 +74,5 @@ class DotProductSpec extends SparkSpec {
       Literal.create(Array[java.lang.Double](2.0), ArrayType(DoubleType, containsNull = true)),
       Literal.create(Array[java.lang.Double](3.0, null), ArrayType(DoubleType, containsNull = true)))
     assert(e2.eval(null) == 6.0)
-  }
-
-  test("usable from SQL through the registered function") {
-    spark.sql("SELECT graft_dot(array(CAST(2.0 AS DOUBLE)), array(CAST(3.0 AS DOUBLE))) AS d")
-      .collect().map(_.getDouble(0)).toSeq == Seq(6.0)
   }
 }

@@ -3,7 +3,6 @@ package graft.expr
 import graft.SparkSpec
 import graft.operators.DedupOps
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Value parity of the native text-hash expressions (graft.expr.TextHash)
   * against the interpreted HOF Column trees they replaced: the driver's
@@ -36,7 +35,7 @@ class NativeTextHashSpec extends SparkSpec {
       Seq("中", "😀", "é", "a中b", "𐍈x")
     val df = toks.toDF("tok")
     for ((b, m) <- Seq((DedupOps.HashB1, DedupOps.HashM1), (DedupOps.HashB2, DedupOps.HashM2))) {
-      val native = ColumnBridge.column(PolyHash(ColumnBridge.expression(col("tok")), b, m))
+      val native = Native.polyHash(col("tok"), b, m)
       val rows = df.select(col("tok"), native.as("n"), hofPolyHash(col("tok"), b, m).as("h"))
         .collect()
       rows.foreach { r =>
@@ -52,7 +51,7 @@ class NativeTextHashSpec extends SparkSpec {
       .where(size(col("toks")) >= k)
     val hof = transform(sequence(lit(1), size(col("toks")) - (k - 1)),
       i => md5(array_join(slice(col("toks"), i, lit(k)), " ")))
-    val native = ColumnBridge.column(GramMd5s(ColumnBridge.expression(col("toks")), k))
+    val native = Native.gramMd5s(col("toks"), k)
     df.select(hof.as("h"), native.as("n")).collect().foreach { r =>
       assert(r.getSeq[String](0) == r.getSeq[String](1), "gram md5 window mismatch")
     }
@@ -67,8 +66,7 @@ class NativeTextHashSpec extends SparkSpec {
       i => kgramHash(col("text"), i))
     val wins = transform(sequence(lit(1), size(col("hs")) - (FpW - 1)),
       i => array_min(slice(col("hs"), i, lit(FpW))))
-    val native = ColumnBridge.column(Winnow(ColumnBridge.expression(col("text")),
-      FpK, FpW, DedupOps.HashB1, DedupOps.HashM1))
+    val native = Native.winnow(col("text"), FpK, FpW, DedupOps.HashB1, DedupOps.HashM1)
     val df = texts.toDF("text").where(length(col("text")) >= FpK + FpW)
     val rows = df
       .select(col("text"), native.as("n"))
@@ -85,7 +83,7 @@ class NativeTextHashSpec extends SparkSpec {
     val df = texts.filter(_.length >= 3).toDF("text")
     val hofGrams = transform(sequence(lit(1), length(col("text")) - 2),
       i => xxhash64(col("text").substr(i, lit(3))))
-    val native = ColumnBridge.column(ShingleHashes(ColumnBridge.expression(col("text"))))
+    val native = Native.shingleHashes(col("text"))
     df.select(hofGrams.as("h"), native.as("n")).collect().foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1), "shingle hash mismatch")
     }
@@ -97,7 +95,7 @@ class NativeTextHashSpec extends SparkSpec {
         (0 until 64).map(i => min(xxhash64(lit(i), col("h"))).as(s"m$i")).tail: _*)
       .select(col("id"), array((0 until 64).map(i => col(s"m$i")): _*).as("agg_sig"))
     val nat = df.select(monotonically_increasing_id().as("id"),
-      ColumnBridge.column(MinHashSig(ColumnBridge.expression(native), 64)).as("nat_sig"))
+      Native.minHash(native, 64).as("nat_sig"))
     val joined = agg.join(nat, "id").collect()
     assert(joined.nonEmpty)
     joined.foreach { r =>
@@ -112,10 +110,8 @@ class NativeTextHashSpec extends SparkSpec {
       (Seq(1L, 2L, 3L), Seq(4L, 5L, 6L)),
       (Seq(-1L, Long.MaxValue, 0L), Seq(Long.MaxValue, -1L, 7L)))
     val df = pairs.toDF("a", "b")
-    val eqN = ColumnBridge.column(PositionalEqCount(
-      ColumnBridge.expression(col("a")), ColumnBridge.expression(col("b"))))
-    val inN = ColumnBridge.column(IntersectCount(
-      ColumnBridge.expression(col("a")), ColumnBridge.expression(col("b"))))
+    val eqN = Native.positionalEq(col("a"), col("b"))
+    val inN = Native.intersectCount(col("a"), col("b"))
     df.select(
         eqN.as("e"), size(filter(zip_with(col("a"), col("b"), (x, y) => x === y), p => p)).as("eh"),
         inN.as("i"), size(array_intersect(col("a"), col("b"))).as("ih"))
@@ -158,8 +154,8 @@ class NativeTextHashSpec extends SparkSpec {
     val rows = (texts ++ random ++ adversarial).zipWithIndex.map { case (t, i) => (i.toLong, t) } :+
       ((10000L, null: String))
     val d = rows.toDF("doc_id", "text")
-    val native = ColumnBridge.column(SimHashSig(ColumnBridge.expression(col("text")),
-      DedupOps.SimBits, DedupOps.HashB1, DedupOps.HashM1, DedupOps.HashB2, DedupOps.HashM2))
+    val native = Native.simHash(col("text"),
+      DedupOps.SimBits, DedupOps.HashB1, DedupOps.HashM1, DedupOps.HashB2, DedupOps.HashM2)
     def set(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     val ref = set(treeSimHash(d))
@@ -182,14 +178,11 @@ class NativeTextHashSpec extends SparkSpec {
     try {
       val df = texts.toDF("text")
         .select(col("text"), split(trim(col("text")), "\\s+").as("toks"))
-      val n1 = ColumnBridge.column(PolyHash(ColumnBridge.expression(col("text")),
-        DedupOps.HashB1, DedupOps.HashM1))
-      val n2 = ColumnBridge.column(GramMd5s(ColumnBridge.expression(col("toks")),
-        DedupOps.DupGramK))
-      val n3 = ColumnBridge.column(Winnow(ColumnBridge.expression(col("text")),
-        8, 16, DedupOps.HashB1, DedupOps.HashM1))
-      val n4 = ColumnBridge.column(SimHashSig(ColumnBridge.expression(col("text")),
-        DedupOps.SimBits, DedupOps.HashB1, DedupOps.HashM1, DedupOps.HashB2, DedupOps.HashM2))
+      val n1 = Native.polyHash(col("text"), DedupOps.HashB1, DedupOps.HashM1)
+      val n2 = Native.gramMd5s(col("toks"), DedupOps.DupGramK)
+      val n3 = Native.winnow(col("text"), 8, 16, DedupOps.HashB1, DedupOps.HashM1)
+      val n4 = Native.simHash(col("text"),
+        DedupOps.SimBits, DedupOps.HashB1, DedupOps.HashM1, DedupOps.HashB2, DedupOps.HashM2)
       assert(df.select(n1, n2, n3, n4).collect().length == texts.length)
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)

@@ -1,6 +1,8 @@
 package graft.operators
 
+import graft.expr.CosineF32
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions.col
 
 /** Test reference for the embedding near-dup operators. */
@@ -16,24 +18,18 @@ object EmbeddingReference {
     import spark.implicits._
     val rows = spark.read.parquet(s"$dir/embeddings.parquet").select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])]
-    def norm(v: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val side = rows.collect().sortBy(_._1)
-      .map { case (id, e) => (id, e.toArray, norm(e.toArray)) }
+    val side = rows.collect().sortBy(_._1).map { case (id, e) => (id, e.toArray) }
     val bc = spark.sparkContext.broadcast(side)
     val out = rows.mapPartitions { it =>
-      val all = bc.value
+      val all = bc.value.map { case (id, e) =>
+        val v = UnsafeArrayData.fromPrimitiveArray(e)
+        (id, v, CosineF32.norm(v))
+      }
       it.flatMap { case (ida, eaSeq) =>
-        val ea = eaSeq.toArray
-        val na = norm(ea)
+        val ea = UnsafeArrayData.fromPrimitiveArray(eaSeq.toArray)
+        val na = CosineF32.norm(ea)
         all.iterator.filter(_._1 > ida).flatMap { case (idb, eb, nb) =>
-          var dotAb = 0.0; var i = 0
-          while (i < ea.length) { dotAb += ea(i).toDouble * eb(i).toDouble; i += 1 }
-          val raw = dotAb / na / nb
-          SimilarityOps.roundedGate(raw, threshold).map(cos => (ida, idb, cos))
+          SimilarityOps.roundedGate(ea, na, eb, nb, threshold).map(cos => (ida, idb, cos))
         }
       }
     }

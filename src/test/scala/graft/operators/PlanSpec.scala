@@ -182,7 +182,7 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("ShuffledHashJoin"), s"ctn3 verify join must be shuffled:\n${p.take(2500)}")
     val bhj = p.linesIterator.count(_.contains("BroadcastHashJoin"))
     assert(bhj == 1, s"ctn3 wants exactly 1 broadcast (hits back-join), got $bhj:\n${p.take(2500)}")
-    assert(p.contains("graft_bloom_contains"), s"ctn3 lost the bloom prefilter:\n${p.take(2500)}")
+    assert(p.contains("invoke(graft.expr.LongBloom@"), s"ctn3 lost the bloom prefilter:\n${p.take(2500)}")
     assert(!p.contains("CartesianProduct"), s"ctn3 gained a cartesian:\n${p.take(2500)}")
   }
 

@@ -42,6 +42,27 @@ class CheckpointSpec extends SparkSpec {
     assert(back.boundaries == nasty)
   }
 
+  test("a manifest written by the hand-rolled JSON writer still resumes") {
+    // v7.json byte for byte as the writer before the Jackson codec rendered
+    // it (escaped quotes, backslashes, newlines, tabs and other control
+    // characters; doubles via Double.toString), so tables committed before
+    // the codec change resume
+    val dir = Files.createTempDirectory("graft-manifest-old").toString
+    Files.createDirectories(Manifest.snapshotDir(dir))
+    val body =
+      """{"version":7,"boundaries":["doc-[0]","doc-\"b\"\n","doc-\\]"],"completed":[""" +
+        """{"rangeId":0,"lower":"","upper":"doc-[0]","path":"range=0","rows":10,"spans":42,""" +
+        """"wallSecs":1.5,"corruptPayloads":2,"inputDocs":"in\tput"},""" +
+        """{"rangeId":2,"lower":"doc-\"b\"\n","upper":"doc-\\]","path":"range=2","rows":0,""" +
+        """"spans":0,"wallSecs":1.0E-4,"corruptPayloads":0,"inputDocs":"ctl""" + "\\u0001" + """"}]}"""
+    Files.write(Manifest.snapshotDir(dir).resolve("v7.json"), body.getBytes("UTF-8"))
+    val expected = Snapshot(7, Seq("doc-[0]", "doc-\"b\"\n", "doc-\\]"), Seq(
+      graft.table.RangeEntry(0, "", "doc-[0]", "range=0", 10, 42, 1.5, 2, "in\tput"),
+      graft.table.RangeEntry(2, "doc-\"b\"\n", "doc-\\]", "range=2", 0, 0, 1.0e-4, 0, "ctl\u0001")))
+    assert(Manifest.latest(dir).contains(expected))
+    assert(Manifest.latest(dir).get.completedIds == Set(0, 2))
+  }
+
   test("per-range media scan carries a pushed media_ref range filter") {
     implicit val s = spark
     import s.implicits._
