@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,18 +16,20 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: eval suites are TINY next to a training corpus (10^5-10^6
   * grams vs 10^12 docs), so the eval gram set is built once (distinct over
-  * the small side) and explicit-`broadcast` hash-joined against the exploded
-  * training grams — the corpus side never shuffles for the join; the only
-  * corpus-keyed exchange is the per-doc rollup aggregation. K reuses
+  * the small side) and hash-joined against the exploded training grams.
+  * The join carries no `broadcast` hint: the eval side is the
+  * `doc_id % EvalMod` slice of the corpus, so it grows with the corpus. The
+  * planner broadcasts it while its estimate fits `autoBroadcastJoinThreshold`
+  * (PlanSpec pins, at sf0.001, that the corpus side never shuffles for the
+  * join) and shuffles past it ([[decontaminateBloom]] is the plan for that
+  * regime). The only corpus-keyed exchange otherwise is
+  * the per-doc rollup aggregation. K reuses
   * [[DedupOps.DupGramK]] (md5'd 8-token grams, the dd6/dd8 convention).
   */
 object ContaminationOps {
 
   /** Eval-set selector: every EvalMod-th doc_id. */
   final val EvalMod = 97L
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** ctn1: per TRAINING doc (eval docs excluded from the output), the K-gram
     * collision profile against the eval set —
@@ -36,7 +39,7 @@ object ContaminationOps {
     * zero grams and a clean verdict.
     */
   def decontaminate(spark: SparkSession, dir: String): DataFrame =
-    decontaminateOf(docs(spark, dir))
+    decontaminateOf(Tables.docs(spark, dir))
 
   /** [[decontaminate]] over an explicit `(doc_id, text)` frame. */
   def decontaminateOf(d: DataFrame): DataFrame = {
@@ -64,7 +67,7 @@ object ContaminationOps {
       .select(col("doc_id"), col("n_tokens"), size(col("g")).cast("long").as("n_grams"),
         explode_outer(col("g")).as("h"))
     train
-      .join(broadcast(evalGrams), Seq("h"), "left")
+      .join(evalGrams, Seq("h"), "left")
       .groupBy("doc_id", "n_tokens", "n_grams")
       .agg(sum(coalesce(col("hit"), lit(0))).as("n_contaminated"))
       .select(col("doc_id"), col("n_tokens"), col("n_grams"), col("n_contaminated"),
@@ -104,7 +107,7 @@ object ContaminationOps {
     * positives cost shuffle bytes, never correctness.
     */
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame =
-    decontaminateBloomOf(docs(spark, dir))(spark)
+    decontaminateBloomOf(Tables.docs(spark, dir))(spark)
 
   /** [[decontaminateBloom]] over an explicit `(doc_id, text)` frame. */
   def decontaminateBloomOf(d: DataFrame)(implicit spark: SparkSession): DataFrame = {
@@ -163,16 +166,16 @@ object ContaminationOps {
     * §6.2. Short/empty eval docs pass through with zero grams, clean.
     *
     * Scale shape: the pair frame is (training gram positions ∩ eval grams) —
-    * bounded by actual contamination, not corpus size; built by
-    * broadcast-joining the tiny distinct eval-gram set into the training
-    * gram stream (the corpus side never shuffles for the join, ctn1's
-    * argument), then both distinct rollups are two-level groupBys keyed by
-    * the compound pair first — never a countDistinct Expand over corpus-
+    * bounded by actual contamination, not corpus size; built by joining the
+    * distinct eval-gram set and the gram→eval-doc map into the training gram
+    * stream without a hint (ctn1's argument: they grow with the corpus, and
+    * the planner broadcasts them while they fit), then both distinct rollups
+    * are two-level groupBys keyed by the compound pair first — never a countDistinct Expand over corpus-
     * scale data. Eval-sided frames (totals, gram→doc map, hit rollups) are
     * all bounded by the eval suite's size.
     */
   def evalContamination(spark: SparkSession, dir: String): DataFrame =
-    evalContaminationOf(docs(spark, dir))
+    evalContaminationOf(Tables.docs(spark, dir))
 
   /** [[evalContamination]] over an explicit `(doc_id, text)` frame. */
   def evalContaminationOf(d: DataFrame): DataFrame = {
@@ -194,9 +197,9 @@ object ContaminationOps {
     val trainPairs = withG.where(!isEval)
       .select(col("doc_id").as("train_doc"), col("g"))
       .select(col("train_doc"), explode(col("g")).as("h"))
-      .join(broadcast(evalGrams), Seq("h"))
+      .join(evalGrams, Seq("h"))
       .distinct()
-    val pairs = trainPairs.join(broadcast(evalGramDoc), Seq("h"))
+    val pairs = trainPairs.join(evalGramDoc, Seq("h"))
     val hitGrams = pairs.select("eval_doc", "h").distinct()
       .groupBy("eval_doc").agg(count(lit(1)).as("n_hit_grams"))
     val hitDocs = pairs.select("eval_doc", "train_doc").distinct()

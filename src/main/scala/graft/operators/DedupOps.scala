@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.expr.Native
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,9 +51,6 @@ object DedupOps {
   /** Sub-chunks (start, len) of the 45 remaining bits once a band is removed. */
   final val SubBounds: Seq[(Int, Int)] = Seq((0, 12), (12, 11), (23, 11), (34, 11))
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** Candidate near-dup pairs via LSH banding + exact Jaccard verification.
     * Output: (doc_a, doc_b, est_sim, jaccard) for pairs with jaccard >= minJaccard.
     *
@@ -68,7 +66,7 @@ object DedupOps {
     */
   def dedupMinHash(spark: SparkSession, dir: String, minJaccard: Double = 0.5,
                    maxDocs: Long = Long.MaxValue): DataFrame = {
-    val base = docs(spark, dir)
+    val base = Tables.docs(spark, dir)
     val bounded = if (maxDocs == Long.MaxValue) base else base.where(col("doc_id") < maxDocs)
     minHashPairs(bounded, minJaccard)
   }
@@ -186,7 +184,7 @@ object DedupOps {
     * value-checked by the driver's DuckDB oracle (all-pairs at sf scale).
     */
   def dedupSimHash(spark: SparkSession, dir: String): DataFrame =
-    simHashPairs(docs(spark, dir))
+    simHashPairs(Tables.docs(spark, dir))
 
   def simHashPairs(d: DataFrame): DataFrame =
     simHashPairsUnsorted(d).orderBy("doc_a", "doc_b")
@@ -229,7 +227,7 @@ object DedupOps {
     * unchanged.
     */
   def dupClusters(spark: SparkSession, dir: String): DataFrame =
-    dupClustersOf(docs(spark, dir))
+    dupClustersOf(Tables.docs(spark, dir))
 
   /** [[dupClusters]] over an explicit `(doc_id, text)` frame. */
   def dupClustersOf(d: DataFrame): DataFrame =
@@ -382,7 +380,7 @@ object DedupOps {
     * with map-side combine — no per-cluster window/sort.
     */
   def clusterKeeper(spark: SparkSession, dir: String): DataFrame =
-    clusterKeeperOf(docs(spark, dir))
+    clusterKeeperOf(Tables.docs(spark, dir))
 
   /** [[clusterKeeper]] over an explicit `(doc_id, text)` frame. */
   def clusterKeeperOf(d: DataFrame): DataFrame = {
@@ -438,7 +436,7 @@ object DedupOps {
     // md5-hashes every gram of every doc, exactly the CPU-dense work the
     // single-split guard exists for (review fix: the former inline copy
     // skipped the spread and serialized the corpus onto one task)
-    val mat = tokenized(docs(spark, dir))
+    val mat = tokenized(Tables.docs(spark, dir))
     val grams = gramHashes(col("toks"))
     val g = mat
       .select(col("doc_id"), explode(array_distinct(grams)).as("h"))
@@ -477,7 +475,7 @@ object DedupOps {
     *     side shuffles; an ExactSubstr CUTTER re-reads the text anyway.
     */
   def dupSpans(spark: SparkSession, dir: String): DataFrame =
-    dupSpansOf(docs(spark, dir))
+    dupSpansOf(Tables.docs(spark, dir))
 
   /** [[dupSpans]] over an explicit `(doc_id, text)` frame. */
   def dupSpansOf(d: DataFrame): DataFrame = {
@@ -553,7 +551,7 @@ object DedupOps {
     * short linear scan, not a blowup.
     */
   def cutDupSpans(spark: SparkSession, dir: String): DataFrame =
-    cutDupSpansOf(docs(spark, dir))
+    cutDupSpansOf(Tables.docs(spark, dir))
 
   /** [[cutDupSpans]] over an explicit `(doc_id, text)` frame. */
   def cutDupSpansOf(d: DataFrame): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,9 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object DomainOps {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** Permille buckets for [[hashSplit]]. */
   final val SplitBuckets = 1000L
   /** test = buckets [0, TestPermille); val = [TestPermille, ValPermille). */
@@ -60,7 +58,7 @@ object DomainOps {
     * DuckDB reproduces every bucket exactly.
     */
   def hashSplit(spark: SparkSession, dir: String): DataFrame =
-    hashSplitOf(docs(spark, dir))
+    hashSplitOf(Tables.docs(spark, dir))
 
   /** [[hashSplit]] over an explicit frame carrying `doc_id, source`. */
   def hashSplitOf(d: DataFrame): DataFrame = {
@@ -88,7 +86,7 @@ object DomainOps {
     * broadcast back (never a corpus-wide pass).
     */
   def mixPlan(spark: SparkSession, dir: String): DataFrame =
-    mixPlanOf(docs(spark, dir))
+    mixPlanOf(Tables.docs(spark, dir))
 
   /** [[mixPlan]] over an explicit `(doc_id, source, text)` frame. */
   def mixPlanOf(d: DataFrame): DataFrame = {
@@ -132,7 +130,7 @@ object DomainOps {
     * negative operands).
     */
   def applyMix(spark: SparkSession, dir: String): DataFrame =
-    applyMixOf(docs(spark, dir))
+    applyMixOf(Tables.docs(spark, dir))
 
   /** [[applyMix]] over an explicit `(doc_id, source, text)` frame. */
   def applyMixOf(d: DataFrame): DataFrame = {
@@ -173,7 +171,7 @@ object DomainOps {
     * #sources × #distinct-lengths rows.
     */
   def lengthPercentiles(spark: SparkSession, dir: String): DataFrame =
-    lengthPercentilesOf(docs(spark, dir))
+    lengthPercentilesOf(Tables.docs(spark, dir))
 
   /** [[lengthPercentiles]] over an explicit `(source, text)` frame. */
   def lengthPercentilesOf(d: DataFrame): DataFrame = {
@@ -203,7 +201,7 @@ object DomainOps {
     * keep/drop verdict (`boilerplate` checked before `low_quality`).
     */
   def sourceStats(spark: SparkSession, dir: String): DataFrame =
-    sourceStatsOf(docs(spark, dir))
+    sourceStatsOf(Tables.docs(spark, dir))
 
   /** [[sourceStats]] over an explicit `(doc_id, source, text)` frame. */
   def sourceStatsOf(d: DataFrame): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, concat, lit}
@@ -236,7 +237,7 @@ object MultimodalOps {
   /** The refs of `src` over the documents table of `dir`. */
   def refs(spark: SparkSession, dir: String, src: MmSource[_]): Dataset[String] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.docs(spark, dir)
       .select(concat(lit(src.prefix), $"doc_id").as("media_ref"))
       .as[String]
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,16 +36,13 @@ object PackingOps {
   /** Docs per offset bucket (level-1 granularity). */
   final val DefaultBucketSize = 1L << 20
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** pack1: `(doc_id, n_tokens, global_offset, seq_id, offset_in_seq)` for
     * every document (empty docs carry 0 tokens and pack at their
     * predecessor's end). `seq_id` is the sequence holding the doc's FIRST
     * token; a doc may spill into later sequences.
     */
   def sequenceOffsets(spark: SparkSession, dir: String): DataFrame =
-    sequenceOffsetsOf(docs(spark, dir))
+    sequenceOffsetsOf(Tables.docs(spark, dir))
 
   /** [[sequenceOffsets]] over an explicit `(doc_id, text)` frame. */
   def sequenceOffsetsOf(d: DataFrame, bucketSize: Long = DefaultBucketSize): DataFrame =
@@ -108,7 +106,7 @@ object PackingOps {
     * Generate and re-evaluated per exploded row).
     */
   def sequenceManifest(spark: SparkSession, dir: String): DataFrame =
-    sequenceManifestOf(docs(spark, dir))
+    sequenceManifestOf(Tables.docs(spark, dir))
 
   /** [[sequenceManifest]] over an explicit `(doc_id, text)` frame. */
   def sequenceManifestOf(d: DataFrame, bucketSize: Long = DefaultBucketSize): DataFrame = {

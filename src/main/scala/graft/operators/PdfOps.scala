@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, length, md5}
 import graft.kernel.Pdf
@@ -25,7 +26,7 @@ object PdfOps {
     // range-spread on the sort key (Par scaladoc): the render+parse kernel
     // runs once — the final orderBy's range sampler re-executed it before —
     // and the exchange moves source rows, not rendered output
-    Par.rangeSpread(spark.read.parquet(s"$dir/documents.parquet")
+    Par.rangeSpread(Tables.docs(spark, dir)
       .select(col("doc_id"), col("text")), col("doc_id"))
       .as[(Long, String)]
       .map { case (id, text) =>

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,9 +21,6 @@ import org.apache.spark.sql.functions._
   * composition — stage interfaces included, not just each stage alone.
   */
 object PipelineOps {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** pipe4: see the object doc. Stage order is part of the spec:
     *
@@ -49,7 +47,7 @@ object PipelineOps {
     * broadcasts, or frames bounded by #sources / contamination.
     */
   def trainingCorpus(spark: SparkSession, dir: String): DataFrame =
-    trainingCorpusOf(docs(spark, dir))
+    trainingCorpusOf(Tables.docs(spark, dir))
 
   /** [[trainingCorpus]] over an explicit `(doc_id, source, text)` frame. */
   def trainingCorpusOf(d: DataFrame): DataFrame = {
@@ -92,7 +90,8 @@ object PipelineOps {
       .drop("grp_keeper", "keep")
       .localCheckpoint())
     // 3. decontamination: eval grams from the RAW corpus (ctn1's eval-set
-    // definition), broadcast-semi-joined against the keepers' gram stream
+    // definition), semi-joined against the keepers' gram stream — unhinted:
+    // the eval slice grows with the corpus (ctn1's argument)
     val gramsOf = (toks: org.apache.spark.sql.Column) =>
       when(size(toks) >= K, DedupOps.gramHashes(toks))
         .otherwise(array().cast("array<string>"))
@@ -106,7 +105,7 @@ object PipelineOps {
       .select(col("doc_id"), TextOps.tokensOf(col("text")).as("toks"))
       .select(col("doc_id"), gramsOf(col("toks")).as("g"))
       .select(col("doc_id"), explode(col("g")).as("h"))
-      .join(broadcast(evalGrams), Seq("h"), "left_semi")
+      .join(evalGrams, Seq("h"), "left_semi")
       .select("doc_id").distinct()
     val clean = keepers
       .join(broadcast(contaminated), Seq("doc_id"), "left_anti")

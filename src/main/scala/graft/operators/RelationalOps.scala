@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -12,12 +13,9 @@ import org.apache.spark.sql.expressions.Window
   */
 object RelationalOps {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   /** Pricing summary — partial+final hash aggregation over the fact table. */
   def pricingAgg(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
+    Tables.table(spark, dir, "lineitem")
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
         sum("l_quantity").as("sum_qty"),
@@ -29,8 +27,8 @@ object RelationalOps {
   /** Revenue by market segment — no broadcast hint on customer (150k × SF
     * rows): the planner decides from its size. */
   def marketRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val orders = t(spark, dir, "orders")
-    val customer = t(spark, dir, "customer")
+    val orders = Tables.table(spark, dir, "orders")
+    val customer = Tables.table(spark, dir, "customer")
     orders
       .join(customer, orders("o_custkey") === customer("c_custkey"))
       .groupBy("c_mktsegment")
@@ -40,8 +38,8 @@ object RelationalOps {
 
   /** Top-3 customers by balance per nation — ranking window + broadcast dim. */
   def nationTopCustomers(spark: SparkSession, dir: String): DataFrame = {
-    val customer = t(spark, dir, "customer")
-    val nation = t(spark, dir, "nation")
+    val customer = Tables.table(spark, dir, "customer")
+    val nation = Tables.table(spark, dir, "nation")
     val w = Window.partitionBy("c_nationkey").orderBy(desc("c_acctbal"), asc("c_custkey"))
     customer
       .withColumn("rn", row_number().over(w))
@@ -55,15 +53,15 @@ object RelationalOps {
     * the parquet scan (verified in PlanSpec via PushedFilters/ReadSchema).
     */
   def shipdateFilter(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
+    Tables.table(spark, dir, "lineitem")
       .where(col("l_shipdate") >= lit("1995-01-01").cast("timestamp") && col("l_quantity") > 45)
       .select("l_orderkey", "l_linenumber", "l_quantity")
       .orderBy("l_orderkey", "l_linenumber")
 
   /** Orders with at least one heavy lineitem — left-semi join (EXISTS). */
   def priorityHeavyOrders(spark: SparkSession, dir: String): DataFrame = {
-    val orders = t(spark, dir, "orders")
-    val heavy = t(spark, dir, "lineitem").where(col("l_quantity") > 49).select("l_orderkey")
+    val orders = Tables.table(spark, dir, "orders")
+    val heavy = Tables.table(spark, dir, "lineitem").where(col("l_quantity") > 49).select("l_orderkey")
     orders
       .join(heavy, orders("o_orderkey") === heavy("l_orderkey"), "left_semi")
       .groupBy("o_orderpriority")
@@ -73,7 +71,7 @@ object RelationalOps {
 
   /** Brand stats over the part dim — grouped agg with min/max/avg. */
   def brandStats(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "part")
+    Tables.table(spark, dir, "part")
       .groupBy("p_brand")
       .agg(count(lit(1)).as("n_parts"),
         round(avg("p_retailprice"), 2).as("avg_price"),
@@ -82,7 +80,7 @@ object RelationalOps {
 
   /** Tumbling 1-hour event counts — the batch analog of a windowed stream agg. */
   def hourlyEvents(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
+    Tables.table(spark, dir, "events")
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
       .orderBy("hour", "event_type")
@@ -93,9 +91,9 @@ object RelationalOps {
     * join shuffles on the key both sides are later grouped by.
     */
   def shippingPriority(spark: SparkSession, dir: String): DataFrame = {
-    val customer = t(spark, dir, "customer").where(col("c_mktsegment") === "BUILDING")
-    val orders = t(spark, dir, "orders")
-    val lineitem = t(spark, dir, "lineitem")
+    val customer = Tables.table(spark, dir, "customer").where(col("c_mktsegment") === "BUILDING")
+    val orders = Tables.table(spark, dir, "orders")
+    val lineitem = Tables.table(spark, dir, "lineitem")
     lineitem
       .join(orders, lineitem("l_orderkey") === orders("o_orderkey"))
       .join(customer, orders("o_custkey") === customer("c_custkey"))
@@ -112,7 +110,7 @@ object RelationalOps {
     * different join key on the probe side). Ratio rounded 4dp.
     */
   def retention(spark: SparkSession, dir: String): DataFrame = {
-    val uh = t(spark, dir, "events")
+    val uh = Tables.table(spark, dir, "events")
       .select(col("user_id"), date_trunc("hour", col("ts")).as("hour"))
       .distinct()
     val cohort = uh.groupBy("hour").agg(count(lit(1)).as("n_active"))
@@ -131,7 +129,7 @@ object RelationalOps {
 
   /** JSON scalar extraction over the event props column (X6 in SURVEY §2.8). */
   def propsAgg(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
+    Tables.table(spark, dir, "events")
       .select(col("event_type"), get_json_object(col("props"), "$.k").cast("long").as("k"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("k").as("sum_k"), round(avg("k"), 4).as("avg_k"))
@@ -146,7 +144,7 @@ object RelationalOps {
     * emitted as epoch micros (BIGINT) so cross-engine hashing is exact.
     */
   def eventFunnel(spark: SparkSession, dir: String): DataFrame =
-    eventFunnelOf(t(spark, dir, "events"))
+    eventFunnelOf(Tables.table(spark, dir, "events"))
 
   def eventFunnelOf(events: DataFrame): DataFrame = {
     val wPrev = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -183,7 +181,7 @@ object RelationalOps {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     // ts is TIMESTAMP_NTZ; cast to instant (session tz is UTC) for micros math
     val us = unix_micros(col("ts").cast("timestamp"))
-    t(spark, dir, "events")
+    Tables.table(spark, dir, "events")
       .withColumn("prev_us", lag(us, 1).over(w))
       .withColumn("new_session",
         when(col("prev_us").isNull || us - col("prev_us") > 1800L * 1000000L, 1L)

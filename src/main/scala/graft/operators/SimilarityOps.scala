@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.expr.{CosineF32, Native}
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
@@ -32,9 +33,6 @@ object SimilarityOps {
   /** Embedding dimensionality of the `embeddings` table. */
   final val Dim = 64
 
-  private def emb(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
-
   /** Dot product via the engine's native Catalyst expression
     * (graft.expr.DotProduct): ONE generated loop instead of Dim inlined
     * multiply-adds, same left-to-right double accumulation as the previous
@@ -54,7 +52,7 @@ object SimilarityOps {
     * oracle ranks.
     */
   def cosineTopK(spark: SparkSession, dir: String): DataFrame = {
-    val all = emb(spark, dir).select(col("vec_id"), col("embedding"))
+    val all = Tables.table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val queries = all.where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val scored = all.join(broadcast(queries), col("vec_id") =!= col("q_id"))
@@ -79,13 +77,18 @@ object SimilarityOps {
     * block lands wholly in one partition, which is what lets trainCentroids'
     * per-block accumulation be bit-deterministic (see there) regardless of
     * core count, scheduler interleaving, or session history.
+    *
+    * The norm is a column of its own, computed below the exchange: inside
+    * the `transform` lambda it ran once per ELEMENT (Dim² multiply-adds per
+    * vector), and in a Project right above the lambda's Project
+    * `CollapseProject` would inline it back; the exchange between the two
+    * keeps it at one Dim-term dot per row.
     */
-  private def normalized(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).repartition(NBlocks, pmod(col("vec_id"), lit(NBlocks)))
-    val n = sqrt(dot(col("embedding"), col("embedding")))
-    e.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double") / n).as("vec"))
-  }
+  private[operators] def normalized(spark: SparkSession, dir: String): DataFrame =
+    Tables.table(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding"), sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
+      .repartition(NBlocks, pmod(col("vec_id"), lit(NBlocks)))
+      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double") / col("norm")).as("vec"))
 
   /** Score every vector against all centroids in a tight primitive-array loop
     * (broadcast model, one pass, stays out of the Project so the surrounding
@@ -233,7 +236,7 @@ object SimilarityOps {
   def dedupEmbedding(spark: SparkSession, dir: String, threshold: Double = 0.35,
                      nBlocks: Int = 8): DataFrame = {
     import spark.implicits._
-    val rows = emb(spark, dir).select(col("vec_id"), col("embedding"))
+    val rows = Tables.table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])]
     val nb = nBlocks
     // each row goes to every block pair containing its block: group (p<=q)
@@ -501,7 +504,7 @@ object SimilarityOps {
 
   def srpNearDup(spark: SparkSession, dir: String, threshold: Double = 0.35,
                  nPlanes: Int = NPlanes): DataFrame =
-    srpNearDupFrom(emb(spark, dir), threshold, nPlanes)
+    srpNearDupFrom(Tables.table(spark, dir, "embeddings"), threshold, nPlanes)
 
   private[graft] def srpNearDupFrom(e: DataFrame, threshold: Double, nPlanes: Int): DataFrame = {
     require(nPlanes >= 1 && nPlanes <= 62, s"nPlanes $nPlanes outside [1, 62]")
@@ -543,7 +546,7 @@ object SimilarityOps {
     */
   def srpNearDupBanded(spark: SparkSession, dir: String, threshold: Double = 0.35,
                        nTables: Int = SrpBandTables, nPlanes: Int = SrpBandPlanes): DataFrame =
-    srpNearDupBandedFrom(emb(spark, dir), threshold, nTables, nPlanes)
+    srpNearDupBandedFrom(Tables.table(spark, dir, "embeddings"), threshold, nTables, nPlanes)
 
   private[graft] def srpNearDupBandedFrom(e: DataFrame, threshold: Double,
                                           nTables: Int, nPlanes: Int): DataFrame = {

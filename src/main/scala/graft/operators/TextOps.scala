@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,14 +10,11 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** Whitespace token count per document (tokensOf: null text counts 0,
     * the contract every tokenizing op in this file shares).
     */
   def tokenCount(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(col("doc_id"), size(tokensOf(col("text"))).as("n_tokens"))
       .orderBy("doc_id")
 
@@ -46,7 +44,7 @@ object TextOps {
     // range-spread (Par scaladoc): five full regex passes per row — the
     // priciest pure-map projection in the txt family — now run once and in
     // parallel instead of twice on the single scan task
-    Par.rangeSpread(docs(spark, dir).select(col("doc_id"), col("text")), col("doc_id"))
+    Par.rangeSpread(Tables.docs(spark, dir).select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"),
         size(tokensOf(col("text"))).as("n_ws_tokens"),
         cnt(BpePat).as("n_bpe_tokens"),
@@ -71,7 +69,7 @@ object TextOps {
     // range-spread + sortWithinPartitions == orderBy row-for-row (Par
     // scaladoc): the tokenize/regexp projection runs once, in parallel,
     // and the exchange moves raw text instead of being re-sampled over it
-    Par.rangeSpread(docs(spark, dir).select(col("doc_id"), col("text")), col("doc_id"))
+    Par.rangeSpread(Tables.docs(spark, dir).select(col("doc_id"), col("text")), col("doc_id"))
       .select(
         col("doc_id"),
         length(t).as("n_chars"),
@@ -133,7 +131,7 @@ object TextOps {
     // range-spread (Par scaladoc): the 17 marker-word scans over the full
     // text ran twice before — once in the orderBy's range sampler, once for
     // real — and both on the single scan task
-    Par.rangeSpread(docs(spark, dir).select(col("doc_id"), col("lang"), col("text")),
+    Par.rangeSpread(Tables.docs(spark, dir).select(col("doc_id"), col("lang"), col("text")),
         col("doc_id"))
       .select(col("doc_id"), col("lang"), pred.as("pred_lang"),
         (pred === col("lang")).cast("int").as("matched"))
@@ -156,15 +154,17 @@ object TextOps {
     // ran interpreted per position — O(len·(FpK+FpW)) tree-walks per doc,
     // the most CPU-dense columnar stage in the suite — and the sliding
     // minimum is now the O(len) monotonic-deque form. Output SET per doc is
-    // value-identical (NativeTextHashSpec; the final per-(doc_id, fp) sort
-    // fixes presentation order either way). Par.spread keeps the kernel off
-    // a single task when the scan is one small file (a no-op at production
-    // split counts); range-spread is not used here because the explode
-    // changes cardinality before the sort keys exist.
+    // value-identical (NativeTextHashSpec; the per-(doc_id, fp) sort fixes
+    // presentation order either way). Range-spread on doc_id (Par scaladoc):
+    // every row a doc explodes into stays in that doc's partition, and
+    // partitions hold ascending doc_id ranges, so sorting each partition on
+    // (doc_id, fp) IS the total order. The range sampler scans only the
+    // narrow rows — a final orderBy's sampler ran the winnow kernel twice.
     val fps = graft.expr.Native.winnow(col("text"), FpK, FpW, DedupOps.HashB1, DedupOps.HashM1)
-    Par.spread(docs(spark, dir).where(len >= FpK + FpW).select(col("doc_id"), col("text")))
+    Par.rangeSpread(Tables.docs(spark, dir).where(len >= FpK + FpW).select(col("doc_id"), col("text")),
+        col("doc_id"))
       .select(col("doc_id"), explode(fps).as("fp"))
-      .orderBy("doc_id", "fp")
+      .sortWithinPartitions("doc_id", "fp")
   }
 
   /** Whitespace token array of a text column; null and blank text both yield
@@ -208,7 +208,7 @@ object TextOps {
     // sf0.01 bench
     // Par.spread of the RAW rows first: the token-array HOF stats below are
     // the CPU-dense stage and ran on the single scan task before
-    val mat = Par.spread(docs(spark, dir).select(col("doc_id"), col("text")))
+    val mat = Par.spread(Tables.docs(spark, dir).select(col("doc_id"), col("text")))
       .select(col("doc_id"), tokensOf(col("text")).as("toks"))
     val n = size(col("toks"))
     val g2 = bigramsOf(col("toks"), n)
@@ -251,7 +251,7 @@ object TextOps {
     * rounding to 4dp is display-only.
     */
   def qualityFilter(spark: SparkSession, dir: String): DataFrame =
-    qualityFilterOf(docs(spark, dir))
+    qualityFilterOf(Tables.docs(spark, dir))
 
   /** Append the raw quality stats + first-failing-rule verdict to `d` (which
     * must carry `text`), keeping every input column — the composable form
@@ -334,7 +334,7 @@ object TextOps {
     // evaluation onto the single scan task AND evaluates the stats twice
     // (measured: a 4.1 s single-task Filter stage). Post-agg the filter
     // sits on aggregate outputs and cannot sink.
-    qualityStats(Par.spread(docs(spark, dir).select(col("doc_id"), col("text"))))
+    qualityStats(Par.spread(Tables.docs(spark, dir).select(col("doc_id"), col("text"))))
       .select(col("doc_id"), col("text"), col("n_tokens"), col("keep"),
         predLangIdx.as("pred_idx"))
       .groupBy(md5(col("text")).as("text_hash"))
@@ -352,7 +352,7 @@ object TextOps {
     * aggregation combines map-side, so only (hash, count, min) tuples shuffle.
     */
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .groupBy(md5(col("text")).as("text_hash"))
       .agg(count(lit(1)).as("n_dups"), min("doc_id").as("keeper"))
       .orderBy("text_hash")
@@ -377,7 +377,7 @@ object TextOps {
     *   property on this degenerately self-similar corpus.
     */
   def ngramJaccard(spark: SparkSession, dir: String, maxDocs: Long = Long.MaxValue): DataFrame = {
-    val base = docs(spark, dir).select("doc_id", "source", "text")
+    val base = Tables.docs(spark, dir).select("doc_id", "source", "text")
     val d = if (maxDocs == Long.MaxValue) base else base.where(col("doc_id") < maxDocs)
     // positions 1..len-2; sequence() must be guarded (a descending bound
     // silently yields a reversed range in Spark)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,9 +18,6 @@ import org.apache.spark.sql.functions._
   * never re-scan the corpus).
   */
 object VocabOps {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** Top-K terms reported per source by [[topTerms]]. */
   final val TopK = 5
@@ -41,7 +39,7 @@ object VocabOps {
     * broadcast. The corpus is scanned exactly once, at checkpoint time.
     */
   def topTerms(spark: SparkSession, dir: String): DataFrame =
-    topTermsOf(docs(spark, dir))
+    topTermsOf(Tables.docs(spark, dir))
 
   /** [[topTerms]] over an explicit `(source, text)` frame. */
   def topTermsOf(d: DataFrame, k: Int = TopK): DataFrame = {
@@ -89,7 +87,7 @@ object VocabOps {
     * fits whole.
     */
   def unigramLogprob(spark: SparkSession, dir: String): DataFrame =
-    unigramLogprobOf(docs(spark, dir))
+    unigramLogprobOf(Tables.docs(spark, dir))
 
   /** [[unigramLogprob]] over an explicit `(doc_id, text)` frame. */
   def unigramLogprobOf(d: DataFrame): DataFrame = {

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema.{Doc, ExtractedDoc, Media}
+import graft.sources.Tables
 import graft.table.{Manifest, RangeEntry, Snapshot}
 
 /** Checkpointed extraction over explicit doc_id ranges: each range is an
@@ -85,7 +86,7 @@ object CheckpointJob {
       val (out, corrupt) = Extract.runWithMetrics(inRange, mediaInRange)
       out.write.mode(SaveMode.Overwrite).parquet(outPath)
       val wall = (System.nanoTime() - t0) / 1e9
-      val written = spark.read.parquet(outPath)
+      val written = Tables.parquet(spark, outPath)
       val rows = written.count()
       val spans = written.select(sum(size(col("spans")))).head().getLong(0)
       val entry = RangeEntry(r, lower, upper, s"range=$r", rows, spans, wall, corrupt.value,
@@ -120,7 +121,7 @@ object CheckpointJob {
       else
         Manifest.read(Manifest.snapshotDir(tableRoot).resolve(s"v$version.json"))
     val paths = snap.completed.map(e => s"$tableRoot/${e.path}")
-    spark.read.parquet(paths: _*).as[ExtractedDoc]
+    Tables.parquet(spark, paths: _*).as[ExtractedDoc]
   }
 
   def main(args: Array[String]): Unit = args.toList match {
@@ -130,8 +131,8 @@ object CheckpointJob {
       import spark.implicits._
       spark.sparkContext.setLogLevel("WARN")
       val failAfter = rest.headOption.map(_.toInt).getOrElse(Int.MaxValue)
-      val docs = spark.read.parquet(docsDir).as[Doc]
-      val media = spark.read.parquet(mediaDir).as[Media]
+      val docs = Tables.parquet(spark, docsDir).as[Doc]
+      val media = Tables.parquet(spark, mediaDir).as[Media]
       val snap = runCheckpointed(docs, media, tableRoot, nRangesS.toInt, docsDir, failAfter)
       println(s"[checkpoint] version=${snap.version} ranges=${snap.completed.size} " +
         s"rows=${snap.completed.map(_.rows).sum} spans=${snap.completed.map(_.spans).sum}")

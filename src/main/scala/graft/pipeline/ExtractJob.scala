@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.sources.Tables
 
 /** spark-submit entry point: generate (or read) the interleaved doc table,
   * run extraction, write the output spans table as doc_id-range-partitioned
@@ -32,7 +33,7 @@ object ExtractJob {
         val out = Extract.runGenerated(n, seed)
         out.write.mode(SaveMode.Overwrite).parquet(outDir)
         val secs = (System.nanoTime() - t0) / 1e9
-        val written = spark.read.parquet(outDir).count()
+        val written = Tables.parquet(spark, outDir).count()
         println(f"[extract-job] docs=$written%d wall=$secs%.2fs throughput=${written / secs}%.1f docs/s -> $outDir")
       case "gendata" :: nDocs :: docsDir :: mediaDir :: rest =>
         val seed = rest.headOption.map(_.toLong).getOrElse(GenData.DefaultSeed)
@@ -41,8 +42,8 @@ object ExtractJob {
         // embeds the doc_id so both tables co-locate by range
         docs.repartitionByRange(docs("doc_id")).write.mode(SaveMode.Overwrite).parquet(docsDir)
         media.repartitionByRange(media("media_ref")).write.mode(SaveMode.Overwrite).parquet(mediaDir)
-        println(s"[extract-job] wrote ${spark.read.parquet(docsDir).count()} docs, " +
-          s"${spark.read.parquet(mediaDir).count()} media payloads")
+        println(s"[extract-job] wrote ${Tables.parquet(spark, docsDir).count()} docs, " +
+          s"${Tables.parquet(spark, mediaDir).count()} media payloads")
       case "run" :: docsDir :: mediaDir :: outDir :: flags =>
         // spark-submit config surface mirroring the reference's constructor/
         // detect kwargs (cn_std.py:44-143): --rotated (rotated_bbox=True, the
@@ -60,20 +61,20 @@ object ExtractJob {
           useDilation = flags.contains("--dilation"),
           renderCrops = flags.contains("--crops"),
           scoreSlow = flags.contains("--score-slow"))
-        val docs = spark.read.parquet(docsDir).as[graft.schema.Doc]
-        val media = spark.read.parquet(mediaDir).as[graft.schema.Media]
+        val docs = Tables.parquet(spark, docsDir).as[graft.schema.Doc]
+        val media = Tables.parquet(spark, mediaDir).as[graft.schema.Media]
         val t0 = System.nanoTime()
         Extract.run(docs, media, cfg).write.mode(SaveMode.Overwrite).parquet(outDir)
         val secs = (System.nanoTime() - t0) / 1e9
-        val written = spark.read.parquet(outDir).count()
+        val written = Tables.parquet(spark, outDir).count()
         println(f"[extract-job] docs=$written%d wall=$secs%.2fs throughput=${written / secs}%.1f docs/s cfg=$cfg -> $outDir")
       case "runjson" :: docsDir :: mediaDir :: outDir :: Nil =>
         // S8 text/JSON sink — the analog of the reference's det_results.txt
         // (one line per image: "filename\t<json boxes>",
         // /root/reference/cnstd/ppocr/pp_detector.py:299-330): one line per
         // doc, "doc_id\t<json spans array>", written as text partitions.
-        val docs = spark.read.parquet(docsDir).as[graft.schema.Doc]
-        val media = spark.read.parquet(mediaDir).as[graft.schema.Media]
+        val docs = Tables.parquet(spark, docsDir).as[graft.schema.Doc]
+        val media = Tables.parquet(spark, mediaDir).as[graft.schema.Media]
         Extract.run(docs, media).toDF()
           .select(org.apache.spark.sql.functions.concat_ws("\t",
             org.apache.spark.sql.functions.col("doc_id"),
@@ -85,7 +86,7 @@ object ExtractJob {
         val q = graft.streaming.StreamingExtract.start(docsGlob, outDir, ckptDir,
           graft.streaming.StreamingExtract.GeneratedMediaStore(seed))
         q.awaitTermination()
-        val n = spark.read.parquet(outDir).count()
+        val n = Tables.parquet(spark, outDir).count()
         println(s"[extract-job] stream drained; total docs in sink: $n")
       case other =>
         System.err.println(s"usage: ExtractJob gen <nDocs> <outDir> [seed] | run <docsDir> <mediaDir> <outDir> [--rotated --auto-rotate --angle-clf --dilation --crops --score-slow] | runjson <docsDir> <mediaDir> <outDir> | stream <docsGlob> <outDir> <ckptDir> [seed] (got: $other)")

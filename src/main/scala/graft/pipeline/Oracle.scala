@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.col
 import graft.kernel.{Assemble, Detect}
 import graft.operators.{ExtractOps, MinUnionFind, MultimodalOps, SimilarityOps}
 import graft.schema.{Doc, ExtractedDoc}
+import graft.sources.Tables
 
 /** Straight-line single-threaded oracles: every computation here is an
   * independent recompute of a query the DuckDB oracle cannot express, and the
@@ -127,7 +128,7 @@ object Oracle {
     */
   private def oracleVecs(spark: SparkSession, dir: String): Array[(Long, Array[Double])] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/embeddings.parquet").select(col("vec_id"), col("embedding"))
+    Tables.table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])].collect().sortBy(_._1)
       .map { case (id, e) =>
         var s = 0.0

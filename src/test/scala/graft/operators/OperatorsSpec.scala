@@ -687,6 +687,21 @@ class OperatorsSpec extends SparkSpec {
     assert(byGroup.exists(_._2.size > 1), "fixture too weak: no multi-member semantic group")
   }
 
+  test("sim2/sim5 normalization: one dot per row, below the exchange, never inside the lambda") {
+    // inside the transform lambda the norm ran once per ELEMENT (Dim² work
+    // per vector); in a Project right above the lambda's, CollapseProject
+    // would inline it back
+    val df = SimilarityOps.normalized(spark, sf)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val dots = p.linesIterator.filter(_.contains("graft_dot")).toSeq
+    assert(dots.size == 1, s"want one graft_dot Project:\n${p.take(2500)}")
+    assert(!dots.head.contains("lambdafunction"), s"norm inside the lambda:\n${p.take(2500)}")
+    val lines = p.linesIterator.toSeq
+    assert(lines.indexWhere(_.contains("Exchange")) < lines.indexWhere(_.contains("graft_dot")),
+      s"norm not below the exchange:\n${p.take(2500)}")
+  }
+
   test("hash split: deterministic, row-local, fractions near the permille targets") {
     import spark.implicits._
     val d = (0L until 5000L).map(i => (i, s"src${i % 7}")).toDF("doc_id", "source")
