@@ -41,6 +41,20 @@ object Sessions {
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.file.transferTo", "false")
+      // Compiled whole-stage and expression classes live in one JVM-wide
+      // cache that Spark sizes once, when its CodeGenerator first loads, so
+      // this static conf has to be set before any query plans. Its default,
+      // 100 entries, is below the engine's working set: the 4 perfbench
+      // `queries` compile 100 classes per pass, one pass of the 63 Verify
+      // queries 814 at sf0.01 and 831 at sf0.1 (graft.SuiteProbe, 4-core
+      // host). At 100 every warm pass evicted classes and compiled them
+      // again (59 per `queries` pass, ~1035 per sf0.01 suite round), and
+      // HotSpot JIT-compiled each fresh class anew. At 2048 a warm pass
+      // compiles nothing once each query's class variants have been seen
+      // (CodegenGuardSpec); a warm sf0.01 suite round fell from 17.7-19.7 s
+      // to 12.3-14.9 s. Peak metaspace did not rise: 178 -> 176 MB over one
+      // suite round, 199 -> 183 MB over five (no evicted classes to reload).
+      .config("spark.sql.codegen.cache.maxEntries", "2048")
 
   /** A `local[cpus]` session with the tuned configuration. The engine's
     * native Columns (graft.expr.Native) need no per-session setup, so this

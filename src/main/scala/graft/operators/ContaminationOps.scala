@@ -171,8 +171,8 @@ object ContaminationOps {
     * stream without a hint (ctn1's argument: they grow with the corpus, and
     * the planner broadcasts them while they fit), then both distinct rollups
     * are two-level groupBys keyed by the compound pair first — never a countDistinct Expand over corpus-
-    * scale data. Eval-sided frames (totals, gram→doc map, hit rollups) are
-    * all bounded by the eval suite's size.
+    * scale data. The per-eval-doc totals and hit rollups meet in one
+    * union-aggregate, not a join.
     */
   def evalContamination(spark: SparkSession, dir: String): DataFrame =
     evalContaminationOf(Tables.docs(spark, dir))
@@ -200,22 +200,24 @@ object ContaminationOps {
       .join(evalGrams, Seq("h"))
       .distinct()
     val pairs = trainPairs.join(evalGramDoc, Seq("h"))
-    val hitGrams = pairs.select("eval_doc", "h").distinct()
-      .groupBy("eval_doc").agg(count(lit(1)).as("n_hit_grams"))
-    val hitDocs = pairs.select("eval_doc", "train_doc").distinct()
-      .groupBy("eval_doc").agg(count(lit(1)).as("n_train_docs"))
-    val hits = hitGrams.join(broadcast(hitDocs), Seq("eval_doc"))
-      .withColumnRenamed("eval_doc", "doc_id")
-    evalTotals
-      .join(broadcast(hits), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_grams"), col("n_distinct_grams"),
-        coalesce(col("n_hit_grams"), lit(0L)).as("n_hit_grams"),
-        coalesce(col("n_train_docs"), lit(0L)).as("n_train_docs"),
+    // per eval doc: its totals row plus one row per distinct hit gram and
+    // per distinct training doc, summed — a union where a join would need a
+    // forced broadcast (every frame here grows with the eval slice)
+    val (zero, one) = (lit(0L), lit(1L))
+    val sum0 = (c: String) => coalesce(sum(c), zero).as(c)
+    evalTotals.select(col("doc_id"), col("n_grams"), col("n_distinct_grams"),
+        zero.as("n_hit_grams"), zero.as("n_train_docs"))
+      .union(pairs.select("eval_doc", "h").distinct().select(col("eval_doc"), zero, zero, one, zero))
+      .union(pairs.select("eval_doc", "train_doc").distinct()
+        .select(col("eval_doc"), zero, zero, zero, one))
+      .groupBy("doc_id")
+      .agg(sum0("n_grams"), sum0("n_distinct_grams"), sum0("n_hit_grams"), sum0("n_train_docs"))
+      .select(col("doc_id"), col("n_grams"), col("n_distinct_grams"), col("n_hit_grams"),
+        col("n_train_docs"),
         when(col("n_distinct_grams") === 0, 0.0)
-          .otherwise(round(coalesce(col("n_hit_grams"), lit(0L)).cast("double")
-            / col("n_distinct_grams"), 4))
+          .otherwise(round(col("n_hit_grams").cast("double") / col("n_distinct_grams"), 4))
           .as("hit_frac"),
-        (coalesce(col("n_hit_grams"), lit(0L)) > 0).cast("int").as("compromised"))
+        (col("n_hit_grams") > 0).cast("int").as("compromised"))
       .orderBy("doc_id")
   }
 }

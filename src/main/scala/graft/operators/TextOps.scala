@@ -103,7 +103,24 @@ object TextOps {
   /** Verdict vocabulary, indexed by [[predLangIdx]]. */
   private[operators] val LangNames: Seq[String] = Seq("zh", "en", "de", "fr", "es")
 
-  /** The language-ID decision tree as a composable INT Column over `text`:
+  /** `df` plus the columns [[predLangIdx]] decides over: the CJK-char count
+    * and each language's marker score, all over `text`.
+    *
+    * They are projected once, ahead of the decision, because the decision
+    * tree references each score up to four times: inlined into one
+    * expression, whole-stage codegen expanded every reference into one
+    * generated method of ~19 KB, past HotSpot's 8000-byte
+    * `DontCompileHugeMethods` limit, so txt3 and pipe1 ran it interpreted.
+    * Spark keeps the two projections apart (it does not collapse a
+    * projection whose costly outputs the next one reads more than once).
+    */
+  private[operators] def withLangScores(df: DataFrame): DataFrame =
+    df.select(col("*") +:
+      length(regexp_replace(col("text"), "[^\\u4e00-\\u9fff]", "")).as("_cjk") +:
+      LangMarkers.map { case (l, ms) => markerScore(ms).as(s"_score_$l") }: _*)
+
+  /** The language-ID decision tree as a composable INT Column over the
+    * columns of [[withLangScores]]:
     * CJK chars force zh (0); otherwise the highest marker-word vote wins,
     * ties broken in (en, de, fr, es) order. The single decision tree both
     * txt3 and pipe1 build on, so the two can never drift apart. Int (not
@@ -112,12 +129,11 @@ object TextOps {
     * string falls back to SortAggregate with a per-partition map-side sort.
     */
   private[operators] def predLangIdx: Column = {
-    val scores = LangMarkers.map { case (l, ms) => l -> markerScore(ms) }.toMap
-    val cjk = length(regexp_replace(col("text"), "[^\\u4e00-\\u9fff]", ""))
-    when(cjk > 0, 0)
-      .when(scores("en") >= scores("de") && scores("en") >= scores("fr") && scores("en") >= scores("es"), 1)
-      .when(scores("de") >= scores("fr") && scores("de") >= scores("es"), 2)
-      .when(scores("fr") >= scores("es"), 3)
+    val score = (l: String) => col(s"_score_$l")
+    when(col("_cjk") > 0, 0)
+      .when(score("en") >= score("de") && score("en") >= score("fr") && score("en") >= score("es"), 1)
+      .when(score("de") >= score("fr") && score("de") >= score("es"), 2)
+      .when(score("fr") >= score("es"), 3)
       .otherwise(4)
   }
 
@@ -131,8 +147,8 @@ object TextOps {
     // range-spread (Par scaladoc): the 17 marker-word scans over the full
     // text ran twice before — once in the orderBy's range sampler, once for
     // real — and both on the single scan task
-    Par.rangeSpread(Tables.docs(spark, dir).select(col("doc_id"), col("lang"), col("text")),
-        col("doc_id"))
+    withLangScores(Par.rangeSpread(
+        Tables.docs(spark, dir).select(col("doc_id"), col("lang"), col("text")), col("doc_id")))
       .select(col("doc_id"), col("lang"), pred.as("pred_lang"),
         (pred === col("lang")).cast("int").as("matched"))
       .sortWithinPartitions("doc_id")
@@ -334,7 +350,7 @@ object TextOps {
     // evaluation onto the single scan task AND evaluates the stats twice
     // (measured: a 4.1 s single-task Filter stage). Post-agg the filter
     // sits on aggregate outputs and cannot sink.
-    qualityStats(Par.spread(Tables.docs(spark, dir).select(col("doc_id"), col("text"))))
+    withLangScores(qualityStats(Par.spread(Tables.docs(spark, dir).select(col("doc_id"), col("text")))))
       .select(col("doc_id"), col("text"), col("n_tokens"), col("keep"),
         predLangIdx.as("pred_idx"))
       .groupBy(md5(col("text")).as("text_hash"))

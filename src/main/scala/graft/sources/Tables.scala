@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -60,15 +60,19 @@ object Tables {
   /** (file, length, mtime) of every leaf file under `paths` (globs expanded),
     * sorted; a path that matches nothing contributes no entry, and
     * its read fails in Spark exactly as a plain read would.
+    *
+    * The walk reads plain `listStatus` entries, not `fs.listFiles`: that
+    * builds a `LocatedFileStatus` per file, whose constructor loads the
+    * file's permissions, and on the local file system without Hadoop's
+    * native library that starts one `ls -ld` process per file, on every read.
     */
   private def fingerprint(spark: SparkSession, paths: Seq[String]): Seq[(String, Long, Long)] =
     paths.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Option(fs.globStatus(path)).toSeq.flatten.flatMap { st =>
-        val it = fs.listFiles(st.getPath, true)
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq
-      }
+      def leaves(st: FileStatus): Seq[FileStatus] =
+        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves) else Seq(st)
+      Option(fs.globStatus(path)).toSeq.flatten.flatMap(leaves)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
     }.sorted
 }

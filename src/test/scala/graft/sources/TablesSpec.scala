@@ -6,6 +6,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+
 import org.apache.commons.io.FileUtils
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -94,6 +97,30 @@ class TablesSpec extends SparkSpec {
       assert(jobs(a)(Tables.parquet(a, p))._2 == 1)
       assert(jobs(a)(Tables.parquet(a, p))._2 == 0)
       assert(jobs(b)(Tables.parquet(b, p))._2 == 1, "a second session reused the first's schema")
+    }
+  }
+
+  test("reading a multi-part table starts no OS process") {
+    withDir { p =>
+      spark.range(0, 40, 1, 4).toDF("id").write.parquet(p)
+      assert(new File(p).listFiles().count(_.getName.endsWith(".parquet")) == 4)
+      val rec = new Recording()
+      rec.enable("jdk.ProcessStart")
+      val dump = Files.createTempFile("tables", ".jfr")
+      try {
+        rec.start()
+        val n = (1 to 2).map(_ => Tables.parquet(spark, p).count())
+        rec.stop()
+        assert(n == Seq(40L, 40L))
+        rec.dump(dump)
+        val starts = RecordingFile.readAllEvents(dump).asScala
+          .filter(_.getEventType.getName == "jdk.ProcessStart")
+          .map(_.getString("command"))
+        assert(starts.isEmpty, s"a read started ${starts.size} processes: ${starts.mkString("; ")}")
+      } finally {
+        rec.close()
+        Files.deleteIfExists(dump)
+      }
     }
   }
 
