@@ -55,6 +55,15 @@ object Sessions {
       // to 12.3-14.9 s. Peak metaspace did not rise: 178 -> 176 MB over one
       // suite round, 199 -> 183 MB over five (no evicted classes to reload).
       .config("spark.sql.codegen.cache.maxEntries", "2048")
+      // No libhadoop is loaded, so the stock local file system sets each
+      // mode by forking `chmod`: one process for every part file, .crc file,
+      // _temporary dir and _SUCCESS a write creates. JFR counted 222
+      // jdk.ProcessStart events (217 of them chmod, ~17 per pass) in one
+      // perfbench `extract_default` run, and 6 with NioLocalFileSystem,
+      // which sets plain rwx modes through java.nio. 100 Hadoop local
+      // creates took 257-352 ms with chmod and 10-18 ms once warm through
+      // NIO (4-core host).
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
 
   /** A `local[cpus]` session with the tuned configuration. The engine's
     * native Columns (graft.expr.Native) need no per-session setup, so this

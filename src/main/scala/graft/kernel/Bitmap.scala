@@ -8,6 +8,8 @@ package graft.kernel
   * Hot path works on a Long-bitset bitmap built straight from the payload's
   * quantized byte cells — no Float[]/Boolean[] materialization per payload
   * (the kernel stage is memory-bandwidth-bound at high task parallelism).
+  * Past the threshold the hot path never visits a pixel alone: dilation is
+  * whole-word shifts and the labeler works on runs of set bits.
   */
 object Bitmap {
 
@@ -99,104 +101,190 @@ object Bitmap {
     * the even kernel's anchor (cv2's even-kernel anchor handling is
     * version-dependent): out(x,y) = OR of (x-1..x, y-1..y) — self, left, up,
     * up-left — which bridges 1-pixel diagonal/axis gaps either way.
+    *
+    * Word-parallel: with pixel i = y*w + x at bit i, "up" is the bitset
+    * shifted by w and "left" the bitset shifted by 1, so
+    * out = t | (t << 1 minus column 0) with t = b | b << w. The column-0
+    * bits of the shifted term came from the previous row's last column and
+    * are cleared; bits shifted past w*h are cleared too.
     */
   def dilateBits(bits: Array[Long], w: Int, h: Int): Array[Long] = {
-    val out = new Array[Long](bits.length)
+    val n = w * h
+    val t = bits.clone()
+    orShifted(t, bits, w)
+    val left = new Array[Long](t.length)
+    orShifted(left, t, 1)
     var y = 0
     while (y < h) {
-      var x = 0
-      while (x < w) {
-        val v = bit(bits, y * w + x) ||
-          (x > 0 && bit(bits, y * w + x - 1)) ||
-          (y > 0 && bit(bits, (y - 1) * w + x)) ||
-          (x > 0 && y > 0 && bit(bits, (y - 1) * w + x - 1))
-        if (v) out((y * w + x) >>> 6) |= 1L << ((y * w + x) & 63)
-        x += 1
-      }
+      val p = y * w
+      left(p >>> 6) &= ~(1L << (p & 63))
       y += 1
     }
-    out
+    var i = 0
+    while (i < t.length) {
+      t(i) |= left(i)
+      i += 1
+    }
+    // bits at w*h and above are padding: clear whatever the shifts put there
+    val full = n >>> 6
+    if (full < t.length) {
+      t(full) &= (1L << (n & 63)) - 1
+      java.util.Arrays.fill(t, full + 1, t.length, 0L)
+    }
+    t
+  }
+
+  /** dst |= src shifted up by k >= 0 bits (bit i of src lands on bit i + k). */
+  private def orShifted(dst: Array[Long], src: Array[Long], k: Int): Unit = {
+    val q = k >>> 6
+    val r = k & 63
+    var i = dst.length - 1
+    while (i >= q) {
+      val hi = src(i - q)
+      dst(i) |= (if (r == 0) hi
+                 else (hi << r) | (if (i - q - 1 >= 0) src(i - q - 1) >>> (64 - r) else 0L))
+      i -= 1
+    }
   }
 
   /** A connected component: its inclusive pixel-bounding box and, when the
-    * labeler was asked for them, its pixels (pixel = y*w + x) in fill order,
-    * else an empty array. Consumers sort or sum the pixels, so the order
-    * never reaches an output.
+    * labeler was asked for them, its pixels (pixel = y*w + x) in row-major
+    * order, else an empty array.
     */
   final case class Component(xMin: Int, yMin: Int, xMax: Int, yMax: Int, pixels: Array[Int])
 
-  /** 8-connected component labeling via flood fill over the bitset,
-    * components emitted in row-major first-pixel order — the one labeler
-    * behind the axis-aligned box, the rotated min-area rect, the slow polygon
-    * score and the page angle. DESTRUCTIVE: visited bits are cleared (the
-    * bitset doubles as the visited set). Replaces
-    * `cv2.findContours(RETR_EXTERNAL)` + `cv2.boundingRect`
-    * (cnstd/model/base.py:115-117). Capped at `max` components
+  /** 8-connected component labeling, components emitted in row-major
+    * first-pixel order — the one labeler behind the axis-aligned box, the
+    * rotated min-area rect, the slow polygon score and the page angle.
+    * Replaces `cv2.findContours(RETR_EXTERNAL)` + `cv2.boundingRect`
+    * (cnstd/model/base.py:115-117). Capped at the first `max` components
     * (/root/reference/cnstd/ppocr/postprocess/db_postprocess.py:37,71).
+    * Reads `bits` and never writes it.
     *
-    * @param withPixels also collect each component's pixels. Off, the fill
-    *   allocates nothing per component beyond the Component: the axis-aligned
-    *   hot path only reads the bounding box.
+    * Run-based two-scan labeling (He, Chao & Suzuki, "A Run-Based Two-Scan
+    * Labeling Algorithm", IEEE TIP 2008): the first scan finds each row's
+    * runs of set bits a word at a time and unions every run with the runs
+    * of the row above that touch it under 8-connectivity (b0 <= a1 + 1 and
+    * b1 >= a0 - 1). The union-find keeps the smallest run index as the root,
+    * so the roots in index order are the components in row-major
+    * first-pixel order, and every parent index is below its child's. The
+    * second scan resolves runs in index order, folds each root's bounding
+    * box and, when asked, fills the pixels run by run.
+    *
+    * @param withPixels also collect each component's pixels. Off, labeling
+    *   allocates nothing per component beyond the Component: the
+    *   axis-aligned hot path only reads the bounding box.
     */
   def connectedComponents(bits: Array[Long], w: Int, h: Int, max: Int,
                           withPixels: Boolean = false): Seq[Component] = {
-    val n = w * h
-    val out = scala.collection.mutable.ArrayBuffer.empty[Component]
-    var stack = new Array[Int](256)
-    var pixels = if (withPixels) new Array[Int](256) else Array.emptyIntArray
-    var word = 0
-    while (word < bits.length && out.length < max) {
-      while (bits(word) != 0L && out.length < max) {
-        val start = (word << 6) + java.lang.Long.numberOfTrailingZeros(bits(word))
-        if (start >= n) { bits(word) = 0L } // padding bits (never set, defensive)
-        else {
-          var xMin = Int.MaxValue; var yMin = Int.MaxValue
-          var xMax = Int.MinValue; var yMax = Int.MinValue
-          bits(start >>> 6) &= ~(1L << (start & 63))
-          stack(0) = start
-          var sp = 1
-          var count = 0
-          while (sp > 0) {
-            sp -= 1
-            val p = stack(sp)
-            if (withPixels) {
-              if (count == pixels.length) pixels = java.util.Arrays.copyOf(pixels, count * 2)
-              pixels(count) = p
-              count += 1
-            }
-            val px = p % w
-            val py = p / w
-            if (px < xMin) xMin = px
-            if (px > xMax) xMax = px
-            if (py < yMin) yMin = py
-            if (py > yMax) yMax = py
-            var dy = -1
-            while (dy <= 1) {
-              var dx = -1
-              while (dx <= 1) {
-                val ny = py + dy
-                val nx = px + dx
-                if (ny >= 0 && ny < h && nx >= 0 && nx < w) {
-                  val np = ny * w + nx
-                  if (bit(bits, np)) {
-                    bits(np >>> 6) &= ~(1L << (np & 63))
-                    if (sp == stack.length) stack = java.util.Arrays.copyOf(stack, sp * 2)
-                    stack(sp) = np
-                    sp += 1
-                  }
-                }
-                dx += 1
-              }
-              dy += 1
-            }
-          }
-          out += Component(xMin, yMin, xMax, yMax,
-            if (withPixels) java.util.Arrays.copyOf(pixels, count) else pixels)
+    // run i covers columns x0(i)..x1(i) of row ry(i)
+    var x0 = new Array[Int](64)
+    var x1 = new Array[Int](64)
+    var ry = new Array[Int](64)
+    var parent = new Array[Int](64)
+    var nRuns = 0
+    var prevStart = 0 // the row above's runs are [prevStart, rowStart)
+    var y = 0
+    while (y < h) {
+      val rowStart = nRuns
+      val base = y * w
+      val end = base + w
+      var p = nextBit(bits, base, end, set = true)
+      var j = prevStart
+      while (p < end) {
+        val q = nextBit(bits, p, end, set = false)
+        if (nRuns == x0.length) {
+          x0 = grow(x0); x1 = grow(x1); ry = grow(ry); parent = grow(parent)
         }
+        val a0 = p - base
+        val a1 = q - 1 - base
+        x0(nRuns) = a0; x1(nRuns) = a1; ry(nRuns) = y; parent(nRuns) = nRuns
+        // runs above that end left of a0 - 1 touch neither this run nor a later one
+        while (j < rowStart && x1(j) < a0 - 1) j += 1
+        var k = j
+        while (k < rowStart && x0(k) <= a1 + 1) {
+          val ra = root(parent, k)
+          val rb = root(parent, nRuns)
+          if (ra < rb) parent(rb) = ra else parent(ra) = rb
+          k += 1
+        }
+        nRuns += 1
+        p = nextBit(bits, q, end, set = true)
       }
-      word += 1
+      prevStart = rowStart
+      y += 1
     }
-    out.toSeq
+    // second scan: comp(i) = component index of run i, -1 past the cap. It
+    // reuses `parent`: parent(i) <= i and lies in i's component, so it is
+    // already resolved to the component index when run i is reached
+    val comp = parent
+    var nComp = 0
+    var i = 0
+    while (i < nRuns) {
+      comp(i) =
+        if (parent(i) != i) comp(parent(i))
+        else if (nComp < max) { nComp += 1; nComp - 1 }
+        else -1
+      i += 1
+    }
+    val xMin = Array.fill(nComp)(Int.MaxValue)
+    val yMin = Array.fill(nComp)(-1)
+    val xMax = new Array[Int](nComp)
+    val yMax = new Array[Int](nComp)
+    val count = new Array[Int](nComp)
+    i = 0
+    while (i < nRuns) {
+      val c = comp(i)
+      if (c >= 0) {
+        if (yMin(c) < 0) yMin(c) = ry(i)
+        if (x0(i) < xMin(c)) xMin(c) = x0(i)
+        if (x1(i) > xMax(c)) xMax(c) = x1(i)
+        yMax(c) = ry(i)
+        count(c) += x1(i) - x0(i) + 1
+      }
+      i += 1
+    }
+    val pixels = Array.tabulate(nComp)(c => if (withPixels) new Array[Int](count(c)) else Array.emptyIntArray)
+    if (withPixels) {
+      val fill = new Array[Int](nComp)
+      i = 0
+      while (i < nRuns) {
+        val c = comp(i)
+        if (c >= 0) {
+          val px = pixels(c)
+          val f = fill(c)
+          val p0 = ry(i) * w + x0(i)
+          var k = 0
+          while (k <= x1(i) - x0(i)) { px(f + k) = p0 + k; k += 1 }
+          fill(c) = f + k
+        }
+        i += 1
+      }
+    }
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(
+      Array.tabulate(nComp)(c => Component(xMin(c), yMin(c), xMax(c), yMax(c), pixels(c))))
+  }
+
+  private def grow(a: Array[Int]): Array[Int] = java.util.Arrays.copyOf(a, a.length * 2)
+
+  /** Union-find root of run i, halving the path on the way. */
+  private def root(parent: Array[Int], i: Int): Int = {
+    var r = i
+    while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+    r
+  }
+
+  /** The first index in [from, end) whose bit equals `set`, else `end`. */
+  private def nextBit(bits: Array[Long], from: Int, end: Int, set: Boolean): Int = {
+    if (from >= end) return end
+    var wi = from >>> 6
+    var word = (if (set) bits(wi) else ~bits(wi)) & (-1L << (from & 63))
+    while (word == 0L) {
+      wi += 1
+      if ((wi << 6) >= end) return end
+      word = if (set) bits(wi) else ~bits(wi)
+    }
+    math.min(end, (wi << 6) + java.lang.Long.numberOfTrailingZeros(word))
   }
 
   /** A9: IoU of two boolean masks held as bitsets — `mask_iou`

@@ -6,7 +6,9 @@ import graft.schema.{DetectConfig, Params, RRegion, Region, Vocab}
   * payloads. Each returns the stage's region list after its own filters and
   * the shared sort+dedup tail (Order.finalizeBy). Both STD tails, axis-aligned
   * `std` and rotated `stdRotated`, run over one front (threshold → open →
-  * optional dilation → label → min-extent filter) and take a DetectConfig.
+  * optional dilation → label → min-extent filter) and take a DetectConfig;
+  * the labeler is `Bitmap.connectedComponents`, which reads the mask and
+  * never writes it.
   */
 object Detect {
 

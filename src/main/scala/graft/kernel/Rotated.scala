@@ -7,7 +7,8 @@ package graft.kernel
   *    `fit_rbbox` / `cv2.minAreaRect(contour)`
   *    (/root/reference/cnstd/utils/geometry.py:39-41,
   *    /root/reference/cnstd/model/base.py:128-139), implemented as convex
-  *    hull (monotone chain) + rotating calipers;
+  *    hull (monotone chain over each row's extreme pixels) + rotating
+  *    calipers, over the pixels `Bitmap.connectedComponents` collects;
   *  - closed-form round-joint unclip at ratio 2.2: offsetting a convex
   *    polygon by d and refitting the min-area rect grows the rect by d on
   *    every side (the rounded corners are arcs of radius d centered on the
@@ -33,21 +34,57 @@ object Rotated {
   /** (cx, cy, w, h, alpha-degrees in [0, 90)). */
   final case class RBox(cx: Double, cy: Double, w: Double, h: Double, alpha: Double)
 
-  /** Convex hull of component pixels (pixel = y*w + x) via Andrew's monotone
-    * chain, counter-clockwise in screen coords, no duplicate endpoint.
-    * Returns (xs, ys); size 1 or 2 for degenerate (point / collinear) input.
+  /** Convex hull of component pixels (pixel = y*w + x, distinct, in any
+    * order) via Andrew's monotone chain, counter-clockwise in screen coords,
+    * no duplicate endpoint. Returns (xs, ys); size 1 or 2 for degenerate
+    * (point / collinear) input.
+    *
+    * The chain runs over each row's leftmost and rightmost pixel only: a
+    * pixel with set pixels on both sides of it in its row lies on the
+    * segment between them, so it is never a hull vertex, and the chain
+    * already drops collinear points.
     */
   def convexHull(pixels: Array[Int], w: Int): (Array[Double], Array[Double]) = {
-    val pts = pixels.map(p => ((p % w).toLong << 32) | (p / w).toLong & 0xffffffffL)
+    var pMin = Int.MaxValue
+    var pMax = Int.MinValue
+    var i = 0
+    while (i < pixels.length) {
+      if (pixels(i) < pMin) pMin = pixels(i)
+      if (pixels(i) > pMax) pMax = pixels(i)
+      i += 1
+    }
+    val y0 = pMin / w
+    val rows = if (pixels.isEmpty) 0 else pMax / w - y0 + 1
+    val lo = Array.fill(rows)(Int.MaxValue)
+    val hi = new Array[Int](rows)
+    i = 0
+    while (i < pixels.length) {
+      val row = pixels(i) / w - y0
+      val px = pixels(i) - (y0 + row) * w
+      if (px < lo(row)) lo(row) = px
+      if (px > hi(row)) hi(row) = px
+      i += 1
+    }
+    val ext = new Array[Long](2 * rows)
+    var n = 0
+    var row = 0
+    while (row < rows) {
+      if (lo(row) != Int.MaxValue) {
+        val py = (y0 + row).toLong
+        ext(n) = (lo(row).toLong << 32) | py; n += 1
+        if (hi(row) != lo(row)) { ext(n) = (hi(row).toLong << 32) | py; n += 1 }
+      }
+      row += 1
+    }
+    val pts = java.util.Arrays.copyOf(ext, n)
     java.util.Arrays.sort(pts)
-    val n = pts.length
     def x(i: Long): Double = (i >> 32).toDouble
     def y(i: Long): Double = (i & 0xffffffffL).toInt.toDouble
     def cross(o: Long, a: Long, b: Long): Double =
       (x(a) - x(o)) * (y(b) - y(o)) - (y(a) - y(o)) * (x(b) - x(o))
     val hull = new Array[Long](2 * n + 1)
     var k = 0
-    var i = 0
+    i = 0
     while (i < n) { // lower
       while (k >= 2 && cross(hull(k - 2), hull(k - 1), pts(i)) <= 0) k -= 1
       hull(k) = pts(i); k += 1
@@ -281,9 +318,7 @@ object Rotated {
     */
   def pageAngle(bits: Array[Long], w: Int, h: Int,
                 nCt: Int = 20, stdMax: Double = 3.0): Double = {
-    // CCL is destructive on its bitset; the caller's bitmap is still needed
-    // for box extraction afterwards (core.py computes the angle first)
-    val comps = Bitmap.connectedComponents(bits.clone(), w, h, Int.MaxValue, withPixels = true)
+    val comps = Bitmap.connectedComponents(bits, w, h, Int.MaxValue, withPixels = true)
     if (comps.isEmpty) return 0.0
     val fitted = comps.map { c =>
       val (hx, hy) = convexHull(c.pixels, w)
