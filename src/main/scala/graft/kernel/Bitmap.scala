@@ -287,22 +287,6 @@ object Bitmap {
     math.min(end, (wi << 6) + java.lang.Long.numberOfTrailingZeros(word))
   }
 
-  /** A9: IoU of two boolean masks held as bitsets — `mask_iou`
-    * (/root/reference/cnstd/utils/metrics.py:202-234): popcount(and)/popcount(or).
-    */
-  def maskIoU(a: Array[Long], b: Array[Long]): Double = {
-    require(a.length == b.length, "mask shapes must match")
-    var inter = 0L
-    var union = 0L
-    var i = 0
-    while (i < a.length) {
-      inter += java.lang.Long.bitCount(a(i) & b(i))
-      union += java.lang.Long.bitCount(a(i) | b(i))
-      i += 1
-    }
-    if (union == 0) 0.0 else inter.toDouble / union
-  }
-
   /** Mean probability over the inclusive rect [x0..x1] x [y0..y1], clipped to
     * bounds — `box_score` fast path (/root/reference/cnstd/model/core.py:92-99).
     * Frozen spec: mean = (sum of quantized cells) / 255 / count, in double.

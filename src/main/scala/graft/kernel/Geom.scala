@@ -48,13 +48,6 @@ object Geom {
       math.ceil(x1 + d).toInt, math.ceil(y1 + d).toInt)
   }
 
-  /** F9 crop-aspect filter: keep regions at least `ratio` times wider than
-    * tall (/root/reference/scripts/detect_images.py:52-54 keeps crops with
-    * `w >= 2.5 h` — the text-line selector).
-    */
-  def aspectFilter(rs: Seq[Region], ratio: Double = 2.5): Seq[Region] =
-    rs.filter(r => (r.x1 - r.x0).toDouble >= ratio * (r.y1 - r.y0))
-
   /** Clamp a box to [0,w] x [0,h] (/root/reference/cnstd/yolov7/general.py:317-322). */
   def clip(x0: Int, y0: Int, x1: Int, y1: Int, w: Int, h: Int): (Int, Int, Int, Int) =
     (math.min(math.max(x0, 0), w), math.min(math.max(y0, 0), h),

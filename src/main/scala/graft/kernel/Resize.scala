@@ -1,9 +1,9 @@
 package graft.kernel
 
-/** Resize-policy kernels (P1/P2/P3/P4): the reference uses these to adapt
-  * images for the neural stage; here they are pure byte-matrix + coordinate
-  * functions so the policies' SEMANTICS (output dims, scale ratios, padding
-  * offsets — everything that moves coordinates) are reproducible and
+/** The resize policy mm3 runs (P2 type0) and the bilinear resample: the
+  * reference uses these to adapt images for the neural stage; here they are
+  * pure byte-matrix + coordinate functions so the policy's SEMANTICS (output
+  * dims and scale ratios, which move coordinates) are reproducible and
   * fixture-checked. Pixel resampling is bilinear with the standard
   * center-aligned source mapping ((d + 0.5) / scale - 0.5), the same
   * convention as cv2.INTER_LINEAR / torchvision BILINEAR.
@@ -44,36 +44,6 @@ object Resize {
     Img(out, nw, nh)
   }
 
-  /** P1: aspect-preserving resize into (targetH, targetW) with zero padding
-    * (/root/reference/cnstd/transforms/resize.py:29-69): scale the image to
-    * fit, pad the remainder bottom/right — or split ceil-first when
-    * `symmetricPad` (resize.py:64-67). Returns the padded image plus the
-    * (top, left) content offset, which is what downstream coordinate math
-    * needs.
-    */
-  def aspectPad(img: Img, targetH: Int, targetW: Int, symmetricPad: Boolean = false,
-                pad: Byte = 0): (Img, Int, Int) = {
-    val targetRatio = targetH.toDouble / targetW
-    val actualRatio = img.h.toDouble / img.w
-    val (th, tw) =
-      if (targetRatio == actualRatio) (targetH, targetW)
-      else if (actualRatio > targetRatio) (targetH, (targetH / actualRatio).toInt)
-      else ((targetW * actualRatio).toInt, targetW)
-    val scaled = bilinear(img, tw, th)
-    val padW = targetW - tw
-    val padH = targetH - th
-    val (left, top) =
-      if (symmetricPad) (math.ceil(padW / 2.0).toInt, math.ceil(padH / 2.0).toInt)
-      else (0, 0)
-    val out = Array.fill[Byte](targetW * targetH)(pad)
-    var y = 0
-    while (y < th) {
-      System.arraycopy(scaled.cells, y * tw, out, (y + top) * targetW + left, tw)
-      y += 1
-    }
-    (Img(out, targetW, targetH), top, left)
-  }
-
   /** P2 type0: cap ('max') or raise ('min') the limiting side to
     * `limitSideLen`, round both dims to /32 (min 32)
     * (/root/reference/cnstd/ppocr/img_operators.py:232-280). Returns
@@ -90,58 +60,4 @@ object Resize {
     val rw = math.max(math.rint((w * ratio).toInt / 32.0).toInt * 32, 32)
     (rh, rw, rh / h.toDouble, rw / w.toDouble)
   }
-
-  /** P2 type1: fixed target shape (img_operators.py:223-231). */
-  def detResizeType1(h: Int, w: Int, targetH: Int, targetW: Int): (Int, Int, Double, Double) =
-    (targetH, targetW, targetH.toDouble / h, targetW.toDouble / w)
-
-  /** P2 type2: long side to `resizeLong`, both dims ceil-rounded to /128
-    * (img_operators.py:282-302).
-    */
-  def detResizeType2(h: Int, w: Int, resizeLong: Int): (Int, Int, Double, Double) = {
-    val ratio = resizeLong.toDouble / math.max(h, w)
-    val rh0 = (h * ratio).toInt
-    val rw0 = (w * ratio).toInt
-    val rh = (rh0 + 127) / 128 * 128
-    val rw = (rw0 + 127) / 128 * 128
-    (rh, rw, rh / h.toDouble, rw / w.toDouble)
-  }
-
-  /** P3: YOLO letterbox (/root/reference/cnstd/yolov7/datasets.py:1003-1033):
-    * scale to fit (optionally never up), pad to the stride-multiple minimum
-    * rectangle with a constant border, split evenly with the round(+-0.1)
-    * tie-break. Returns (image, ratio, (dw, dh)) like the reference.
-    */
-  def letterbox(img: Img, newShape: (Int, Int) = (640, 640), auto: Boolean = true,
-                scaleup: Boolean = true, stride: Int = 32,
-                pad: Byte = 114.toByte): (Img, (Double, Double), (Double, Double)) = {
-    val (nh, nw) = newShape
-    var r = math.min(nh.toDouble / img.h, nw.toDouble / img.w)
-    if (!scaleup) r = math.min(r, 1.0)
-    val unpadW = math.rint(img.w * r).toInt
-    val unpadH = math.rint(img.h * r).toInt
-    var dw = (nw - unpadW).toDouble
-    var dh = (nh - unpadH).toDouble
-    if (auto) { dw = dw % stride; dh = dh % stride }
-    dw /= 2; dh /= 2
-    val scaled = bilinear(img, unpadW, unpadH)
-    val top = math.rint(dh - 0.1).toInt
-    val bottom = math.rint(dh + 0.1).toInt
-    val left = math.rint(dw - 0.1).toInt
-    val right = math.rint(dw + 0.1).toInt
-    val ow = unpadW + left + right
-    val oh = unpadH + top + bottom
-    val out = Array.fill[Byte](ow * oh)(pad)
-    var y = 0
-    while (y < unpadH) {
-      System.arraycopy(scaled.cells, y * unpadW, out, (y + top) * ow + left, unpadW)
-      y += 1
-    }
-    (Img(out, ow, oh), (r, r), (dw, dh))
-  }
-
-  /** P4: round to the nearest multiple of 32, min 32
-    * (/root/reference/cnstd/cn_std.py:204-211 `calibrate_resized_shape`).
-    */
-  def calibrate32(x: Int): Int = math.max(32, math.rint(x / 32.0).toInt * 32)
 }

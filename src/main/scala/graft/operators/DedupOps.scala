@@ -78,12 +78,11 @@ object DedupOps {
     // through an ObjectHashAggregate + exchange — value-identical because
     // min_h xxhash64(i, h) is order- and duplicate-invariant, and the
     // shingle xxhash is taken over the same UTF-8 byte windows substr
-    // produced (NativeTextHashSpec pins both). Materialized ONCE: the band
-    // self-join and the est/verify joins each re-planned the whole pipeline
-    // before (a broadcast build side never reuses the probe side's
-    // exchange — the mm7/dd4 lesson). The shingle hashes keep duplicates:
-    // the min-aggregation and the array_distinct below are themselves
-    // dedupes, and a `.distinct()` would only add a (doc_id, h) exchange.
+    // produced (NativeTextHashSpec pins both). Materialized ONCE, for the
+    // band join (Candidates) and the est/verify joins alike. The shingle
+    // hashes keep duplicates: the min-aggregation and the array_distinct
+    // below are themselves dedupes, and a `.distinct()` would only add a
+    // (doc_id, h) exchange.
     val shingles = Native.shingleHashes(col("text"))
     val perDoc = Par.spread(
         d.where(length(col("text")) >= 3).select(col("doc_id"), col("text")))
@@ -93,16 +92,11 @@ object DedupOps {
         array_distinct(col("sh")).as("hs"))
       .localCheckpoint()
     val sig = perDoc.select("doc_id", "sig")
-    val bands = sig.select(col("doc_id"),
-      posexplode(array((0 until NumBands).map { b =>
-        xxhash64((b * RowsPerBand until (b + 1) * RowsPerBand).map(i => col("sig")(i)): _*)
-      }: _*)).as(Seq("band", "bh")))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val bands = (0 until NumBands).map { b =>
+      struct(lit(b), xxhash64((b * RowsPerBand until (b + 1) * RowsPerBand).map(i => col("sig")(i)): _*))
+    }
+    val cand = Candidates.pairs(perDoc, "doc_id", bands)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     // estimated similarity from signature agreement (native positional
     // count — the zip_with/filter lambda walk ran interpreted per pair, on
     // the one or two AQE-coalesced post-shuffle tasks)
@@ -193,21 +187,10 @@ object DedupOps {
     * the SET (dd7's connected components) skip the global range sort.
     */
   private[operators] def simHashPairsUnsorted(d: DataFrame): DataFrame = {
-    // materialize the (doc_id, simhash) frame ONCE: the band self-join's
-    // broadcast build side cannot reuse the probe side's exchange (it is a
-    // BroadcastExchange over an identical subtree, not a shuffle), so the
-    // whole scan + spread + signature pipeline would run TWICE per query
-    // (verified in the dd4 physical plan). The checkpoint is one signature
-    // row per doc.
     val sig = simHashSignatures(d).localCheckpoint()
-    val chunks = sig.select(col("doc_id"), col("simhash"),
-      explode(array(simHashKeys(col("simhash")): _*)).as("k"))
-    chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
-      .distinct()
+    Candidates.pairs(sig, "doc_id", simHashKeys(col("simhash")), "simhash")
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+        bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))).as("hamming"))
       .where(col("hamming") <= MaxHamming)
   }
 

@@ -41,10 +41,8 @@ object ExtractOps {
   /** Full pipeline, flattened to one row per output span (deterministic
     * order).
     */
-  def extractSpans(spark: SparkSession, dir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    flatSpans(Extract.runGenerated(nDocsFor(dir)).toDF()).orderBy("doc_id", "span_order")
-  }
+  def extractSpans(spark: SparkSession, dir: String): DataFrame =
+    configured(spark, dir, graft.schema.DetectConfig.Default)
 
   /** The reference-default flow (`rotated_bbox=True`, cn_std.py:49) through
     * the distributed pipeline: rotated min-area-rect regions rendered as

@@ -376,8 +376,7 @@ object MultimodalOps {
     * classes) and the fourth is a baseline-JPEG round trip of the same scene
     * — per-block requantization moves decoded pixels slightly, so its hash
     * lands a few bits off and exact grouping structurally misses it. Banding
-    * (one explode into [[HammingBands]] compact band keys, bucket self-join
-    * on the high-cardinality key, `ref_a < ref_b`, distinct, exact
+    * ([[HammingBands]] compact band keys through [[Candidates.pairs]], exact
     * `bit_count(xor)` verify) recovers every pair at Hamming ≤
     * [[MaxImageHamming]] — EXACTLY, by the pigeonhole argument above, which
     * is what lets DuckDB value-check the output as a brute-force all-pairs
@@ -386,25 +385,14 @@ object MultimodalOps {
     * single-scene corpus hot-keys like dd1 and gets the same salting answer).
     */
   def imagePhashBandedPairs(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{array, bit_count, explode, shiftrightunsigned}
-    // materialize the decoded hashes ONCE: the band self-join's broadcast
-    // build side re-ran the whole synth+decode+phash pipeline before (a
-    // BroadcastExchange over an identical subtree is never reused against
-    // the probe side — verified in the round-6 before-plan: two full
-    // Scan->Exchange->MapPartitions chains)
+    import org.apache.spark.sql.functions.{bit_count, shiftrightunsigned}
     val rows = decoded(spark, dir, PhashBitsSource, Par.spread[String])
       .localCheckpoint()
     val keys = (0 until HammingBands).map(b =>
-      (lit(b.toLong * 256L)
-        + shiftrightunsigned(col("phash_bits"), b * 8).bitwiseAND(lit(0xffL))).as(s"k$b"))
-    val chunks = rows.select(col("media_ref"), col("phash_bits"),
-      explode(array(keys: _*)).as("k"))
-    chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.k") === col("b.k") && col("a.media_ref") < col("b.media_ref"))
-      .select(col("a.media_ref").as("ref_a"), col("b.media_ref").as("ref_b"),
-        bit_count(col("a.phash_bits").bitwiseXOR(col("b.phash_bits"))).cast("long").as("hamming"))
-      .distinct()
+      lit(b.toLong * 256L) + shiftrightunsigned(col("phash_bits"), b * 8).bitwiseAND(lit(0xffL)))
+    Candidates.pairs(rows, "media_ref", keys, "phash_bits")
+      .select(col("id_a").as("ref_a"), col("id_b").as("ref_b"),
+        bit_count(col("phash_bits_a").bitwiseXOR(col("phash_bits_b"))).cast("long").as("hamming"))
       .where(col("hamming") <= MaxImageHamming)
       .orderBy("ref_a", "ref_b")
   }

@@ -350,7 +350,7 @@ object SimilarityOps {
     val centroids = trainCentroids(base)
     val cents = centroids.map(c => l2norm(c))
     val centDf = cents.zipWithIndex.map { case (c, k) => (k, c) }.toDF("cell", "cvec")
-    // materialize once: three consumers (both self-join sides + the group
+    // materialize once: three consumers (both cell-join sides + the group
     // rollup) would otherwise re-run the scoring mapPartitions each —
     // localCheckpoint is the repo's iterative-reuse pattern (DedupOps.propagate
     // scaladoc covers the cluster-deployment caveat). Bench note: sim5's
@@ -365,11 +365,9 @@ object SimilarityOps {
     // the eager checkpoint above was base's last consumer (review fix:
     // unpersisting before it forced a full recompute off the cache)
     base.unpersist(blocking = false)
-    val a = assigned.select(col("cell"), col("vec_id").as("ia"), col("vec").as("va"))
-    val b = assigned.select(col("cell"), col("vec_id").as("ib"), col("vec").as("vb"))
-    val pairs = a.join(b, Seq("cell"))
-      .where(col("ia") < col("ib") && dot(col("va"), col("vb")) >= SemThreshold)
-      .select(col("cell"), col("ia").as("doc_a"), col("ib").as("doc_b"))
+    val pairs = Candidates.pairs(assigned, "vec_id", Seq(col("cell")), "vec")
+      .where(dot(col("vec_a"), col("vec_b")) >= SemThreshold)
+      .select(col("key").as("cell"), col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     // semantic-dup groups: the pair graph is WITHIN-CELL by construction
     // (candidates share a cell), so components never span cells. Shuffling
     // the pairs by cell puts every component in one pair partition, where
@@ -513,19 +511,14 @@ object SimilarityOps {
     // CodegenFallback HOF — nPlanes interpreted array casts per row per join
     // side, measured 3.7s; CollapseProject keeps the split because a
     // non-cheap expr with many references must not be duplicated)
-    // materialize the bucketed frame ONCE: the self-join's broadcast build
-    // side is a BroadcastExchange over an identical subtree — never reused
-    // against the probe side — so the interpreted double-cast + nPlanes
-    // plane dots ran twice per query before (the dd4/mm7 lesson)
     val b = e
       .select(col("vec_id"), col("embedding"),
         transform(col("embedding"), x => x.cast("double")).as("vd"))
       .select(col("vec_id"), col("embedding"), srpBucket(0, nPlanes).as("bucket"))
       .localCheckpoint()
-    b.as("a").join(b.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        Native.round4(Native.cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
+    Candidates.pairs(b, "vec_id", Seq(col("bucket")), "embedding")
+      .select(col("id_a").as("vec_a"), col("id_b").as("vec_b"),
+        Native.round4(Native.cosine(col("embedding_a"), col("embedding_b"))).as("cos"))
       .where(col("cos") >= threshold)
       .orderBy("vec_a", "vec_b")
   }
@@ -538,11 +531,12 @@ object SimilarityOps {
     * near-dups (cos >= 0.99 → ~0.997 at the frozen 4x6 instance) survive
     * while the candidate volume stays sum-of-bucket-sizes^2 per table.
     *
-    * Plan shape (scale path): ONE pass computes all table buckets, rows
-    * explode to (table, bucket) keys — one equi-join shuffle keyed on both —
-    * then pair dedup and a candidates-only exact verify via two co-keyed
-    * joins back to the embeddings. Never all-pairs; per-table occupancy is
-    * governed by the same `nPlanesFor` rule as the single-table variant.
+    * Plan shape (scale path): ONE pass computes all table buckets, the
+    * (table, bucket) keys meet in [[Candidates.pairs]] (one equi-join
+    * shuffle, one pair dedup), then a candidates-only exact verify runs via
+    * two co-keyed joins back to the embeddings. Never all-pairs; per-table
+    * occupancy is governed by the same `nPlanesFor` rule as the single-table
+    * variant.
     */
   def srpNearDupBanded(spark: SparkSession, dir: String, threshold: Double = 0.35,
                        nTables: Int = SrpBandTables, nPlanes: Int = SrpBandPlanes): DataFrame =
@@ -551,20 +545,20 @@ object SimilarityOps {
   private[graft] def srpNearDupBandedFrom(e: DataFrame, threshold: Double,
                                           nTables: Int, nPlanes: Int): DataFrame = {
     require(nPlanes >= 1 && nPlanes <= 62, s"nPlanes $nPlanes outside [1, 62]")
-    // checkpoint BEFORE the explode (sim3's reasoning): both join sides then
-    // re-derive the (table, bucket) keys from the materialized per-vector
-    // frame instead of re-running the nTables x nPlanes plane dots
-    val keyed = e
+    require(nTables >= 1 && java.lang.Long.numberOfLeadingZeros(nTables - 1L) >= nPlanes,
+      s"$nTables tables of $nPlanes planes overflow the packed key")
+    // the per-vector buckets are materialized before the join, so its keys
+    // (table t's bucket packed as t << nPlanes | bucket) never re-run the
+    // nTables x nPlanes plane dots
+    val bucketed = e
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("vd"))
       .select(col("vec_id"),
         array((0 until nTables).map(t => srpBucket(t * nPlanes, nPlanes)): _*).as("bks"))
       .localCheckpoint()
-      .select(col("vec_id"), posexplode(col("bks")).as(Seq("tbl", "bucket")))
-    val cand = keyed.as("a").join(keyed.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .dropDuplicates("vec_a", "vec_b")
+    val keys = (0 until nTables).map(t =>
+      shiftleft(lit(t.toLong), nPlanes).bitwiseOR(col("bks")(t)))
+    val cand = Candidates.pairs(bucketed, "vec_id", keys)
+      .select(col("id_a").as("vec_a"), col("id_b").as("vec_b"))
     val vecs = e.select(col("vec_id"), col("embedding"))
     cand
       .join(vecs.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.kernel.Resize.Img
 import graft.kernel.Rotated.RBox
 
-/** Fixtures for the resize policies (P1/P2/P3/P4), crop extraction
-  * (P10/P11), 4-point canonicalization (SO1), and mask IoU (A9).
+/** Fixtures for the P2 type0 resize policy, crop extraction (P10/P11) and
+  * 4-point canonicalization (SO1).
   */
 class CropResizeSpec extends AnyFunSuite {
 
@@ -26,45 +26,6 @@ class CropResizeSpec extends AnyFunSuite {
     // resize_long: ratio from the long side regardless
     val (h3, w3, _, _) = Resize.detResizeType0(100, 400, 200, "resize_long")
     assert((h3, w3) == ((64, 192))) // 50→round(1.5625*32)... int(100*0.5)=50→round(50/32)=2→64; int(400*0.5)=200→round(6.25)=6→192
-  }
-
-  test("P2 type1/type2: fixed shape and /128 long-side policy") {
-    assert(Resize.detResizeType1(100, 200, 640, 640) == ((640, 640, 6.4, 3.2)))
-    // type2: long side 960: h=200,w=100 → ratio 4.8 → (960, 480) → /128 ceil
-    // → (1024, 512): 960 is NOT a multiple of 128 (7.5x), so it rounds UP
-    val (h, w, _, _) = Resize.detResizeType2(200, 100, 960)
-    assert((h, w) == ((1024, 512)))
-  }
-
-  test("P4 calibrate32 rounds to the nearest /32 with floor 32") {
-    assert(Resize.calibrate32(1) == 32)
-    assert(Resize.calibrate32(47) == 32)
-    assert(Resize.calibrate32(48) == 64)
-    assert(Resize.calibrate32(640) == 640)
-  }
-
-  test("P1 aspect-preserving pad: content lands at the declared offset") {
-    val img = gradient(40, 20) // ratio 0.5
-    val (padded, top, left) = Resize.aspectPad(img, 32, 32) // target ratio 1.0 > 0.5 → width-bound
-    assert(padded.w == 32 && padded.h == 32)
-    assert((top, left) == ((0, 0)))
-    // scaled content is 32x16; rows 16.. are pad(0)
-    assert((16 until 32).forall(y => (0 until 32).forall(x => padded.cells(y * 32 + x) == 0)))
-    val (sym, st, sl) = Resize.aspectPad(img, 32, 32, symmetricPad = true)
-    assert(st == 8 && sl == 0) // ceil(16/2)
-    assert((0 until 8).forall(y => (0 until 32).forall(x => sym.cells(y * 32 + x) == 0)))
-  }
-
-  test("P3 letterbox: ratio, padding split, stride-multiple minimum rect") {
-    val img = gradient(200, 100) // (h=100, w=200)
-    val (out, ratio, (dw, dh)) = Resize.letterbox(img, (640, 640))
-    assert(ratio == ((3.2, 3.2)))
-    // unpad (640, 320); dh = 320 mod 32 = 0 → no vertical pad under auto
-    assert((dw, dh) == ((0.0, 0.0)))
-    assert(out.w == 640 && out.h == 320)
-    // no-scaleup only caps UPscaling: a small image keeps ratio 1.0
-    val (_, r2, _) = Resize.letterbox(gradient(300, 300), (640, 640), scaleup = false)
-    assert(r2 == ((1.0, 1.0)))
   }
 
   test("P10 straight crop equals the manual slice; bounds are clamped") {
@@ -192,19 +153,5 @@ class CropResizeSpec extends AnyFunSuite {
     for (y <- 14 to 18; x <- 14 to 18)
       assert(math.abs((back.cells(y * 33 + x) & 0xff) - (img.cells(y * 33 + x) & 0xff)) <= 2,
         s"($x,$y)")
-  }
-
-  test("A9 mask IoU: identity 1, disjoint 0, half-overlap hand value") {
-    def rectBits(w: Int, h: Int, x0: Int, y0: Int, x1: Int, y1: Int): Array[Long] = {
-      val cells = new Array[Byte](w * h)
-      for (y <- y0 until y1; x <- x0 until x1) cells(y * w + x) = 255.toByte
-      Bitmap.thresholdBits(cells, 0, w * h, 0.3)
-    }
-    val a = rectBits(16, 16, 0, 0, 8, 8)
-    val b = rectBits(16, 16, 4, 0, 12, 8)
-    assert(Bitmap.maskIoU(a, a) == 1.0)
-    assert(Bitmap.maskIoU(a, rectBits(16, 16, 8, 8, 16, 16)) == 0.0)
-    // inter 32px, union 96px
-    assert(math.abs(Bitmap.maskIoU(a, b) - 32.0 / 96.0) < 1e-12)
   }
 }

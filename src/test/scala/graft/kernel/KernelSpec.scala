@@ -23,12 +23,6 @@ class GeomSpec extends AnyFunSuite {
     assert((x0, y0, x1, y1) == (3, 3, 37, 32))
   }
 
-  test("aspect filter keeps only line-like regions (w >= 2.5h)") {
-    val line = graft.schema.Region("t", 0, 0, 25, 10, 1.0)   // 2.5x exactly → kept
-    val block = graft.schema.Region("t", 0, 0, 24, 10, 1.0)  // below → dropped
-    assert(Geom.aspectFilter(Seq(line, block)) == Seq(line))
-  }
-
   test("clip clamps to image bounds") {
     assert(Geom.clip(-5, -5, 70, 70, 64, 64) == (0, 0, 64, 64))
   }

@@ -111,9 +111,7 @@ class OperatorsSpec extends SparkSpec {
     val keys = df.select(col("doc_id"), col("simhash"),
       explode(array(DedupOps.simHashKeys(col("simhash")): _*)).as("k"))
     // completeness: every planted pair (hamming <= 3 by construction) shares a key
-    val cand = keys.as("a").join(keys.as("b"),
-        col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id"), col("b.doc_id")).distinct()
+    val cand = Candidates.pairs(df, "doc_id", DedupOps.simHashKeys(col("simhash")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val sigOf = all.toMap
     planted.indices.foreach { i =>

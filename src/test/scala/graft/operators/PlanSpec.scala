@@ -166,11 +166,56 @@ class PlanSpec extends SparkSpec {
   }
 
   test("phash banded pairs: bucket equi-join on the band key, never all-pairs") {
-    val p = plan(MultimodalOps.imagePhashBandedPairs(spark, sf))
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"mm7 degenerated to all-pairs:\n${p.take(2500)}")
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin")
-      || p.contains("BroadcastHashJoin"), s"mm7 lost the band equi-join:\n${p.take(2500)}")
+    // covers mm7 and the five other banded near-dup queries: each forms its
+    // candidates in one equi-join over its materialized frame. The join may
+    // run inside an eager checkpoint (sim5's components), so every plan the
+    // query executes is searched, not just the final one.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // every node under `p`, reading through a reused exchange (a self-join's
+    // two sides may share one shuffle) into the exchange it reuses
+    def nodes(p: SparkPlan): Seq[SparkPlan] = aqe.collect(p) { case n => n }.flatMap {
+      case r: ReusedExchangeExec => r +: nodes(r.child)
+      case n => Seq(n)
+    }
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executed.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try Seq("dd3_dedup_minhash", "dd4_dedup_simhash", "mm7_phash_banded",
+        "sim3_srp_lsh", "sim4_srp_banded", "sim5_semdedup").foreach { name =>
+      executed.clear()
+      val df = graft.SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      // listener events arrive in order, so the final collect's comes last
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!executed.asScala.exists(_ eq df.queryExecution) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val plans = executed.asScala.toSeq.map(_.executedPlan)
+      assert(plans.exists(_ eq df.queryExecution.executedPlan), s"$name: final plan never reported")
+      val p = plans.map(_.toString).mkString("\n")
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$name degenerated to all-pairs:\n${p.take(2500)}")
+      // Candidates.pairs joins on its one `key` column
+      val cand = plans.flatMap(aqe.collect(_) {
+        case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "key")) => j
+      })
+      assert(cand.size == 1, s"$name has ${cand.size} candidate joins:\n${p.take(2500)}")
+      cand.head.children.foreach { side =>
+        assert(!nodes(side).exists(_.isInstanceOf[FileSourceScanExec]),
+          s"$name re-scans its input under the candidate join:\n$side")
+        assert(nodes(side).exists(_.isInstanceOf[RDDScanExec]),
+          s"$name's candidate join does not read the materialized frame:\n$side")
+      }
+    }
+    finally spark.listenerManager.unregister(listener)
   }
 
   test("bloom decontamination: shuffled exact verify, eval grams never broadcast") {

@@ -29,6 +29,10 @@ class StreamingExtractSpec extends SparkSpec {
         GenData.doc(seed, i), ref => GenData.payload(seed, ref), cfg)
       assert(out(want.doc_id) == want.spans, s"doc $i diverges under streaming cfg")
     }
+    // the oracle above mirrors the stream's own per-doc code, so also hold the
+    // stream to the batch plan under the same config
+    val (bd, bm) = Extract.generate(60, seed)
+    assert(out == Extract.run(bd, bm, cfg).collect().map(d => d.doc_id -> d.spans).toMap)
     // the rotated crop digests actually flow through the stream
     assert(out.values.flatten.exists(sp => sp.kind == "std_text" && sp.text.contains(";crop=")))
   }
